@@ -32,6 +32,10 @@ from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.operators.text import tokens
 
+# minhash_dedup_pairs materializes its shingle frame only above this
+# input-size estimate (see the gate rationale there).
+SHINGLE_BARRIER_MIN_BYTES = 1 << 30
+
 
 def shingles_of_tokens(toks: Column, n: int = 3, hashed: bool = False) -> Column:
     """Distinct word n-gram shingles from a token-array column.
@@ -508,7 +512,7 @@ def minhash_dedup_pairs(
     - SIZE-GATED shingle barrier: the signature-frame barrier (id +
       n_hashes longs — cheap, removes the double min-aggregate) is
       unconditional; the shingle-frame barrier only fires above an
-      input-size threshold (default 1 GiB, env-overridable), where
+      input-size threshold (SHINGLE_BARRIER_MIN_BYTES, 1 GiB), where
       re-tokenizing the corpus twice more for the verify sides
       outweighs one materialization. Below it the shingle frame stays
       lazy (3 tokenize passes, no eager job — measured 1.65 -> 1.30 s
@@ -516,8 +520,6 @@ def minhash_dedup_pairs(
       are a fraction of what the r13 plan shuffled four times;
       executor MEMORY_AND_DISK spills gracefully
       (operators/iteration.py)."""
-    import os
-
     from batchprocessingetl_spark.operators.iteration import (
         barrier,
         input_size_estimate,
@@ -530,11 +532,9 @@ def minhash_dedup_pairs(
     # 1.30 s back-to-back in r15) but WINS once the corpus is large
     # enough that re-tokenizing it for the two verify-join sides
     # dominates the materialization. Gate on the optimizer's input
-    # size estimate (driver-side, no job); threshold default 1 GiB,
-    # env-overridable. Results are gate-independent: both branches
-    # compute the same hashed-shingle frame.
-    gate = int(os.environ.get("SPARK_GRAFT_SHINGLE_BARRIER_MIN_BYTES", str(1 << 30)))
-    if input_size_estimate(df) > gate:
+    # size estimate (driver-side, no job). Results are gate-independent:
+    # both branches compute the same hashed-shingle frame.
+    if input_size_estimate(df) > SHINGLE_BARRIER_MIN_BYTES:
         sh = barrier(sh)
     sigs = barrier(
         minhash_signatures(sh, "id", None, n_hashes, n, pre_shingled="sh")

@@ -16,6 +16,8 @@ whole-stage codegen; cost is one corpus scan + shuffles keyed on
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -25,28 +27,25 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def bm25_term_scores(
+def _bm25_scores(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    query_terms: tuple[str, ...],
-    k1: float = BM25_K1,
-    b: float = BM25_B,
+    term_filter: Callable[[DataFrame], DataFrame],
+    k1: float,
+    b: float,
 ) -> DataFrame:
-    """Per-(document, term) BM25 partial scores for ``query_terms``.
+    """The one BM25 scoring core behind both public entry points.
 
     Lucene-shaped BM25: idf = ln((N - df + 0.5)/(df + 0.5) + 1) (always
     positive), tf saturation tf*(k1+1)/(tf + k1*(1 - b + b*dl/avgdl)).
     ``df`` counts documents containing the term across the FULL corpus;
     ``dl`` is the document token count; ``avgdl`` the corpus mean.
+    ``term_filter`` narrows the exploded (id, dl, term) rows to the
+    scored terms before the tf aggregate — the only step in which the
+    callers differ.
 
-    Returns (id, term, tf, dl, score) — one row per matching pair.
-    Callers compose the final ranking; summing a FIXED small term set
-    in deterministic order (see workload q77) keeps results bit-stable
-    across engines, where a float SUM aggregate would be
-    order-dependent."""
-    if not query_terms:
-        raise ValueError("query_terms must be non-empty")
+    Returns (id, term, tf, dl, score) — one row per matching pair."""
     # r15 two-pass shape (guide §1.2/§2.4, VERDICT r14 #3): the old
     # plan tokenized the corpus THREE times — tf pass, df recompute of
     # the whole tf subtree (Catalyst copies the subtree per consumer
@@ -80,8 +79,7 @@ def bm25_term_scores(
         F.sum("__dl").alias("sum_dl"),
     )
     tf = (
-        base.select("id", "dl", F.explode("__toks").alias("term"))
-        .filter(F.col("term").isin(*query_terms))
+        term_filter(base.select("id", "dl", F.explode("__toks").alias("term")))
         .groupBy("id", "dl", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
     )
@@ -96,6 +94,28 @@ def bm25_term_scores(
         .crossJoin(F.broadcast(stats))
         .select("id", "term", "tf", "dl", (idf * sat).alias("score"))
     )
+
+
+def bm25_term_scores(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    query_terms: tuple[str, ...],
+    k1: float = BM25_K1,
+    b: float = BM25_B,
+) -> DataFrame:
+    """Per-(document, term) BM25 partial scores for ``query_terms``
+    (formula in :func:`_bm25_scores`).
+
+    Returns (id, term, tf, dl, score) — one row per matching pair.
+    Callers compose the final ranking; summing a FIXED small term set
+    in deterministic order (see workload q77) keeps results bit-stable
+    across engines, where a float SUM aggregate would be
+    order-dependent."""
+    if not query_terms:
+        raise ValueError("query_terms must be non-empty")
+    in_query = F.col("term").isin(*query_terms)
+    return _bm25_scores(docs, id_col, text_col, lambda t: t.filter(in_query), k1, b)
 
 
 def bm25_topk_join(
@@ -136,38 +156,9 @@ def bm25_topk_join(
         F.col(qid_col).alias("qid"), F.explode(terms_col).alias("term")
     ).distinct()
     uniq_terms = qterms.select("term").distinct()
-    # r15 two-pass shape — see bm25_term_scores for the full rationale
-    # (tokenize-free stats scan; df join-back kept as the skew-free
-    # mechanism). Same plan surgery, broadcast-semi-join term filter.
-    base = docs.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("__toks")
-    ).select("id", F.size("__toks").cast("double").alias("dl"), "__toks")
-    stats = docs.select(
-        # NULL text -> NULL dl (size(NULL array) is NULL, which the old
-        # sum skipped), so regexp_count's NULL passes through unchanged
-        F.regexp_count(F.col(text_col), F.lit(r"\S+"))
-        .cast("double")
-        .alias("__dl")
-    ).agg(
-        F.count(F.lit(1)).cast("double").alias("n_docs"),
-        F.sum("__dl").alias("sum_dl"),
-    )
-    tf = (
-        base.select("id", "dl", F.explode("__toks").alias("term"))
-        .join(F.broadcast(uniq_terms), "term", "left_semi")
-        .groupBy("id", "dl", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).cast("double").alias("df"))
-    idf = F.log((F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    avgdl = F.col("sum_dl") / F.col("n_docs")
-    sat = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / avgdl)
-    )
-    scored = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(stats))
-        .select("id", "term", (idf * sat).alias("score"))
+    scored = _bm25_scores(
+        docs, id_col, text_col,
+        lambda t: t.join(F.broadcast(uniq_terms), "term", "left_semi"), k1, b,
     )
     per_pair = (
         scored.join(F.broadcast(qterms), "term")

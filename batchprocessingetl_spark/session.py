@@ -16,6 +16,14 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
 
+# Parquet codec for EPHEMERAL work-dir stores: these intermediates are
+# written once and re-read several times within the SAME query (q281
+# reads its shingle store every round), then discarded — so read-path
+# speed matters and storage ratio does not. snappy decodes faster than
+# zstd; the session-wide zstd default is kept for durable sinks, where
+# written bytes dominate at scale.
+WORK_CODEC = "snappy"
+
 
 def get_spark(
     app_name: str = "batchprocessingetl-spark",
@@ -55,28 +63,13 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # r15: REVERTED to the Spark default (VERDICT r14 #2). The r14
-        # flip to false claimed runtime SMJ->SHJ conversions on
-        # q94/q147/q41/q346; post-execution AQE final plans
-        # (plans/r15/*_aqe_final.txt) show q147/q41/q94 still execute
-        # SortMergeJoin with the flag off — only q346 converts — and
-        # both the interleaved full-bench A/B (tools/env_ab.py, median
-        # B/A 1.019 over 3+3 runs) and a focused 4-session q346
-        # interleave measured no effect. A config that converts almost
-        # nothing and measures flat does not justify carrying the
-        # shuffled-hash OOM caveat (guide §3.1) to 100 TB. Still
-        # env-overridable for future A/Bs.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        # r14 (guide §6): zstd parquet writes — measured at parity with
-        # snappy locally (q281 store write 2.852s vs 2.855s) and a
+        # zstd parquet writes for durable sinks — measured at parity
+        # with snappy locally (q281 store write 2.852s vs 2.855s) and a
         # markedly better ratio at scale, where written bytes dominate.
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("SPARK_GRAFT_PARQUET_CODEC", "zstd"),
-        )
+        # spark.sql.join.preferSortMergeJoin stays at Spark's default
+        # (true); the interleaved A/B that retired the false setting is
+        # in docs/BENCH_NOTES.md.
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -118,14 +111,3 @@ def work_dir(spark: SparkSession, component: str) -> str:
     return os.path.join(
         root, f"bpetl_{component}_{spark.sparkContext.applicationId}"
     )
-
-
-def work_codec() -> str:
-    """Parquet codec for EPHEMERAL work-dir stores (r15, VERDICT r14
-    #4): these intermediates are written once and re-read several
-    times within the SAME query (q281 reads its shingle store every
-    round), then discarded — so read-path speed matters and storage
-    ratio does not. snappy decodes faster than zstd; the session-wide
-    zstd default (session.py) is kept for durable sinks, where written
-    bytes dominate at scale. Env-overridable for A/B."""
-    return os.environ.get("SPARK_GRAFT_WORK_CODEC", "snappy")

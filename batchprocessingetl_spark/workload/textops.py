@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.catalog import load_table
-from batchprocessingetl_spark.session import work_codec, work_dir
+from batchprocessingetl_spark.session import WORK_CODEC, work_dir
 from batchprocessingetl_spark.operators import text as T_ops
 
 
@@ -456,7 +456,6 @@ def q124_incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs with >= 1 batch member — pinning the incremental protocol's
     defining invariant (incremental == full recompute on the batch's
     slice) AND the band join's recall, same as q37."""
-    import os
     import shutil
 
     from batchprocessingetl_spark.operators.dedup import (
@@ -474,7 +473,7 @@ def q124_incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(work, ignore_errors=True)
     band_signatures(
         minhash_signatures(store_docs, "doc_id", "text", n_hashes=32, n=3), bands=16
-    ).write.option("compression", work_codec()).parquet(work)
+    ).write.option("compression", WORK_CODEC).parquet(work)
     store_bands = spark.read.parquet(work)
 
     batch_bands = band_signatures(
@@ -3646,23 +3645,6 @@ EXTRA_ORACLE["q274_kneser_ney"] = _ORACLE_ALL["q274_kneser_ney"]
 SETCOVER_K = 6
 
 
-def _covered_lazy_ok(docs: DataFrame) -> bool:
-    """True when the set-cover covered-shingle frame should stay a
-    LAZY union (no per-round barrier): each round then rebuilds its
-    anti-join broadcast from <= k-1 doc-filtered scans of the shingle
-    frame/store — measurably cheaper than k eager checkpoint jobs at
-    bench scale, but O(k^2) corpus-frame scans at cluster scale, where
-    the barrier's O(k) wins. Gated on the docs input-size estimate
-    (driver-side, no job; default 1 GiB, env-overridable; unknown
-    estimate => barrier, the scale-safe branch)."""
-    import os
-
-    from batchprocessingetl_spark.operators.iteration import input_size_estimate
-
-    gate = int(os.environ.get("SPARK_GRAFT_COVERED_BARRIER_MIN_BYTES", str(1 << 30)))
-    return input_size_estimate(docs) <= gate
-
-
 def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy maximum-coverage document selection — pick SETCOVER_K
     documents that together cover the most distinct 3-shingles, the
@@ -3679,8 +3661,9 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivor frame (round 8 materialized the shrinking frame k times;
     this design's only data-proportional pass per round is the gain
     aggregate itself — VERDICT r8 #6). Shingle sets never pass
-    through the driver: the covered set stays a DataFrame, updated by
-    one doc-filtered pass per round.
+    through the driver: the covered set is one lazy ``isin`` filter
+    of the materialized frame on the picked doc ids — one scan per
+    round, no eager job.
     Ties break on doc_id; counts are exact integers, so both engines
     pick identical documents every round. Exact greedy max-coverage
     is inherently k linear passes over the uncovered frame (the 10×
@@ -3692,9 +3675,9 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     the covered state (collect + createDataFrame per round) was
     measured SLOWER (+0.35s/round: a parallelize-backed broadcast
     build costs far more than one built on the localCheckpointed
-    frame), so the checkpoint design stays. The one measured win kept:
-    the final round's covered-set update is dead work (nothing reads
-    it) and is skipped."""
+    frame), so the covered set stays a filter of that frame. The
+    final round's covered-set update is dead work (nothing reads it)
+    and is skipped."""
     from batchprocessingetl_spark.operators.dedup import shingle_frame
     from batchprocessingetl_spark.operators.iteration import barrier
 
@@ -3714,17 +3697,6 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked_ids: list[int] = []
     covered_sh = None  # small: <= k docs' worth of shingles
     covered = 0
-    # Size-gated covered-set barrier (r15, guide §1.1 + the q37 gate
-    # pattern): below the gate the covered frame stays a LAZY union —
-    # each round's broadcast build re-runs <= k-1 doc-filtered scans of
-    # the materialized shingle frame, which is cheap in memory and
-    # skips the per-round eager checkpoint job (interleaved A/B at
-    # sf0.1: q275 2.21/2.31 s lazy vs 2.59/3.16 s barriered). Above
-    # the gate the barrier returns: the lazy form costs O(k^2)
-    # corpus-frame scans across the loop where the barriered form
-    # costs O(k) — the bench win inverts at scale. Rows are identical
-    # either way (same union, materialized or not).
-    lazy_covered = _covered_lazy_ok(docs)
     for r in range(1, SETCOVER_K + 1):
         cand = sh
         if picked_ids:
@@ -3750,12 +3722,10 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked_ids.append(int(b.doc_id))
         if r == SETCOVER_K:
             break  # the last pick's covered-set update is never read
-        new_sh = sh.filter(F.col("doc_id") == b.doc_id).select("sh")
-        # union WITHOUT distinct (r15): the left-anti join is
-        # insensitive to duplicate keys on its build side, so the old
-        # per-round distinct was a pure-overhead shuffle
-        u = new_sh if covered_sh is None else covered_sh.union(new_sh)
-        covered_sh = u if lazy_covered else barrier(u)
+        # every picked doc's shingles in ONE scan of the materialized
+        # frame; no distinct: the left-anti join ignores duplicate
+        # keys on its build side
+        covered_sh = sh.filter(F.col("doc_id").isin(picked_ids)).select("sh")
     return spark.createDataFrame(
         picked, "round int, doc_id long, gain long, covered long"
     ).orderBy("round")
@@ -3851,13 +3821,12 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket is exhausted pick nothing and are skipped on BOTH engines.
     The covered-set plumbing is q275's: a small (<= k docs) broadcast
     anti-join, no per-round rewrite of the base frame; the picked
-    doc's shingles are likewise read back from its bucket partition
-    only."""
-    import os
+    docs' shingles are read back from the store filtered on their
+    buckets as well as their ids, so that scan stays partition-pruned
+    to the buckets already picked from."""
     import shutil
 
     from batchprocessingetl_spark.operators.dedup import shingle_frame
-    from batchprocessingetl_spark.operators.iteration import barrier
 
     docs = load_table(spark, sf_dir, "documents")
     work = work_dir(spark, "sgcover")
@@ -3879,16 +3848,16 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
         # snappy, not the session zstd: this store is re-read every
         # round within the timed query and deleted after; read-path
         # decode speed wins (VERDICT r14 #4, guide §6)
-        .write.option("compression", work_codec())
+        .write.option("compression", WORK_CODEC)
         .partitionBy("bucket")
         .parquet(work)
     )
     store = spark.read.parquet(work)
     picked: list[tuple[int, int, int, int]] = []
     picked_ids: list[int] = []
+    picked_buckets: list[int] = []
     covered_sh = None
     covered = 0
-    lazy_covered = _covered_lazy_ok(docs)  # see q275 / _covered_lazy_ok
     for r in range(1, SETCOVER_K + 1):
         bkt = (r - 1) % SETCOVER_SG_MOD
         cand = store.filter(F.col("bucket") == bkt)
@@ -3910,15 +3879,14 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
         covered += b.gain
         picked.append((r, int(b.doc_id), int(b.gain), covered))
         picked_ids.append(int(b.doc_id))
+        picked_buckets.append(bkt)
         if r == SETCOVER_K:
             break  # the last pick's covered-set update is never read
-        new_sh = store.filter(
-            (F.col("bucket") == bkt) & (F.col("doc_id") == b.doc_id)
+        # one bucket-pruned isin scan — see q275
+        covered_sh = store.filter(
+            F.col("bucket").isin(picked_buckets)
+            & F.col("doc_id").isin(picked_ids)
         ).select("sh")
-        # union without distinct + size-gated barrier — see q275 (here
-        # the lazy rebuild's scans are additionally bucket-pruned)
-        u = new_sh if covered_sh is None else covered_sh.union(new_sh)
-        covered_sh = u if lazy_covered else barrier(u)
     return spark.createDataFrame(
         picked, "round int, doc_id long, gain long, covered long"
     ).orderBy("round")

@@ -4,17 +4,14 @@ silently break the argument the speedup was shipped on.
 
 - tokens() lambda-free form == the old filter-lambda form.
 - BM25's tokenize-free stats pass: regexp_count(text, '\\S+') ==
-  size(tokens(text)) on every boundary case (the coalesce(-1)
-  replicates size(NULL) = -1).
+  size(tokens(text)) on every boundary case.
 - Hashed shingles == xxhash64 of string shingles, elementwise.
 - The q37 shingle-barrier size gate changes the PLAN, never the rows.
+- The set-cover picks (q275, q281) match the oracle.
 """
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -91,41 +88,47 @@ def test_hashed_shingles_equal_xxhash_of_string_shingles(spark):
 
 
 def test_minhash_barrier_gate_does_not_change_rows(spark, monkeypatch):
-    """SPARK_GRAFT_SHINGLE_BARRIER_MIN_BYTES=0 forces the shingle
-    barrier on; a huge value forces it off. Same pairs either way."""
-    from batchprocessingetl_spark.operators.dedup import minhash_dedup_pairs
+    """SHINGLE_BARRIER_MIN_BYTES=0 forces the shingle barrier on; a
+    huge value forces it off. Same pairs either way."""
+    from batchprocessingetl_spark.operators import dedup
 
     docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
 
     def pairs():
         return sorted(
             (r.id_a, r.id_b, r.jaccard)
-            for r in minhash_dedup_pairs(docs, "doc_id", "text").collect()
+            for r in dedup.minhash_dedup_pairs(docs, "doc_id", "text").collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_BARRIER_MIN_BYTES", "0")
+    monkeypatch.setattr(dedup, "SHINGLE_BARRIER_MIN_BYTES", 0)
     forced_on = pairs()
-    monkeypatch.setenv("SPARK_GRAFT_SHINGLE_BARRIER_MIN_BYTES", "999999999999")
+    monkeypatch.setattr(dedup, "SHINGLE_BARRIER_MIN_BYTES", 1 << 62)
     forced_off = pairs()
     assert forced_on == forced_off
     assert len(forced_on) > 0
 
 
-def test_setcover_covered_gate_does_not_change_rows(spark, monkeypatch):
-    """The set-cover covered-set strategy (lazy union vs per-round
-    barrier, SPARK_GRAFT_COVERED_BARRIER_MIN_BYTES) must never change
-    the picked rounds."""
-    from batchprocessingetl_spark.workload.textops import q275_setcover_selection
+def test_setcover_picks_match_oracle(spark):
+    """The covered set is one isin filter of the materialized shingle
+    frame (q281: also bucket-pruned); the picked rounds must equal the
+    DuckDB greedy replay."""
+    import duckdb
 
-    def rounds():
-        return [
+    from batchprocessingetl_spark.workload import textops
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    for query, oracle in (
+        (textops.q275_setcover_selection, textops._q275_oracle),
+        (textops.q281_stochastic_setcover, textops._q281_oracle),
+    ):
+        got = [
             (r.round, r.doc_id, r.gain, r.covered)
-            for r in q275_setcover_selection(spark, SF_SMOKE).collect()
+            for r in query(spark, SF_SMOKE).collect()
         ]
-
-    monkeypatch.setenv("SPARK_GRAFT_COVERED_BARRIER_MIN_BYTES", "0")
-    barriered = rounds()
-    monkeypatch.setenv("SPARK_GRAFT_COVERED_BARRIER_MIN_BYTES", "999999999999")
-    lazy = rounds()
-    assert barriered == lazy
-    assert len(barriered) > 0
+        want = [tuple(r) for r in con.sql(oracle()).fetchall()]
+        assert got == want, query.__name__
+        assert len(got) > 0, query.__name__

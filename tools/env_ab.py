@@ -60,7 +60,19 @@ def main() -> None:
     docs: dict[str, list[dict]] = {"A": [], "B": []}
     for i in range(rounds):
         for arm, ov in (("A", arm_a), ("B", arm_b)):
-            doc = run_once(ov)
+            try:
+                doc = run_once(ov)
+            except subprocess.CalledProcessError as exc:
+                # a long A/B that dies late keeps what it measured: the
+                # failing run's stderr, then every completed run per arm
+                print(exc.stderr, file=sys.stderr)
+                done = {
+                    a: [{k: d[k] for k in ("value", "calibration", "queries")}
+                        for d in ds]
+                    for a, ds in docs.items()
+                }
+                print(json.dumps({"completed": done}), file=sys.stderr)
+                raise
             docs[arm].append(doc)
             print(
                 f"# {arm} run {i+1}: total {doc['value']} cal {doc['calibration']}"

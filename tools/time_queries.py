@@ -1,6 +1,8 @@
 """Time named queries best-of-N in one session (quick iteration tool).
 
 Usage: python tools/time_queries.py [n_runs] q_a [q_b ...]
+n_runs defaults to DEFAULT_RUNS when the first argument is not an
+integer.
 Same timing action as bench.py (count()), same session factory; for
 decisions use interleaved full-bench A/Bs (tools/env_ab.py) — this is
 the fast inner loop only.
@@ -19,9 +21,14 @@ from batchprocessingetl_spark.session import get_spark
 from batchprocessingetl_spark.workload import collect_extra_queries, collect_queries
 
 
+DEFAULT_RUNS = 3
+
+
 def main() -> None:
-    n = int(sys.argv[1])
-    names = sys.argv[2:]
+    names = sys.argv[1:]
+    n = DEFAULT_RUNS
+    if names and names[0].isdigit():
+        n, names = int(names[0]), names[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("time-queries")
     queries = {**collect_queries(), **collect_extra_queries()}

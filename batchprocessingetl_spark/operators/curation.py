@@ -300,11 +300,12 @@ def positional_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> Data
     n-1 lead() columns over a doc-keyed window, concat_ws — NOT the
     original transform(sequence)/slice/array_join higher-order
     functions. HOF expressions are interpreted and allocate a struct
-    array per doc; the dsir_probe measured the HOF form at 26.6s vs
-    1.96s for this window form enumerating 5-grams over 10× documents
-    (13.6×). The window adds one id-keyed shuffle, which every
-    downstream consumer (hash aggregate on the gram, join back on the
-    key) was paying anyway; output and all oracles are unchanged."""
+    array per doc; docs/SCALE.md's round-7 positional_ngrams section
+    records the HOF form at 26.6s vs 1.96s for this window form
+    enumerating 5-grams over 10× documents (13.6×). The window adds one
+    id-keyed shuffle, which every downstream consumer (hash aggregate on
+    the gram, join back on the key) was paying anyway; output and all
+    oracles are unchanged."""
     from pyspark.sql.window import Window as W
 
     from batchprocessingetl_spark.operators.text import tokens

@@ -136,23 +136,9 @@ def exact_dedup(df: DataFrame, key_cols: list[str], keep_col: str) -> DataFrame:
     """Exact deduplication keeping the row with the MIN ``keep_col`` per
     content key. One hash aggregate (single shuffle on the content key);
     at 100 TB, dedup on a long text column should pre-hash the key
-    (``F.md5``/``F.xxhash64``) so the shuffle carries a fixed-width key —
-    use ``exact_dedup_hashed`` for that.
+    (``F.md5``/``F.xxhash64``) so the shuffle carries a fixed-width key.
     """
     return df.groupBy(*key_cols).agg(F.min(keep_col).alias(keep_col)).select(keep_col, *key_cols)
-
-
-def exact_dedup_hashed(df: DataFrame, text_col: str, keep_col: str) -> DataFrame:
-    """Scale variant: shuffle on a 128-bit content hash instead of the
-    full text. Collision probability at 100 TB (~1e11 docs) is ~1e-17 —
-    acceptable for corpus dedup."""
-    hashed = df.withColumn("__h", F.md5(F.col(text_col)))
-    return (
-        hashed.groupBy("__h")
-        .agg(F.min(keep_col).alias(keep_col))
-        .join(df.select(keep_col, text_col), keep_col)
-        .drop("__h")
-    )
 
 
 def build_vocab(
@@ -202,15 +188,15 @@ def bigram_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Adjacent token pairs as ROWS (id, a, b) — the exploded twin of
     :func:`bigram_structs`, built with posexplode + a doc-keyed lead()
     window instead of zip_with over slices. Same output exactly; very
-    different cost: tools/dsir_probe.py (round 7) measured the
-    interpreted higher-order-function path at ~3x the window form at
-    10x docs — a NO-HASH zip_with control still cost more than
-    posexplode+window WITH per-token md5, i.e. the HOF struct-array
-    allocation dominates. The window adds one id-keyed shuffle, which
-    is cheaper than the allocation it removes at every scale probed;
-    prefer this form whenever bigrams are consumed as rows. Keep
-    :func:`bigram_structs` for ARRAY-level consumers (phrase_count,
-    BPE segmentation) where no explode follows."""
+    different cost: the round-7 iteration under docs/SCALE.md's q188
+    DSIR probe measured the interpreted higher-order-function path at
+    ~3x the window form at 10x docs — a NO-HASH zip_with control still
+    cost more than posexplode+window WITH per-token md5, i.e. the HOF
+    struct-array allocation dominates. The window adds one id-keyed
+    shuffle, which is cheaper than the allocation it removes at every
+    scale probed; prefer this form whenever bigrams are consumed as
+    rows. Keep :func:`bigram_structs` for ARRAY-level consumers
+    (phrase_count, BPE segmentation) where no explode follows."""
     from pyspark.sql.window import Window as W
 
     tp = df.select(

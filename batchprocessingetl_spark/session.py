@@ -74,6 +74,9 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # the pyspark launcher turns the console progress bar on; its
+        # carriage-return redraws interleave with every tool's stderr
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         # events.parquet carries TIMESTAMP(NANOS) which vanilla Spark
         # rejects; read as epoch-nanos long, converted in the catalog.

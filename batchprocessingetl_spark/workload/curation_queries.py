@@ -1167,13 +1167,13 @@ def q188_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     Bucketing (round 7, VERDICT r6 #7): one md5 per TOKEN occurrence
     (posexplode), adjacent hashes combined into a bigram bucket by
     integer arithmetic over a doc-keyed lead() window — both engines
-    replay it exactly. tools/dsir_probe.py measured this against the
-    original per-bigram-string md5 inside zip_with/slice higher-order
-    functions: at 10× docs the window form runs 5.7s vs 20.4s — and a
-    no-hash HOF control still costs 7.3s, i.e. the interpreted
-    zip_with/struct-array path was the real cost, not md5. The doc-
-    keyed shuffle the window adds is cheaper than the HOF allocation
-    it removes at every scale probed."""
+    replay it exactly. The round-7 iteration in docs/SCALE.md measured
+    this against the original per-bigram-string md5 inside
+    zip_with/slice higher-order functions: at 10× docs the window form
+    runs 5.7s vs 20.4s — and a no-hash HOF control still costs 7.3s,
+    i.e. the interpreted zip_with/struct-array path was the real cost,
+    not md5. The doc-keyed shuffle the window adds is cheaper than the
+    HOF allocation it removes at every scale probed."""
     from pyspark.sql.window import Window as W
 
     docs = load_table(spark, sf_dir, "documents")

@@ -393,8 +393,8 @@ def q94_skewed_user_rollup_aqe(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipf fixture joined PLAIN, forced to sort-merge (merge hint on the
     dim side) so Spark's built-in AQE skew-join splitting — not manual
     salting and not a broadcast — is the machinery in play. Benched
-    next to q81; tools/bench_skew.py measures the crossover and
-    docs/SCALE.md records when AQE suffices (its skew split triggers
+    next to q81; docs/SCALE.md's round-4 skew-join probe records the
+    crossover and when AQE suffices (its skew split triggers
     on partition-byte thresholds tuned for production scale; below
     them the plain join simply eats the hot partition)."""
     ev = load_table(spark, sf_dir, "events")

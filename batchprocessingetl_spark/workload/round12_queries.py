@@ -111,11 +111,11 @@ RECALL_K = 10
 def q346_ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of the q335/q66 sign-LSH cell candidate path against
     the exact cosine top-10, per test query — the in-engine version of
-    tools/ann_recall.py: before trusting cell-local ANN at 100 TB,
-    measure what the cells actually recall on THIS corpus. Query set
-    is the bounded KS_TEST_IDS panel (q332's); cells use q335's
-    adaptive plane count, so this audit tracks exactly the shipped
-    candidate generator.
+    the round-4 ANN recall probe (docs/SCALE.md): before trusting
+    cell-local ANN at 100 TB, measure what the cells actually recall on
+    THIS corpus. Query set is the bounded KS_TEST_IDS panel (q332's);
+    cells use q335's adaptive plane count, so this audit tracks exactly
+    the shipped candidate generator.
 
     Both arms are deterministic (6dp-rounded cosine, id tie-break,
     md5-free data-derived planes), so recall itself is oracle-pinned —

@@ -273,7 +273,7 @@ QUERIES = {
     # IVF machinery AND the exact-scoring path (q50/q53's tiled GEMM
     # semantics) by construction. q53/q54 move to EXTRA (both stay
     # benched / oracle-checked; q50's exact top-k remains the recall
-    # ground truth in tools/ann_recall.py's pytest floor).
+    # ground truth of the recall floors in tests/test_vectors.py).
     "q125_knn_ivf_int8": q125_knn_ivf_int8,
 }
 
@@ -425,7 +425,7 @@ ORACLE = {
 # Round 4 mid-round rotation displaced q52 (sign-LSH kNN): the ANN
 # family keeps q54 (IVF probe, same bucket-pruning posture) and q50
 # (exact baseline) registered, and q52's retrieval quality is pinned
-# by the measured recall floor in tools/ann_recall.py's pytest.
+# by the measured recall floors in tests/test_vectors.py.
 EXTRA_QUERIES = {
     "q53_embedding_similar_pairs": q53_embedding_similar_pairs,
     "q54_knn_ivf": q54_knn_ivf,

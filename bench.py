@@ -92,29 +92,14 @@ def _latest_prev_bench() -> tuple[str, dict[str, float], float] | None:
     the signal that separates a plan regression (normalized ratio
     moves) from VM placement (raw secs move, ratio ~1).
 
-    A ``SPARK_GRAFT_BENCH_BASELINE`` env var (a BENCH_r{N}.json path)
-    overrides the pick. Otherwise, never compare against the current
-    (in-flight) round's own file: the driver lands BENCH_r{N}.json and
-    CORRECTNESS_r{N}.json together at round end, so the current round
+    Never compare against the current (in-flight) round's own file:
+    the driver lands BENCH_r{N}.json and CORRECTNESS_r{N}.json
+    together at round end, so the current round
     is max(CORRECTNESS N)+1 and any BENCH_r{M} with M >= that round
     was written THIS round — comparing to it would emit ratio~1.0 and
     silently mask drift (ADVICE r6)."""
     import glob
     import re
-
-    override = os.environ.get("SPARK_GRAFT_BENCH_BASELINE")
-    if override:
-        try:
-            with open(override) as f:
-                doc = json.load(f)
-            parsed = doc.get("parsed", doc)
-            return (
-                os.path.basename(override),
-                parsed["queries"],
-                float(parsed["calibration"]),
-            )
-        except (OSError, ValueError, KeyError):
-            return None
 
     here = os.path.dirname(os.path.abspath(__file__))
 
@@ -156,14 +141,6 @@ def main() -> None:
     spark = get_spark("bench")
     queries = {**collect_queries(), **collect_extra_queries()}
 
-    # A/B harness (VERDICT r11 #3): SPARK_GRAFT_BENCH_SET=r10 runs only
-    # the original 17-query shared set (the BENCH_r01-r10 headline),
-    # isolating it from the 5 round-11 additions so shared-set
-    # round-over-round comparisons measure the PLANS, not whatever the
-    # extra queries do to the shared JVM (GC/page-cache pressure).
-    bench_set = os.environ.get("SPARK_GRAFT_BENCH_SET", "full")
-    headline = HEADLINE[:17] if bench_set == "r10" else HEADLINE
-
     # one untimed pass over the largest scan absorbs JVM/codegen/reader
     # warmup so per-query numbers reflect steady-state execution
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
@@ -182,7 +159,7 @@ def main() -> None:
     # still saw q37 at 1.9s moving 1.28x on 3 runs, hence 2.5s).
     cal_pre = calibrate()
     timings: dict[str, float] = {}
-    for name in headline:
+    for name in HEADLINE:
         runs = []
         for _ in range(3):
             t0 = time.time()
@@ -207,10 +184,7 @@ def main() -> None:
         "metric": "headline_queries_total_runtime",
         "value": total,
         "unit": "sec",
-        # which headline set ran — an A/B arm (SPARK_GRAFT_BENCH_SET)
-        # must never be mistaken for a full round when compared later
-        "bench_set": bench_set,
-        "n_queries": len(headline),
+        "n_queries": len(HEADLINE),
         "queries": timings,
         "sf": sf,
         # host-speed yardstick: compare value/calibration (and
@@ -243,10 +217,9 @@ def main() -> None:
         }
     print("# diagnostics: " + json.dumps(diag), file=sys.stderr)
     # canonical full artifact: always contains the per-query map even
-    # when the stdout line overflows the driver's 2000-char window —
-    # tools/ab_bench.py reads this when 'queries' is missing (ADVICE
-    # r12). SPARK_GRAFT_BENCH_FULL lets a harness give each subprocess
-    # its OWN artifact path (ab_bench does — a shared file would let
+    # when the stdout line overflows the driver's 2000-char window.
+    # SPARK_GRAFT_BENCH_FULL lets a harness give each subprocess its
+    # OWN artifact path (tools/env_ab.py does — a shared file would let
     # concurrent runs clobber each other); a failed write must never
     # cost the run its measurements, so it is best-effort.
     artifact = os.environ.get(

@@ -218,14 +218,18 @@ def test_q137_vocab_growth_has_no_global_rank(spark):
     assert "Window" not in plan
 
 
-def test_bench_set_is_subset_of_plan_audit():
+def test_bench_set_is_subset_of_plan_audit(spark, capsys):
     """Invariant (VERDICT r6 #3): every benched query must carry a
     current plan-audit row — the two most expensive bench queries
     (q40/q41) once shipped a round without one. plan_audit.AUDITED is
     derived from the full registry, so this also pins that derivation
-    against regressions (e.g. a module rename dropping queries)."""
+    against regressions (e.g. a module rename dropping queries). A
+    name-filtered audit prints exactly the named sections and hands
+    the session back with its own AQE setting."""
+    import re as _re
+
     import bench
-    from tools.plan_audit import AUDITED
+    from tools.plan_audit import AUDITED, audit, parse_args
 
     from batchprocessingetl_spark.workload import (
         collect_extra_queries,
@@ -234,6 +238,15 @@ def test_bench_set_is_subset_of_plan_audit():
 
     assert set(bench.HEADLINE) <= set(AUDITED)
     assert set(AUDITED) == set(collect_queries()) | set(collect_extra_queries())
+
+    assert parse_args([])[1] == AUDITED
+    sf_dir, names = parse_args([SF_SMOKE, "q01_pricing_summary"])
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    audit(spark, sf_dir, names)
+    out = capsys.readouterr().out
+    assert _re.findall(r"^## (q\w+)\s*$", out, _re.M) == ["q01_pricing_summary"]
+    assert f"`{SF_SMOKE}`" in out
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
 
 def test_plans_doc_covers_full_registry():

@@ -11,7 +11,7 @@ Blow-up construction (realistic growth, not naive duplication):
   same per-user event density (sessionization/windows grow by group
   count, not group size).
 - ``documents`` replicates with per-replica near-duplicate suffixes
-  (the high-dup crawl regime, same as tools/scale_probe.py): near-dup
+  (the high-dup crawl regime): near-dup
   TRUE-pair counts grow ~m^2 BY CONSTRUCTION, so candidate-bounded
   operators (q37) are expected super-linear in wall time while staying
   linear per candidate — the exponent table flags them and
@@ -24,7 +24,10 @@ Exponent: alpha = ln(t_m / t_1) / ln(m) from best-of-n runs at each
 scale. alpha <= ~1 means the plan absorbed a 10x fact blow-up at no
 worse than proportional cost on fixed parallelism.
 
-Usage: python tools/bench_scale.py [m] [n_runs]   (defaults 10, 2)
+Usage: python tools/bench_scale.py [m] [n_runs] [q_a,q_b,...]
+(defaults 10, 2 and the bench HEADLINE set). Naming queries probes
+them instead of the headline; docs/SCALE.md maps each corpus operator
+to the registered query that exercises it.
 Writes one JSON line to stdout; paste/format into docs/SCALE.md.
 """
 
@@ -35,7 +38,6 @@ import math
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -45,6 +47,7 @@ from pyspark.sql import functions as F
 from batchprocessingetl_spark.catalog import TABLES, load_table
 from batchprocessingetl_spark.session import get_spark
 from bench import HEADLINE
+from time_queries import time_runs
 
 BASE_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 KEY_OFFSET = 100_000_000
@@ -114,27 +117,10 @@ def build_scaled_dir(spark: SparkSession, out_dir: str, m: int) -> None:
     open(marker, "w").close()
 
 
-def time_queries(
-    spark, queries, sf_dir: str, n_runs: int, names: list[str] | None = None
-) -> dict[str, float]:
-    out: dict[str, float] = {}
-    for name in names or HEADLINE:
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            queries[name](spark, sf_dir).count()
-            runs.append(time.time() - t0)
-        out[name] = round(min(runs), 3)
-        print(f"# {sf_dir.rsplit('/',1)[-1]} {name}: {out[name]}s", file=sys.stderr)
-    return out
-
-
 def main() -> None:
-    # usage: bench_scale.py [m] [n_runs] [q_a,q_b,...]
-    # a third arg probes the named queries instead of the HEADLINE set
     m = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    names = sys.argv[3].split(",") if len(sys.argv) > 3 else None
+    names = sys.argv[3].split(",") if len(sys.argv) > 3 else list(HEADLINE)
     scaled_dir = f"/tmp/bpetl_scaled_m{m}"
     spark = get_spark("bench_scale")
     from batchprocessingetl_spark.workload import collect_extra_queries, collect_queries
@@ -143,11 +129,11 @@ def main() -> None:
     build_scaled_dir(spark, scaled_dir, m)
     spark.read.parquet(f"{scaled_dir}/lineitem.parquet").count()  # warm
 
-    t1 = time_queries(spark, queries, BASE_DIR, n_runs, names)
-    tm = time_queries(spark, queries, scaled_dir, n_runs, names)
+    t1 = {q: min(r) for q, r in time_runs(spark, queries, BASE_DIR, names, n_runs).items()}
+    tm = {q: min(r) for q, r in time_runs(spark, queries, scaled_dir, names, n_runs).items()}
     exps = {
         q: round(math.log(max(tm[q], 1e-3) / max(t1[q], 1e-3)) / math.log(m), 3)
-        for q in (names or HEADLINE)
+        for q in names
     }
     print(
         json.dumps(

@@ -1,14 +1,15 @@
-"""Generate docs/PLANS.md: the formatted physical plan of each headline
-query at sf0.1, with the scale-relevant plan properties extracted up
-front (pushed filters, read schema width, broadcast vs shuffle joins,
-exchange count, whole-stage-codegen coverage).
+"""Generate docs/PLANS.md: the formatted physical plan of each declared
+query (at sf0.1 by default), with the scale-relevant plan properties
+extracted up front (pushed filters, read schema width, broadcast vs
+shuffle joins, exchange count, whole-stage-codegen coverage).
 
 The point (SURVEY.md §4 / README "Scale design"): at 100 TB the plan IS
 the performance. This artifact makes plan quality reviewable and
 regressions diffable — it is regenerated and committed whenever the
-workload changes.
+workload changes. Naming queries audits just those, e.g. to diff a few
+plans before and after a change.
 
-Usage: python tools/plan_audit.py [sf_dir] > docs/PLANS.md
+Usage: python tools/plan_audit.py [sf_dir] [query ...] > docs/PLANS.md
 """
 
 from __future__ import annotations
@@ -254,29 +255,56 @@ def summarize(plan: str) -> list[str]:
     return facts
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark("plan_audit")
-    # static plans for the audit: AQE off so WholeStageCodegen spans and
-    # join choices are visible in toString (at runtime AQE only improves
-    # on this picture: skew splitting, partition coalescing, SMJ->BHJ);
-    # untruncated metadata so ReadSchema/PushedFilters are parseable
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
+# static plans for the audit: AQE off so WholeStageCodegen spans and
+# join choices are visible in toString (at runtime AQE only improves on
+# this picture: skew splitting, partition coalescing, SMJ->BHJ);
+# untruncated metadata so ReadSchema/PushedFilters are parseable
+AUDIT_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.maxMetadataStringLength": "2000",
+}
+
+
+def audit(spark, sf_dir: str, names) -> None:
+    """Print the audit of ``names`` to stdout under AUDIT_CONF; the
+    session's own values are restored afterwards."""
     queries = {**collect_queries(), **collect_extra_queries()}
-    print("# Physical-plan audit (generated by tools/plan_audit.py)")
-    print()
-    print(f"Headline queries at `{sf_dir}` — static physical plans (AQE")
-    print("disabled for display only); see the tool docstring.")
-    for name in AUDITED:
-        df = queries[name](spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        print(f"\n## {name}\n")
-        for f in summarize(plan):
-            print(f"- {f}")
-        print("\n```")
-        print(plan[:4000].rstrip())
-        print("```")
+    saved = {k: spark.conf.get(k) for k in AUDIT_CONF}
+    for k, v in AUDIT_CONF.items():
+        spark.conf.set(k, v)
+    try:
+        print("# Physical-plan audit (generated by tools/plan_audit.py)")
+        print()
+        print(f"Declared queries at `{sf_dir}` — static physical plans (AQE")
+        print("disabled for display only); see the tool docstring.")
+        for name in names:
+            df = queries[name](spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            print(f"\n## {name}\n")
+            for f in summarize(plan):
+                print(f"- {f}")
+            print("\n```")
+            print(plan[:4000].rstrip())
+            print("```")
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+
+
+def parse_args(args: list[str]) -> tuple[str, tuple]:
+    """``[sf_dir] [query ...]`` -> (sf_dir, names); no names audits
+    every declared query."""
+    args = list(args)
+    sf_dir = args.pop(0) if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
+    unknown = sorted(set(args) - set(AUDITED))
+    if unknown:
+        sys.exit(f"unknown queries: {unknown}")
+    return sf_dir, tuple(args) or AUDITED
+
+
+def main() -> None:
+    sf_dir, names = parse_args(sys.argv[1:])
+    audit(get_spark("plan_audit"), sf_dir, names)
 
 
 if __name__ == "__main__":

@@ -5,7 +5,8 @@ n_runs defaults to DEFAULT_RUNS when the first argument is not an
 integer.
 Same timing action as bench.py (count()), same session factory; for
 decisions use interleaved full-bench A/Bs (tools/env_ab.py) — this is
-the fast inner loop only.
+the fast inner loop only. ``time_runs`` is also the timing loop of
+tools/bench_scale.py.
 """
 
 from __future__ import annotations
@@ -24,6 +25,22 @@ from batchprocessingetl_spark.workload import collect_extra_queries, collect_que
 DEFAULT_RUNS = 3
 
 
+def time_runs(spark, queries, sf_dir: str, names, n_runs: int) -> dict[str, list[float]]:
+    """Wall seconds of each of ``n_runs`` build + ``count()`` runs per
+    query, one progress line per query on stderr."""
+    tag = sf_dir.rstrip("/").rsplit("/", 1)[-1]
+    out: dict[str, list[float]] = {}
+    for name in names:
+        runs = []
+        for _ in range(n_runs):
+            t0 = time.time()
+            queries[name](spark, sf_dir).count()
+            runs.append(round(time.time() - t0, 3))
+        out[name] = runs
+        print(f"# {tag} {name}: {min(runs)}s {runs}", file=sys.stderr)
+    return out
+
+
 def main() -> None:
     names = sys.argv[1:]
     n = DEFAULT_RUNS
@@ -33,16 +50,8 @@ def main() -> None:
     spark = get_spark("time-queries")
     queries = {**collect_queries(), **collect_extra_queries()}
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()  # warm
-    out = {}
-    for name in names:
-        runs = []
-        for _ in range(n):
-            t0 = time.time()
-            queries[name](spark, sf_dir).count()
-            runs.append(round(time.time() - t0, 3))
-        out[name] = {"best": min(runs), "runs": runs}
-        print(f"# {name}: {min(runs)}s {runs}", file=sys.stderr)
-    print(json.dumps(out))
+    runs = time_runs(spark, queries, sf_dir, names, n)
+    print(json.dumps({q: {"best": min(r), "runs": r} for q, r in runs.items()}))
 
 
 if __name__ == "__main__":

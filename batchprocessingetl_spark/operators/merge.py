@@ -1,7 +1,7 @@
 """MERGE-style transactional upsert onto a parquet snapshot (VERDICT
-r3 #6): one ``merge_into`` generalizing the engine's staged-swap
-pattern (``sources/readers.py::compact_parquet``, the SCD streaming
-rewrite) into the familiar MERGE surface —
+r3 #6): the engine's one snapshot publish
+(``sources/readers.py::publish_snapshot``, shared with compaction and
+the streaming state folds) behind the familiar MERGE surface —
 
     merge_into(spark, target_path, source_df, on=["k"],
                when_matched="update", when_not_matched="insert")
@@ -22,17 +22,20 @@ Semantics (a deliberate, oracle-checkable subset of SQL MERGE):
     with duplicate source keys is nondeterministic; SQL engines
     reject it at runtime too).
 
-Crash safety — snapshot swap with recovery, not in-place mutation:
-  1. the merged snapshot is fully written to ``<path>.merge.tmp``
-  2. the live snapshot is atomically renamed to ``<path>.merge.bak``
-  3. the tmp dir is atomically renamed to ``<path>``
-  4. the bak dir is deleted
-A failure in step 1 (the only step reading data or running user
-expressions) leaves the live snapshot untouched. A crash between
-steps 2 and 3 leaves the complete old snapshot at ``.merge.bak``;
-the next ``merge_into`` (or ``recover_merge_target``) restores it
-before proceeding. Directory renames are single filesystem metadata
-operations — the swap window contains no partial data states.
+Crash safety — ``sources/readers.py::publish_snapshot``, not in-place
+mutation: the merged snapshot is fully written to a staging dir beside
+the live one, then the live dir is deleted and the staging dir renamed
+into place, all through the Hadoop FileSystem API (any URI scheme). A
+failure while writing (the only step reading data or running user
+expressions) leaves the live snapshot untouched. A crash between the
+delete and the rename leaves the complete merged snapshot staged; the
+next ``merge_into`` adopts it before proceeding (``recover_staged_swap``
+— roll forward, not back). Retrying the same MERGE after that crash is
+safe for every clause combination but one: the source is key-unique
+and whole-row, so re-applying it yields the same snapshot — except
+``when_matched="delete"`` with ``when_not_matched="insert"``, a toggle
+that no protocol makes retry-safe (a crash after the rename but before
+the call returns is just as ambiguous).
 
 Scale: the merge plan is 1-2 hash joins on the key (anti/semi joins
 key on the key projection only, so wide payloads shuffle once) plus
@@ -44,12 +47,10 @@ touched partitions to bound the rewrite at 100 TB.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 
 from batchprocessingetl_spark.operators.scd2 import apply_scd1
+from batchprocessingetl_spark.sources.readers import publish_snapshot, recover_staged_swap
 
 _MATCHED = ("update", "delete", None)
 _NOT_MATCHED = ("insert", None)
@@ -90,17 +91,6 @@ def merge_plan(
     return out
 
 
-def recover_merge_target(path: str) -> bool:
-    """Restore the pre-merge snapshot if a crash between the swap's
-    two renames left ``<path>.merge.bak`` live and ``path`` missing.
-    Returns True if a recovery happened."""
-    bak = path.rstrip("/") + ".merge.bak"
-    if os.path.exists(bak) and not os.path.exists(path):
-        os.rename(bak, path)
-        return True
-    return False
-
-
 def merge_into(
     spark: SparkSession,
     target_path: str,
@@ -112,14 +102,7 @@ def merge_into(
     """Run the MERGE against the parquet snapshot at ``target_path``
     and atomically publish the result (see module docstring for the
     swap protocol). Returns the merged snapshot's row count."""
-    tmp = target_path.rstrip("/") + ".merge.tmp"
-    bak = target_path.rstrip("/") + ".merge.bak"
-    recover_merge_target(target_path)
-    # a stale tmp from a step-1 crash is dead weight; a stale bak with
-    # a live target means the prior merge committed — drop both
-    for stale in (tmp, bak):
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
+    recover_staged_swap(spark, target_path)
 
     # key-uniqueness check on the source (nondeterministic MERGE guard)
     n_src = source.count()
@@ -131,9 +114,5 @@ def merge_into(
 
     target = spark.read.parquet(target_path)
     merged = merge_plan(target, source, on, when_matched, when_not_matched)
-    merged.write.mode("overwrite").parquet(tmp)  # step 1: full staged write
-    n_out = spark.read.parquet(tmp).count()
-    os.rename(target_path, bak)  # step 2: atomic
-    os.rename(tmp, target_path)  # step 3: atomic
-    shutil.rmtree(bak)  # step 4
-    return n_out
+    publish_snapshot(spark, merged, target_path)
+    return spark.read.parquet(target_path).count()

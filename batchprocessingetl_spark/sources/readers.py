@@ -12,6 +12,10 @@ this engine reads files directly and keeps JDBC as an optional adapter:
 - S6/S7 parquet/JSON sinks -> :func:`write_parquet` (adds the
   ``partition_by`` the reference lacks — date-partitioned facts are
   what make 100 TB scans prunable)
+- whole-snapshot publish -> :func:`publish_snapshot` (staged write +
+  Hadoop-FS swap, adopted after a crash by :func:`recover_staged_swap`;
+  the reference's per-batch table rewrite, curated_layer.py:89-145,
+  made crash-safe for MERGE, compaction and streaming state)
 - S9 existence probe -> try/except AnalysisException (the reference's
   curated layer already does this, ``curated_layer.py:39-44``)
 """
@@ -232,27 +236,21 @@ def compact_parquet(
     costs dominate scans and whose listing throttles the driver).
 
     File count derives from the dataset's actual on-disk bytes (file
-    metadata only — no data read for sizing); the rewrite is staged to
-    ``path + '.compact.tmp'`` and swapped in only after a successful
-    write, so a failed compaction leaves the original intact.
+    metadata only — no data read for sizing); the rewrite goes through
+    :func:`publish_snapshot`, so a failed compaction leaves the
+    original intact and a crash mid-swap is adopted by the next call.
     ``sort_within`` optionally re-sorts rows inside each output file to
     restore min/max pruning envelopes (see
     :func:`write_range_sorted_parquet`). Returns the output file count.
     """
-    import shutil
-
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jvm_path.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(jvm_path).getLength()
+    recover_staged_swap(spark, path)
+    fs, jpath = _hadoop_fs(spark, path)
+    total = fs.getContentSummary(jpath).getLength()
     n_files = max(1, int(total / target_file_bytes) + (1 if total % target_file_bytes else 0))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compact.tmp"
-    out = df.repartition(n_files)
+    out = spark.read.parquet(path).repartition(n_files)
     if sort_within:
         out = out.sortWithinPartitions(*sort_within)
-    out.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    publish_snapshot(spark, out, path)
     return n_files
 
 
@@ -315,7 +313,7 @@ def fs_delete(spark: SparkSession, path: str) -> bool:
 def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
     """Atomic-where-the-store-allows rename through the Hadoop
     FileSystem API (HDFS renames are atomic; object stores degrade to
-    copy+delete — the staged-swap recovery protocol tolerates both)."""
+    copy+delete — :func:`publish_snapshot`'s recovery tolerates both)."""
     fs, jsrc = _hadoop_fs(spark, src)
     jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
     return bool(fs.rename(jsrc, jdst))
@@ -323,8 +321,8 @@ def fs_rename(spark: SparkSession, src: str, dst: str) -> bool:
 
 def fs_delete_strict(spark: SparkSession, path: str) -> None:
     """``fs_delete`` that RAISES on failure. Hadoop FileSystem.delete
-    reports failure by returning False rather than raising (unlike the
-    shutil.rmtree it replaces), so a staged-swap promote that silently
+    reports failure by returning False rather than raising (unlike
+    shutil.rmtree), so a :func:`publish_snapshot` swap that silently
     failed to clear the live dir would otherwise surface later as an
     unrelated path error. Callers guard with an existence probe first,
     so False here always means a real failure, not a missing path."""
@@ -335,12 +333,50 @@ def fs_delete_strict(spark: SparkSession, path: str) -> None:
 def fs_rename_strict(spark: SparkSession, src: str, dst: str) -> None:
     """``fs_rename`` that RAISES on failure (Hadoop rename reports
     failure by returning False — e.g. missing parent, existing
-    destination). The staged-swap protocol must abort the fold at the
-    point of failure, not strand a deleted live dir."""
+    destination). :func:`publish_snapshot` must abort at the point of
+    failure, not strand a deleted live dir."""
     if not fs_rename(spark, src, dst):
         raise IOError(
             f"Hadoop FileSystem.rename({src!r} -> {dst!r}) returned False"
         )
+
+
+def _staging(path: str) -> str:
+    return path.rstrip("/") + ".staging"
+
+
+def publish_snapshot(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Replace the parquet dataset at ``path`` with ``df`` — the one
+    crash-safe whole-snapshot publish (MERGE, compaction, streaming
+    state folds). ``df`` is fully written to ``<path>.staging``, then
+    the live dir is deleted and the staging dir renamed into place:
+
+    - a failure during the write leaves the live dataset untouched (the
+      next publish overwrites the partial staging dir);
+    - a crash between the delete and the rename strands a complete
+      staging dir, which :func:`recover_staged_swap` adopts.
+
+    ``df`` may read ``path`` itself: the write never touches the live
+    dir, so no checkpoint is needed to cut that lineage. Every move
+    goes through the Hadoop FileSystem API (any configured scheme)."""
+    staging = _staging(path)
+    df.write.mode("overwrite").parquet(staging)
+    if fs_exists(spark, path):
+        fs_delete_strict(spark, path)
+    fs_rename_strict(spark, staging, path)
+
+
+def recover_staged_swap(spark: SparkSession, path: str) -> bool:
+    """Close :func:`publish_snapshot`'s crash window: when ``path`` is
+    missing and ``<path>.staging`` holds a COMPLETE write (Spark's
+    ``_SUCCESS`` marker), adopt it — roll forward. A partial staging
+    dir is never promoted. Call it before reading the live snapshot.
+    Returns True when a recovery happened; idempotent."""
+    staging = _staging(path)
+    if not fs_exists(spark, path) and fs_exists(spark, staging + "/_SUCCESS"):
+        fs_rename_strict(spark, staging, path)
+        return True
+    return False
 
 
 def write_bucketed(

@@ -14,6 +14,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from batchprocessingetl_spark.sources.readers import (
+    path_exists,
+    publish_snapshot,
+    recover_staged_swap,
+)
+
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType(), True),
@@ -403,29 +409,78 @@ def incremental_ingest_stream(
     q.awaitTermination()
 
 
+def _drain_files(
+    spark: SparkSession,
+    source_dir: str,
+    schema: T.StructType,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    fold,
+) -> None:
+    """Run ``fold(batch, epoch_id)`` over every parquet file now in
+    ``source_dir`` (availableNow, ``max_files_per_trigger`` files per
+    micro-batch) and wait; ``checkpoint_dir`` tracks the progress."""
+    q = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        .parquet(source_dir)
+        .writeStream.foreachBatch(fold)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
-def recover_staged_swap(spark: SparkSession, target_dir: str) -> bool:
-    """Close the staged-swap crash window: if a previous run died
-    BETWEEN removing the live dir and renaming the staging dir into
-    place, the complete new snapshot is stranded at
-    ``<target>.staging`` while ``target`` is missing — adopt it.
-    A staging dir is adopted ONLY when the live dir is absent AND the
-    staging write completed (Spark's ``_SUCCESS`` marker): a crash
-    mid-write leaves the live dir intact, so a partial staging dir is
-    never promoted. Returns True when a recovery happened. Idempotent;
-    both staged-swap streaming jobs call it at the top of every fold.
-    All state moves go through the Hadoop FileSystem API, so the
-    protocol works unchanged on hdfs:// and s3a:// dirs, not just the
-    local filesystem."""
-    from batchprocessingetl_spark.sources.readers import fs_exists, fs_rename_strict
 
-    staging = target_dir.rstrip("/") + ".staging"
-    if not fs_exists(spark, target_dir) and fs_exists(
-        spark, staging + "/_SUCCESS"
-    ):
-        fs_rename_strict(spark, staging, target_dir)
-        return True
-    return False
+def _fold_snapshot(
+    spark: SparkSession,
+    source_dir: str,
+    schema: T.StructType,
+    state_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    step,
+) -> None:
+    """Snapshot-state fold: per non-empty micro-batch, adopt a swap a
+    crash stranded, read the prior state at ``state_dir`` (None before
+    the first batch) and publish ``step(batch, prior)`` in its place
+    (``readers.publish_snapshot``). ``step`` must make re-absorbing an
+    already-folded batch a no-op, so at-least-once epoch replay
+    rebuilds the same state."""
+
+    def fold(batch: DataFrame, epoch_id: int) -> None:
+        recover_staged_swap(spark, state_dir)
+        if batch.isEmpty():
+            return
+        prior = spark.read.parquet(state_dir) if path_exists(spark, state_dir) else None
+        publish_snapshot(spark, step(batch, prior), state_dir)
+
+    _drain_files(spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, fold)
+
+
+def _fold_epochs(
+    spark: SparkSession,
+    source_dir: str,
+    schema: T.StructType,
+    state_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    step,
+) -> None:
+    """Epoch-partitioned fold for summable, NON-idempotent state: each
+    non-empty micro-batch's ``step(batch)`` partial overwrites its own
+    ``state_dir/epoch=N`` partition, so a replayed epoch rewrites the
+    same partition instead of re-adding it; readers sum across
+    partitions."""
+
+    def fold(batch: DataFrame, epoch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        step(batch).write.mode("overwrite").parquet(
+            state_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
+        )
+
+    _drain_files(spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, fold)
 
 
 def scd2_maintenance_stream(
@@ -450,10 +505,11 @@ def scd2_maintenance_stream(
     (latest by ``ts_col``), stamp the batch with its max snapshot
     timestamp (deterministic injected ts — no current_timestamp()),
     and SCD2-merge against the current dimension. The merged frame is
-    eagerly localCheckpoint-ed BEFORE overwriting ``dim_dir`` (the
-    plan reads the same path it overwrites), and data lands before
-    the checkpoint commits the epoch — the same data-before-metadata
-    durability ordering as pipeline/incremental.py.
+    published by ``readers.publish_snapshot`` (staged write, then
+    swap), and data lands before the checkpoint commits the epoch —
+    the same data-before-metadata durability ordering as
+    pipeline/incremental.py. A crash can never leave a half-written
+    dimension for the replayed epoch to mistake for an initial load.
 
     Retry safety: if an epoch re-runs after a crash, re-applying the
     same snapshot is a no-op (no attribute differs null-safely), so
@@ -465,57 +521,26 @@ def scd2_maintenance_stream(
     100 TB posture: state is the dimension itself (a table, not
     executor memory); each fold is the batch-SCD2 plan — broadcast-able
     snapshot vs hash-joined dim on the primary key. For very large
-    dims, swap the overwrite for a partitioned MERGE target; the fold
+    dims, swap the snapshot publish for a partitioned MERGE target; the fold
     logic is unchanged.
     """
     from batchprocessingetl_spark.operators.scd2 import apply_scd2, resolve_grain
-    from batchprocessingetl_spark.sources.readers import path_exists
 
-    snaps = (
-        spark.readStream.schema(snapshot_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        recover_staged_swap(spark, dim_dir)
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         b = resolve_grain(batch, primary_key, [F.col(ts_col).desc()])
         batch_ts = b.agg(F.max(ts_col)).first()[0]
-        existing = (
-            spark.read.parquet(dim_dir) if path_exists(spark, dim_dir) else None
-        )
-        merged = apply_scd2(
+        return apply_scd2(
             b.select(*primary_key, *update_columns),
-            existing,
+            prior,
             primary_key,
             update_columns,
             str(batch_ts),
-        ).localCheckpoint(eager=True)
-        # staged swap, not in-place overwrite: a crash mid-overwrite
-        # would destroy the dimension, and the replayed epoch would then
-        # mistake the batch for an initial load (history loss). Writing
-        # aside and swapping shrinks the unsafe window to a dir rename.
-        # Delete + rename go through the Hadoop FS API (URI-agnostic).
-        from batchprocessingetl_spark.sources.readers import (
-            fs_delete_strict,
-            fs_rename_strict,
         )
 
-        tmp = dim_dir.rstrip("/") + ".staging"
-        merged.write.mode("overwrite").parquet(tmp)
-        if path_exists(spark, dim_dir):
-            fs_delete_strict(spark, dim_dir)
-        fs_rename_strict(spark, tmp, dim_dir)
-
-    q = (
-        snaps.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_snapshot(
+        spark, source_dir, snapshot_schema, dim_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def session_window_stream(
@@ -600,8 +625,9 @@ def cdc_changelog_stream(
       one batch compaction — the test pins stream == batch;
     - epoch replay (at-least-once foreachBatch) is a no-op because
       re-compacting already-absorbed rows cannot change a struct-max;
-    - the staged swap bounds crash damage to a dir rename, same
-      data-before-metadata ordering as scd2_maintenance_stream.
+    - ``readers.publish_snapshot`` bounds crash damage to a dir
+      rename, same data-before-metadata ordering as
+      scd2_maintenance_stream.
 
     100 TB posture: state is a table, not executor memory; each fold
     shuffles only on the key, and the batch side is typically tiny vs
@@ -611,41 +637,15 @@ def cdc_changelog_stream(
     unchanged.
     """
     from batchprocessingetl_spark.operators.cdc import compact_changelog
-    from batchprocessingetl_spark.sources.readers import (
-        fs_delete_strict,
-        fs_rename_strict,
-        path_exists,
-    )
 
-    log = (
-        spark.readStream.schema(changelog_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
+    def step(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
+        merged = batch if prior is None else prior.unionByName(batch)
+        return compact_changelog(merged, keys, version_col, op_col)
 
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        recover_staged_swap(spark, state_dir)
-        if batch.isEmpty():
-            return
-        merged = batch
-        if path_exists(spark, state_dir):
-            merged = spark.read.parquet(state_dir).unionByName(batch)
-        state = compact_changelog(
-            merged, keys, version_col, op_col
-        ).localCheckpoint(eager=True)
-        tmp = state_dir.rstrip("/") + ".staging"
-        state.write.mode("overwrite").parquet(tmp)
-        if path_exists(spark, state_dir):
-            fs_delete_strict(spark, state_dir)
-        fs_rename_strict(spark, tmp, state_dir)
-
-    q = (
-        log.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_snapshot(
+        spark, source_dir, changelog_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def near_dup_dedup_stream(
@@ -684,15 +684,15 @@ def near_dup_dedup_stream(
        whole (its family is already represented); each surviving
        cluster contributes its MIN-id member.
 
-    Durability: both stores advance by staged swap (write aside, swap,
-    ``recover_staged_swap`` at fold start), so epoch replay rebuilds
-    the same state instead of double-appending, and a crash strands
-    at worst a complete ``.staging`` snapshot that the next fold
-    adopts. The test pins stream == a per-batch batch-mode fold of the
-    same rule, plus checkpoint-resume idempotence.
+    Durability: both stores advance by ``readers.publish_snapshot``
+    (write aside, swap, ``recover_staged_swap`` at fold start), so
+    epoch replay rebuilds the same state instead of double-appending,
+    and a crash strands at worst a complete staged snapshot that the
+    next fold adopts. The test pins stream == a per-batch batch-mode
+    fold of the same rule, plus checkpoint-resume idempotence.
 
     100 TB posture: candidate generation is O(batch + candidates) —
-    the band join touches sketch-width rows only; the staged-swap
+    the band join touches sketch-width rows only; the snapshot-publish
     full-store rewrite is the correctness-first default (swap for a
     partition-range rewrite, same fold algebra, when the store is
     huge)."""
@@ -703,24 +703,6 @@ def near_dup_dedup_stream(
         minhash_signatures,
         shingle_frame,
     )
-    from batchprocessingetl_spark.sources.readers import (
-        fs_delete_strict,
-        fs_rename_strict,
-        path_exists,
-    )
-
-    docs = (
-        spark.readStream.schema(doc_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
-    def swap_in(df: DataFrame, target: str) -> None:
-        tmp = target.rstrip("/") + ".staging"
-        df.write.mode("overwrite").parquet(tmp)
-        if path_exists(spark, target):
-            fs_delete_strict(spark, target)
-        fs_rename_strict(spark, tmp, target)
 
     def fold(batch: DataFrame, epoch_id: int) -> None:
         recover_staged_swap(spark, kept_dir)
@@ -828,28 +810,18 @@ def near_dup_dedup_stream(
             if path_exists(spark, kept_dir)
             else None
         )
-        merged_kept = (
-            new_kept if old_kept is None else old_kept.unionByName(new_kept)
-        ).localCheckpoint(eager=True)
+        merged_kept = new_kept if old_kept is None else old_kept.unionByName(new_kept)
         # band rows dedupe on merge: a crash between the two swaps can
         # replay a batch whose bands already landed (bands swap FIRST —
         # the index must never lag the kept docs, or a replayed batch
         # could miss its own prior survivors as candidates)
         merged_bands = (
-            (new_bands if not have_store else store_bands.unionByName(new_bands))
-            .dropDuplicates(["id", "band", "bucket"])
-            .localCheckpoint(eager=True)
-        )
-        swap_in(merged_bands, bands_dir)
-        swap_in(merged_kept, kept_dir)
+            new_bands if not have_store else store_bands.unionByName(new_bands)
+        ).dropDuplicates(["id", "band", "bucket"])
+        publish_snapshot(spark, merged_bands, bands_dir)
+        publish_snapshot(spark, merged_kept, kept_dir)
 
-    q = (
-        docs.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain_files(spark, source_dir, doc_schema, checkpoint_dir, max_files_per_trigger, fold)
 
 
 def cdc_snapshot(
@@ -1016,31 +988,17 @@ def hll_rollup_stream(
       The test therefore pins every stream-state estimate inside the
       sketch's error envelope of the EXACT distinct count (the q123
       flag pattern), across an initial run AND a checkpoint-resume;
-    - the state advances by staged swap (write aside, swap,
-      ``recover_staged_swap`` at fold start) — same data-before-
-      metadata ordering as scd2/cdc maintenance.
+    - the state advances by ``readers.publish_snapshot`` (write
+      aside, swap, ``recover_staged_swap`` at fold start) — same
+      data-before-metadata ordering as scd2/cdc maintenance.
 
     100 TB posture: the state is days x ~KB sketch rows — independent
     of user cardinality; each fold shuffles only (day, sketch) partial
     aggregates (map-side combined), never user-grain rows. Trailing
     DAU/WAU/MAU reads are :func:`hll_rolling_estimates` over the state
     — 1/7/28 sketch merges per day, no re-scan of events."""
-    from batchprocessingetl_spark.sources.readers import (
-        fs_delete_strict,
-        fs_rename_strict,
-        path_exists,
-    )
 
-    ev = (
-        spark.readStream.schema(event_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        recover_staged_swap(spark, state_dir)
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         day_sk = (
             batch.select(
                 F.to_date(F.date_trunc("day", F.col(ts_col))).alias("day"),
@@ -1049,27 +1007,18 @@ def hll_rollup_stream(
             .groupBy("day")
             .agg(F.hll_sketch_agg(user_col, F.lit(lg_k)).alias("sk"))
         )
-        if path_exists(spark, state_dir):
-            day_sk = (
-                spark.read.parquet(state_dir)
-                .unionByName(day_sk)
-                .groupBy("day")
-                .agg(F.hll_union_agg("sk").alias("sk"))
-            )
-        state = day_sk.localCheckpoint(eager=True)
-        tmp = state_dir.rstrip("/") + ".staging"
-        state.write.mode("overwrite").parquet(tmp)
-        if path_exists(spark, state_dir):
-            fs_delete_strict(spark, state_dir)
-        fs_rename_strict(spark, tmp, state_dir)
+        if prior is None:
+            return day_sk
+        return (
+            prior.unionByName(day_sk)
+            .groupBy("day")
+            .agg(F.hll_union_agg("sk").alias("sk"))
+        )
 
-    q = (
-        ev.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_snapshot(
+        spark, source_dir, event_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def hll_rolling_estimates(
@@ -1129,22 +1078,8 @@ def bitmap_rollup_stream(
     never rescanned. For very large id spaces, partition ``state_dir``
     by word_idx range and rewrite only touched partitions — the fold
     algebra is unchanged."""
-    from batchprocessingetl_spark.sources.readers import (
-        fs_delete_strict,
-        fs_rename_strict,
-        path_exists,
-    )
 
-    ev = (
-        spark.readStream.schema(event_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        recover_staged_swap(spark, state_dir)
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         words = (
             batch.select(
                 F.to_date(F.date_trunc("day", F.col(ts_col))).alias("day"),
@@ -1154,27 +1089,18 @@ def bitmap_rollup_stream(
             .groupBy("day", "word_idx")
             .agg(F.bit_or("bit").alias("word"))
         )
-        if path_exists(spark, state_dir):
-            words = (
-                spark.read.parquet(state_dir)
-                .unionByName(words)
-                .groupBy("day", "word_idx")
-                .agg(F.bit_or("word").alias("word"))
-            )
-        state = words.localCheckpoint(eager=True)
-        tmp = state_dir.rstrip("/") + ".staging"
-        state.write.mode("overwrite").parquet(tmp)
-        if path_exists(spark, state_dir):
-            fs_delete_strict(spark, state_dir)
-        fs_rename_strict(spark, tmp, state_dir)
+        if prior is None:
+            return words
+        return (
+            prior.unionByName(words)
+            .groupBy("day", "word_idx")
+            .agg(F.bit_or("word").alias("word"))
+        )
 
-    q = (
-        ev.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_snapshot(
+        spark, source_dir, event_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def bitmap_distinct_daily(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1298,18 +1224,11 @@ def histogram_quantile_stream(
     quantiles that land in-range. State is n_bins × epochs rows (KBs);
     the value stream is never rescanned. At 100 TB the same fold runs
     per key group with bins as a column."""
-    ev = (
-        spark.readStream.schema(event_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
     width = (hi - lo) / n_bins
 
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame) -> DataFrame:
         v = F.col(value_col)
-        bins = (
+        return (
             batch.select(
                 F.when(v < F.lit(lo), F.lit(-1))
                 .when(v > F.lit(hi), F.lit(n_bins))
@@ -1325,17 +1244,11 @@ def histogram_quantile_stream(
             .groupBy("bin")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        bins.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
-        )
 
-    q = (
-        ev.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_epochs(
+        spark, source_dir, event_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def histogram_quantiles(
@@ -1408,34 +1321,21 @@ def ivm_revenue_stream(
     one-shot batch join-aggregate EXACTLY, which the test pins across
     drops and a checkpoint-resume. History is never rescanned; each
     fold touches its delta plus the broadcast dim."""
-    lines = (
-        spark.readStream.schema(line_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
     acc = "decimal(28,6)"
 
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame) -> DataFrame:
         rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(acc)
-        partial = (
+        return (
             batch.select("l_orderkey", rev.alias("__r"))
             .join(F.broadcast(dim_df), "l_orderkey")
             .groupBy("n_name")
             .agg(F.sum("__r").alias("revenue"), F.count(F.lit(1)).alias("n_lines"))
         )
-        partial.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
-        )
 
-    q = (
-        lines.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_epochs(
+        spark, source_dir, line_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def ivm_revenue_read(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -1486,22 +1386,7 @@ def kmv_rollup_stream(
     standard KMV pruning, same note as q203."""
     from pyspark.sql.window import Window as W
 
-    from batchprocessingetl_spark.sources.readers import (
-        fs_delete_strict,
-        fs_rename_strict,
-        path_exists,
-    )
-
-    ev = (
-        spark.readStream.schema(event_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        recover_staged_swap(spark, state_dir)
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame, prior: DataFrame | None) -> DataFrame:
         cand = batch.select(
             F.to_date(F.date_trunc("day", F.col(ts_col))).alias("day"),
             F.conv(
@@ -1516,28 +1401,19 @@ def kmv_rollup_stream(
             .cast("long")
             .alias("h"),
         ).distinct()
-        if path_exists(spark, state_dir):
-            cand = spark.read.parquet(state_dir).unionByName(cand).distinct()
+        if prior is not None:
+            cand = prior.unionByName(cand).distinct()
         wd = W.partitionBy("day").orderBy("h")
-        state = (
+        return (
             cand.withColumn("rk", F.row_number().over(wd))
             .filter(F.col("rk") <= k)
             .select("day", "h")
-            .localCheckpoint(eager=True)
         )
-        tmp = state_dir.rstrip("/") + ".staging"
-        state.write.mode("overwrite").parquet(tmp)
-        if path_exists(spark, state_dir):
-            fs_delete_strict(spark, state_dir)
-        fs_rename_strict(spark, tmp, state_dir)
 
-    q = (
-        ev.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_snapshot(
+        spark, source_dir, event_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def kmv_distinct_daily(
@@ -1896,27 +1772,11 @@ def cms_rollup_stream(
     raw stream again."""
     from batchprocessingetl_spark.operators.sketches import cms_build
 
-    ev = (
-        spark.readStream.schema(event_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
+    _fold_epochs(
+        spark, source_dir, event_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger,
+        lambda batch: cms_build(batch, F.col(key_col), depth, width),
     )
-
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        cells = cms_build(batch, F.col(key_col), depth, width)
-        cells.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
-        )
-
-    q = (
-        ev.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def cms_cells_collapse(partials: DataFrame) -> DataFrame:
@@ -1972,28 +1832,20 @@ def ams_f2_rollup_stream(
     state is 16 rows per epoch (bytes). Signs are md5 parity of
     "ams{i}:{key}" — the exact q345 convention, so batch and stream
     share their oracle algebra."""
-    ev = (
-        spark.readStream.schema(event_schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(source_dir)
-    )
+    from batchprocessingetl_spark.operators.sketches import ams_sign
 
-    def fold(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def step(batch: DataFrame) -> DataFrame:
         counts = (
             batch.filter(F.col(key_col).isNotNull())
             .groupBy(key_col)
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        from batchprocessingetl_spark.operators.sketches import ams_sign
-
         est = counts.select(
             key_col,
             "c",
             F.explode(F.sequence(F.lit(0), F.lit(n_estimators - 1))).alias("i"),
         )
-        partials = (
+        return (
             est.select(
                 "i",
                 (ams_sign(F.col("i"), F.col(key_col)) * F.col("c")).alias("sc"),
@@ -2001,17 +1853,11 @@ def ams_f2_rollup_stream(
             .groupBy("i")
             .agg(F.sum("sc").alias("s"))
         )
-        partials.write.mode("overwrite").parquet(
-            state_dir.rstrip("/") + f"/epoch={int(epoch_id)}"
-        )
 
-    q = (
-        ev.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _fold_epochs(
+        spark, source_dir, event_schema, state_dir, checkpoint_dir,
+        max_files_per_trigger, step,
     )
-    q.awaitTermination()
 
 
 def ams_f2_estimate_from_partials(

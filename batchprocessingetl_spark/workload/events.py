@@ -56,19 +56,24 @@ def q21_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("session_seq", F.sum("new_session").over(by_user))
     )
-    duration_sec = F.round(
-        (F.max(F.unix_micros(F.col("ts"))) - F.min(F.unix_micros(F.col("ts")))) / 1_000_000.0, 1
-    )
+    # both roundings (session duration, then the per-user average) are
+    # half-up on integer deciseconds: a double quotient would leave
+    # x.x5 ties to each engine's own tie-breaking
+    span_us = F.max(F.unix_micros(F.col("ts"))) - F.min(F.unix_micros(F.col("ts")))
     return (
         sessions.groupBy("user_id", "session_seq")
-        .agg(F.count(F.lit(1)).alias("n_events"), duration_sec.alias("duration_sec"))
+        .agg(F.count(F.lit(1)).alias("n_events"), span_us.alias("span_us"))
         .groupBy("user_id")
         .agg(
             F.count(F.lit(1)).alias("n_sessions"),
             F.max("n_events").alias("max_session_events"),
-            F.round(F.sum(F.col("duration_sec").cast("decimal(28,6)")).cast("double") / F.count(F.lit(1)), 1).alias(
-                "avg_session_sec"
-            ),
+            F.sum(F.expr("(span_us + 50000) div 100000")).alias("sum_ds"),
+        )
+        .select(
+            "user_id",
+            "n_sessions",
+            "max_session_events",
+            (F.expr("(2 * sum_ds + n_sessions) div (2 * n_sessions)") / 10.0).alias("avg_session_sec"),
         )
         .orderBy("user_id")
     )
@@ -1385,14 +1390,14 @@ _ORACLE_ALL = {
         ), per_session AS (
             SELECT user_id, session_seq,
                    COUNT(*) AS n_events,
-                   ROUND((epoch_us(MAX(ts)) - epoch_us(MIN(ts))) / 1000000.0, 1) AS duration_sec
+                   (epoch_us(MAX(ts)) - epoch_us(MIN(ts)) + 50000) // 100000 AS duration_ds
             FROM sessioned
             GROUP BY user_id, session_seq
         )
         SELECT user_id,
                COUNT(*) AS n_sessions,
                MAX(n_events) AS max_session_events,
-               ROUND(CAST(SUM(CAST(duration_sec AS DECIMAL(28,6))) AS DOUBLE) / COUNT(*), 1)
+               CAST((2 * SUM(duration_ds) + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 10
                    AS avg_session_sec
         FROM per_session
         GROUP BY user_id

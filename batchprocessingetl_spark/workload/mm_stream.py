@@ -20,7 +20,6 @@ already pins the window semantics).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -63,13 +62,13 @@ def q61_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, stream it back with availableNow + checkpoint, aggregate
     into tumbling windows, and read the durable snapshot back.
 
-    Lifecycle: one work dir per Spark application (keyed by
-    applicationId), wiped and recreated on each invocation — repeated
-    runs in a session leave no orphan staging/checkpoint dirs, and the
-    result round-trips through the parquet snapshot sink instead of a
-    global temp-view side channel."""
-    import shutil
-
+    Lifecycle: one work dir per Spark application
+    (``session.work_dir``, keyed by applicationId), wiped and recreated
+    on each invocation — repeated runs in a session leave no orphan
+    staging/checkpoint dirs, and the result round-trips through the
+    parquet snapshot sink instead of a global temp-view side channel."""
+    from batchprocessingetl_spark.session import work_dir
+    from batchprocessingetl_spark.sources.readers import fs_delete
     from batchprocessingetl_spark.streaming.jobs import (
         run_snapshot_to_parquet,
         stream_events,
@@ -77,10 +76,8 @@ def q61_streaming_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = load_table(spark, sf_dir, "events")
-    work = os.path.join(
-        tempfile.gettempdir(), f"bpetl_stream_{spark.sparkContext.applicationId}"
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = work_dir(spark, "stream")
+    fs_delete(spark, work)
     src = os.path.join(work, "events")
     out = os.path.join(work, "out")
     ev.write.mode("overwrite").parquet(src)

@@ -271,18 +271,16 @@ def q93_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression). The crash-mid-swap recovery path is pytest-pinned in
     tests/test_merge.py."""
     import os
-    import shutil
-    import tempfile
 
     from batchprocessingetl_spark.operators.merge import merge_into
+    from batchprocessingetl_spark.session import work_dir
+    from batchprocessingetl_spark.sources.readers import fs_delete
 
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", F.round("c_acctbal", 2).alias("acctbal")
     )
-    work = os.path.join(
-        tempfile.gettempdir(), f"bpetl_merge_{spark.sparkContext.applicationId}"
-    )
-    shutil.rmtree(work, ignore_errors=True)
+    work = work_dir(spark, "merge")
+    fs_delete(spark, work)
     target_path = os.path.join(work, "target")
     cust.filter(F.col("c_custkey") % 3 != 0).write.parquet(target_path)
     source = cust.filter(F.col("c_custkey") % 2 == 0).withColumn(

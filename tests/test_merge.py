@@ -1,7 +1,8 @@
 """MERGE-style transactional upsert (operators/merge.py): semantics of
-every when_matched/when_not_matched combination, the staged-swap crash
-contract (a failed write OR a crash between the swap renames never
-loses the live snapshot), and the source key-uniqueness guard."""
+every when_matched/when_not_matched combination, the snapshot-publish
+crash contract (a failed write never touches the live snapshot; a
+crash between the swap's delete and rename is rolled forward by the
+next merge), URI-scheme safety, and the source key-uniqueness guard."""
 
 from __future__ import annotations
 
@@ -10,11 +11,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from batchprocessingetl_spark.operators.merge import (
-    merge_into,
-    merge_plan,
-    recover_merge_target,
-)
+from batchprocessingetl_spark.operators.merge import merge_into, merge_plan
 
 
 def _frames(spark):
@@ -65,14 +62,13 @@ def test_merge_into_publishes_atomically(spark, tmp_path):
     target, source = _frames(spark)
     path = str(tmp_path / "t")
     target.write.parquet(path)
-    n = merge_into(spark, path, source, ["k"])
+    n = merge_into(spark, "file://" + path, source, ["k"])  # any URI scheme
     assert n == 4
     assert _rows(spark.read.parquet(path)) == [
         (1, "a", 10.0), (2, "B", 200.0), (3, "c", 30.0), (4, "d", 40.0),
     ]
     # no swap debris
-    assert not os.path.exists(path + ".merge.tmp")
-    assert not os.path.exists(path + ".merge.bak")
+    assert sorted(os.listdir(tmp_path)) == ["t"]
 
 
 def test_failed_staged_write_leaves_snapshot_intact(spark, tmp_path):
@@ -89,27 +85,29 @@ def test_failed_staged_write_leaves_snapshot_intact(spark, tmp_path):
     _, source = _frames(spark)
     merge_into(spark, path, source, ["k"])
     assert len(_rows(spark.read.parquet(path))) == 4
+    assert sorted(os.listdir(tmp_path)) == ["t"]
 
 
 def test_crash_between_swap_renames_is_recoverable(spark, tmp_path):
-    """Simulate the narrowest crash window: the staged write finished
-    and the live snapshot was renamed to .merge.bak, but the process
-    died before the tmp rename. The next merge_into must first restore
-    the old snapshot and then complete against it."""
+    """Simulate the narrowest crash window: the merged snapshot was
+    fully staged and the live snapshot deleted, but the process died
+    before the rename. The next merge_into must first adopt the staged
+    snapshot (roll forward) and then complete against it."""
     target, source = _frames(spark)
     path = str(tmp_path / "t")
-    target.write.parquet(path)
-    # manufacture the mid-swap state
-    os.rename(path, path + ".merge.bak")
+    # manufacture the mid-swap state: staged write complete, live gone
+    merge_plan(target, source, ["k"]).write.parquet(path + ".staging")
     assert not os.path.exists(path)
-    assert recover_merge_target(path)  # restores the old snapshot
-    assert _rows(spark.read.parquet(path)) == _rows(target)
-
-    os.rename(path, path + ".merge.bak")  # again, now via merge_into itself
-    n = merge_into(spark, path, source, ["k"])
-    assert n == 4
-    assert (2, "B", 200.0) in _rows(spark.read.parquet(path))
-    assert not os.path.exists(path + ".merge.bak")
+    # the retried MERGE (plus one new key) completes on top of the
+    # adopted snapshot; re-applying the source rows changes nothing
+    more = source.unionByName(
+        spark.createDataFrame([(5, "e", 50.0)], "k long, name string, v double")
+    )
+    assert merge_into(spark, path, more, ["k"]) == 5
+    assert _rows(spark.read.parquet(path)) == [
+        (1, "a", 10.0), (2, "B", 200.0), (3, "c", 30.0), (4, "d", 40.0), (5, "e", 50.0),
+    ]
+    assert sorted(os.listdir(tmp_path)) == ["t"]
 
 
 def test_duplicate_source_keys_rejected(spark, tmp_path):

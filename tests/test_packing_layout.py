@@ -4,6 +4,7 @@ range-sorted parquet layout writer (sources/readers.py)."""
 from __future__ import annotations
 
 import glob
+import os
 
 import pyspark.sql.functions as F
 
@@ -100,12 +101,14 @@ def test_compact_parquet_reduces_file_count_preserving_rows(spark, tmp_path):
     before = spark.read.parquet(path)
     n_rows, checksum = before.count(), before.agg(F.sum("v")).first()[0]
 
-    n_out = compact_parquet(spark, path, target_file_bytes=1 << 30)
+    # any URI scheme: the swap goes through the Hadoop FS API
+    n_out = compact_parquet(spark, "file://" + path, target_file_bytes=1 << 30)
     files_after = len(glob.glob(f"{path}/*.parquet"))
     assert n_out == 1 and files_after == 1  # tiny dataset -> one file
     after = spark.read.parquet(path)
     assert after.count() == n_rows
     assert after.agg(F.sum("v")).first()[0] == checksum
+    assert sorted(os.listdir(tmp_path)) == ["frag"]  # no staging debris
 
 
 def test_compact_parquet_failed_write_leaves_original(spark, tmp_path, monkeypatch):
@@ -130,6 +133,20 @@ def test_compact_parquet_failed_write_leaves_original(spark, tmp_path, monkeypat
         readers.compact_parquet(spark, path, target_file_bytes=1 << 30)
     monkeypatch.undo()
     assert spark.read.parquet(path).count() == 100  # original intact
+
+
+def test_compact_parquet_adopts_snapshot_staged_before_crash(spark, tmp_path):
+    """Crash window of the swap: the live dir was deleted after a
+    complete staged write, before the rename. The next compaction
+    adopts the staged snapshot instead of failing on a missing path."""
+    from batchprocessingetl_spark.sources.readers import compact_parquet
+
+    path = str(tmp_path / "frag")
+    spark.range(0, 100).repartition(3).write.parquet(path + ".staging")
+    assert not os.path.exists(path)
+    assert compact_parquet(spark, path, target_file_bytes=1 << 30) == 1
+    assert sorted(r.id for r in spark.read.parquet(path).collect()) == list(range(100))
+    assert sorted(os.listdir(tmp_path)) == ["frag"]
 
 
 def test_chunk_passages_windows_and_overlap(spark):

@@ -99,19 +99,20 @@ def test_processing_time_trigger_makes_incremental_progress(spark, tmp_path):
 
 def test_q61_rerun_leaves_single_session_workdir(spark):
     import os
-    import tempfile
 
+    from batchprocessingetl_spark.session import work_dir
     from batchprocessingetl_spark.workload.mm_stream import q61_streaming_hourly
     from tests.conftest import SF_SMOKE
 
-    tmp = tempfile.gettempdir()
-    before = {d for d in os.listdir(tmp) if d.startswith("bpetl_stream_")}
+    own = work_dir(spark, "stream")
+    root = os.path.dirname(own)
+    before = {d for d in os.listdir(root) if d.startswith("bpetl_stream_")}
     r1 = q61_streaming_hourly(spark, SF_SMOKE).count()
     r2 = q61_streaming_hourly(spark, SF_SMOKE).count()
     assert r1 == r2 > 0
-    after = {d for d in os.listdir(tmp) if d.startswith("bpetl_stream_")}
+    after = {d for d in os.listdir(root) if d.startswith("bpetl_stream_")}
     # two invocations create at most ONE dir (per-application, reused)
-    assert after - before <= {f"bpetl_stream_{spark.sparkContext.applicationId}"}
+    assert after - before <= {os.path.basename(own)}
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):

@@ -337,6 +337,37 @@ def test_funnel_strict_sequence_semantics(spark, tmp_path):
     assert out["3_purchase"]["avg_hours_from_entry"] == 3.0
 
 
+def test_q21_session_average_rounds_ties_half_up(spark, tmp_path):
+    """Six sessions of 1.05 s (itself a tie: 1.1) and 5 x 2.0 s sum to
+    11.1 s, an average of exactly 1.85 s. Half-up in integer
+    deciseconds gives 1.9 in the query AND its DuckDB oracle; rounding
+    the double quotient 11.1 / 6 = 1.8499999999999999 gave 1.8 in
+    Spark and 1.9 in DuckDB."""
+    import datetime as dt
+
+    import duckdb
+
+    from batchprocessingetl_spark.workload.events import _ORACLE_ALL, q21_sessionization
+
+    base = dt.datetime(2024, 1, 1)
+    rows = []
+    for i, dur_us in enumerate([1_050_000] + [2_000_000] * 5):
+        start = base + dt.timedelta(hours=i)  # 1 h apart: six sessions
+        for j, t in enumerate((start, start + dt.timedelta(microseconds=dur_us))):
+            rows.append((2 * i + j, t, 7, "view", 1.0, "{}"))
+    spark.createDataFrame(
+        rows, "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
+    ).write.parquet(f"{tmp_path}/events.parquet")
+
+    got = [tuple(r) for r in q21_sessionization(spark, str(tmp_path)).collect()]
+    assert got == [(7, 6, 2, 1.9)]
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet/*.parquet')"
+    )
+    assert con.execute(_ORACLE_ALL["q21_sessionization"]).fetchall() == got
+
+
 def test_group_ols_recovers_known_line(spark):
     from pyspark.sql import functions as F
 

@@ -106,8 +106,8 @@ def work_dir(spark: SparkSession, component: str) -> str:
     every executor can read the materialized parquet; locally it
     defaults to the system tempdir. Always suffixed with the
     applicationId so concurrent sessions never collide, and safe to
-    rmtree on entry (re-runs within one app overwrite their own
-    store)."""
+    delete on entry with ``readers.fs_delete`` (re-runs within one app
+    overwrite their own store; any URI scheme)."""
     import tempfile
 
     root = os.environ.get("SPARK_GRAFT_WORK_DIR") or tempfile.gettempdir()

@@ -276,17 +276,6 @@ def write_jdbc(
     writer.mode(mode).save()
 
 
-def path_exists(spark: SparkSession, path: str) -> bool:
-    """S9 existence probe via a metadata-only read attempt."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except AnalysisException:
-        return False
-
-
 def _hadoop_fs(spark: SparkSession, path: str):
     """(FileSystem, Path) pair for ``path`` via the Hadoop FS gateway —
     works for any configured URI scheme (file://, hdfs://, s3a://),

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from batchprocessingetl_spark.sources.readers import (
-    path_exists,
+    fs_exists,
     publish_snapshot,
     recover_staged_swap,
 )
@@ -452,7 +452,7 @@ def _fold_snapshot(
         recover_staged_swap(spark, state_dir)
         if batch.isEmpty():
             return
-        prior = spark.read.parquet(state_dir) if path_exists(spark, state_dir) else None
+        prior = spark.read.parquet(state_dir) if fs_exists(spark, state_dir) else None
         publish_snapshot(spark, step(batch, prior), state_dir)
 
     _drain_files(spark, source_dir, schema, checkpoint_dir, max_files_per_trigger, fold)
@@ -714,7 +714,7 @@ def near_dup_dedup_stream(
         # decided in a previous (possibly replayed) epoch — re-deciding
         # it would double-append. Its band rows still participate via
         # the store side, so dropped docs re-resolve identically.
-        if path_exists(spark, kept_dir):
+        if fs_exists(spark, kept_dir):
             kept_ids = spark.read.parquet(kept_dir).select(id_col)
             batch = batch.join(kept_ids, id_col, "left_anti")
         batch = batch.localCheckpoint(eager=True)
@@ -722,7 +722,7 @@ def near_dup_dedup_stream(
             return
         sigs = minhash_signatures(batch, id_col, text_col, n_hashes, n)
         bbands = band_signatures(sigs, bands).localCheckpoint(eager=True)
-        have_store = path_exists(spark, bands_dir)
+        have_store = fs_exists(spark, bands_dir)
         store_bands = (
             spark.read.parquet(bands_dir)
             if have_store
@@ -734,7 +734,7 @@ def near_dup_dedup_stream(
         # shingles from kept_dir (candidate ids only reach the join)
         b_sh = shingle_frame(batch, id_col, text_col, n)
         sh_all = b_sh
-        if have_store and path_exists(spark, kept_dir):
+        if have_store and fs_exists(spark, kept_dir):
             sh_all = b_sh.unionByName(
                 shingle_frame(spark.read.parquet(kept_dir), id_col, text_col, n)
             )
@@ -807,7 +807,7 @@ def near_dup_dedup_stream(
 
         old_kept = (
             spark.read.parquet(kept_dir)
-            if path_exists(spark, kept_dir)
+            if fs_exists(spark, kept_dir)
             else None
         )
         merged_kept = new_kept if old_kept is None else old_kept.unionByName(new_kept)

@@ -1,18 +1,16 @@
 """Query workload registry.
 
-Each submodule contributes ``QUERIES`` / ``EXTRA_QUERIES`` (name ->
-callable(spark, sf_dir) -> DataFrame) and ``ORACLE`` / ``EXTRA_ORACLE``
-(name -> equivalent ANSI SQL for DuckDB). The driver's CORRECTNESS run
-checks exactly the ~50 entries returned by ``collect_queries()``; the
-remaining declared surface stays first-class via
+Each submodule defines two dicts: ``QUERIES`` (name -> callable(spark,
+sf_dir) -> DataFrame) and ``ORACLE`` (name -> equivalent ANSI SQL for
+DuckDB). To add a query, put it in its module's ``QUERIES`` and its
+oracle in the same module's ``ORACLE``; a name may be defined in only
+one module. The ``_REGISTERED`` tuple below is the only place the
+registered/extra split exists: the CORRECTNESS registry served by
+``__spark_entry__.queries()`` is exactly the ~50 names it lists
+(``collect_queries()``), and the rest stay first-class via
 ``collect_extra_queries()`` (pytest + tools/check_oracle.py --extra).
-
-Since round 7 the registered/EXTRA split is decided HERE by the
-``_REGISTERED`` tuple (insertion order = the driver's check order),
-not by which per-module dict a query happens to live in — a rotation
-is now a one-line edit per query, and the per-module dicts only need
-to be duplicate-free. docs/COVERAGE.md records each round's rotation
-and the retained registered evidence per displaced family.
+Registering or rotating a query is one line in ``_REGISTERED``;
+docs/COVERAGE.md keeps the rotation ledger.
 """
 
 from __future__ import annotations
@@ -49,22 +47,9 @@ _MODULES = (
     _round13,
 )
 
-# Round-13 rotation (VERDICT r12 #1, executed exactly as the
-# docs/COVERAGE.md rotation ledger schedules it). Newly rotated IN
-# (41): the final 26 never-checked rows — after this round EVERY
-# query declared through round 10 has >=1 driver CORRECTNESS row —
-# q38 (now full-value-oracled via the md5 simhash, VERDICT r12 #3),
-# q51, q56, q61 (rows-only by design: streaming), q173, q181, q184,
-# q189, q193, q201, q202, q205, q210-q213, q215, q217-q219, q222,
-# q223, q226, q227, q230, q231 — plus the complete round-11
-# embedding-diagnostics/time-series shelf q332-q344 (13) and the
-# head of the round-12 shelf (q345 AMS F2, q346 ANN recall audit).
-# Displaced to EXTRA (41): the 26 round-12 first-proof rows
-# (q291-q301, q191, q183, q194, q197, q224, q169-q172, q179/q180,
-# q199/q200, q209, q229), the 14 q302-q331 second-proof retainers
-# (now twice-proven), and q187 (thrice-proven clustering retainer).
-# The 9 standing anchors stay. q347-q368 fill round 14 alongside
-# the second proofs the ledger schedules there.
+# The registered names, in CORRECTNESS check order. Register
+# or rotate a query with one line here; docs/COVERAGE.md keeps the
+# per-round rotation ledger and each displaced family's evidence.
 _REGISTERED = (
     # final never-checked rows — first driver proof (26)
     "q38_simhash_signatures",
@@ -123,28 +108,23 @@ _REGISTERED = (
 )
 
 
-def _merged_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+def _merged(attr: str) -> dict:
+    """One module's ``attr`` dict after another, in ``_MODULES`` order;
+    a name defined in two modules is an error, never a silent
+    overwrite."""
+    out: dict = {}
     for mod in _MODULES:
-        for dct in (mod.QUERIES, getattr(mod, "EXTRA_QUERIES", {})):
-            overlap = set(out) & set(dct)
-            if overlap:
-                raise ValueError(f"duplicate query names: {overlap}")
-            out.update(dct)
-    return out
-
-
-def _merged_oracle() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(getattr(mod, "ORACLE", {}))
-        out.update(getattr(mod, "EXTRA_ORACLE", {}))
+        dct = getattr(mod, attr)
+        overlap = set(out) & set(dct)
+        if overlap:
+            raise ValueError(f"duplicate {attr} names: {sorted(overlap)}")
+        out.update(dct)
     return out
 
 
 def collect_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """The driver-registered rows, in check order (see _REGISTERED)."""
-    merged = _merged_queries()
+    merged = _merged("QUERIES")
     missing = [n for n in _REGISTERED if n not in merged]
     if missing:
         raise ValueError(f"_REGISTERED names not defined anywhere: {missing}")
@@ -152,7 +132,7 @@ def collect_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def collect_oracle() -> dict[str, str]:
-    oracles = _merged_oracle()
+    oracles = _merged("ORACLE")
     return {n: oracles[n] for n in _REGISTERED if n in oracles}
 
 
@@ -160,9 +140,9 @@ def collect_extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame
     """Queries kept out of the driver registry (its CORRECTNESS run
     checks ~50 entries/round) but still first-class, pytest-run surface."""
     registered = set(_REGISTERED)
-    return {n: fn for n, fn in _merged_queries().items() if n not in registered}
+    return {n: fn for n, fn in _merged("QUERIES").items() if n not in registered}
 
 
 def collect_extra_oracle() -> dict[str, str]:
     registered = set(_REGISTERED)
-    return {n: sql for n, sql in _merged_oracle().items() if n not in registered}
+    return {n: sql for n, sql in _merged("ORACLE").items() if n not in registered}

@@ -133,13 +133,6 @@ def q71_sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES = {
-    "q67_decontamination": q67_decontamination,
-    "q68_repetition_signals": q68_repetition_signals,
-    "q69_pii_redaction": q69_pii_redaction,
-    "q70_bloom_incremental_dedup": q70_bloom_incremental_dedup,
-}
-
 CHUNK_TOKENS = 32
 CHUNK_OVERLAP = 8
 
@@ -652,9 +645,11 @@ def q181_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# EXTRA (out of the ~50-entry driver budget): value-pinned locally by
-# tools/check_oracle.py --extra.
-EXTRA_QUERIES = {
+QUERIES = {
+    "q67_decontamination": q67_decontamination,
+    "q68_repetition_signals": q68_repetition_signals,
+    "q69_pii_redaction": q69_pii_redaction,
+    "q70_bloom_incremental_dedup": q70_bloom_incremental_dedup,
     "q181_ngram_novelty": q181_ngram_novelty,
     "q136_negative_pairs": q136_negative_pairs,
     "q148_token_dropout_augment": q148_token_dropout_augment,
@@ -672,7 +667,17 @@ EXTRA_QUERIES = {
 
 _CHUNK_STRIDE = CHUNK_TOKENS - CHUNK_OVERLAP
 
-EXTRA_ORACLE = {
+_TOKENS_SQL = T_ops.TOKENS_SQL_DUCKDB.format(col="text")
+_TOKENS_LTEXT_SQL = T_ops.TOKENS_SQL_DUCKDB.format(col="ltext")
+
+# distinct word 3-grams (mirrors operators/dedup.py shingles at n=3)
+_GRAMS3_SQL = (
+    "CASE WHEN len({toks}) >= 3 THEN list_distinct(list_transform("
+    "range(1, len({toks}) - 1), i -> {toks}[i] || ' ' || {toks}[i+1] || ' ' || {toks}[i+2]))"
+    " ELSE [] END"
+)
+
+ORACLE = {
     "q181_ngram_novelty": f"""
         WITH toks AS (
             SELECT doc_id, doc_id % {NOVELTY_MOD} < {NOVELTY_TRAIN_LT} AS is_train,
@@ -961,19 +966,6 @@ EXTRA_ORACLE = {
         FROM c
         ORDER BY doc_id
     """,
-}
-
-_TOKENS_SQL = T_ops.TOKENS_SQL_DUCKDB.format(col="text")
-_TOKENS_LTEXT_SQL = T_ops.TOKENS_SQL_DUCKDB.format(col="ltext")
-
-# distinct word 3-grams (mirrors operators/dedup.py shingles at n=3)
-_GRAMS3_SQL = (
-    "CASE WHEN len({toks}) >= 3 THEN list_distinct(list_transform("
-    "range(1, len({toks}) - 1), i -> {toks}[i] || ' ' || {toks}[i+1] || ' ' || {toks}[i+2]))"
-    " ELSE [] END"
-)
-
-ORACLE = {
     "q67_decontamination": f"""
         WITH sh AS (
             SELECT doc_id, {_GRAMS3_SQL.format(toks=_TOKENS_SQL)} AS sh
@@ -1054,86 +1046,12 @@ ORACLE = {
     """,
 }
 
-# Round 3 rotation (VERDICT r2 #1): the packing/chunking/sampling
-# family moves into the driver registry so it gains driver-side
-# CORRECTNESS rows; displaced shape-duplicates live in
-# workload/relational.py's EXTRA_QUERIES.
-# Round 4 rotation (VERDICT r3 #1): boilerplate detect+strip and
-# temperature resampling move in; q73 (chunking — the assembly family
-# keeps q71's registered packing row) and q76 (A-ES weighted draw —
-# the sampling family keeps q83's registered temperature resample)
-# move back out, both still value-pinned by check_oracle --extra.
-for _name in (
-    "q71_sequence_packing",
-    "q82_boilerplate_spans",
-    "q83_temperature_resample",
-    "q84_strip_boilerplate",
-):
-    QUERIES[_name] = EXTRA_QUERIES.pop(_name)
-    ORACLE[_name] = EXTRA_ORACLE.pop(_name)
-
-# Round 4 mid-round rotation: q68 (repetition signals) and q69 (PII
-# redaction) move out to make room for the round-4 net-new families —
-# the curation family line keeps q67 (decontamination) and q70 (bloom
-# incremental dedup) registered, and q68/q69 stay value-pinned by
-# check_oracle --extra at two scale factors plus the q64 composite.
-for _name in ("q68_repetition_signals", "q69_pii_redaction"):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)
-    EXTRA_ORACLE[_name] = ORACLE.pop(_name)
-
-# Round 5 rotation (VERDICT r4 #1): the per-group quantile gate (q116)
-# moves in; q67 (decontamination — the curation family keeps q70 bloom
-# incremental dedup + q82/q84 boilerplate registered, and the
-# broadcast-semi decontam join stays pinned by tests/test_curation.py)
-# and q83 (temperature resample — the sampling family's registered row
-# moves to q118's leakage-free cluster-keyed split) move out, both
-# still value-pinned by check_oracle --extra at two scale factors.
-QUERIES["q116_source_quality_gate"] = EXTRA_QUERIES.pop("q116_source_quality_gate")
-ORACLE["q116_source_quality_gate"] = EXTRA_ORACLE.pop("q116_source_quality_gate")
-for _name in ("q67_decontamination", "q83_temperature_resample"):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)
-    EXTRA_ORACLE[_name] = ORACLE.pop(_name)
-
-# Round 6 rotation (VERDICT r5 #1): the round-5 sampling/augmentation
-# family gains driver rows — q136 negative-pair sampling, q148 token
-# dropout, q149 winsorization, q151 quota allocation, q152 BPE merge
-# candidates. Displaced, each with retained registered evidence
-# (docs/COVERAGE.md "Round 6 rotation"): q70 bloom incremental dedup
-# (the incremental-dedup family's registered row moves to q124's
-# LSH-band-store protocol; the bloom bit_or/popcount path stays pinned
-# by tests/test_curation.py and check_oracle --extra), q82/q84
-# boilerplate detect+strip (no registered sibling uses the positional
-# n-gram machinery, but both stay value-pinned by check_oracle --extra
-# at two scale factors and tests/test_curation.py pins span mining +
-# ordered reassembly), and q116 per-group quantile gate (q149
-# registers the SAME quantile-gate shape as a winsorize instead of a
-# filter). q71 sequence packing keeps the assembly family's registered
-# row — no incoming sibling.
-for _name in (
-    "q136_negative_pairs",
-    "q148_token_dropout_augment",
-    "q149_winsorize_by_source",
-    "q151_quota_allocation_sample",
-    "q152_bpe_merge_candidates",
-):
-    QUERIES[_name] = EXTRA_QUERIES.pop(_name)
-    ORACLE[_name] = EXTRA_ORACLE.pop(_name)
-for _name in (
-    "q70_bloom_incremental_dedup",
-    "q82_boilerplate_spans",
-    "q84_strip_boilerplate",
-    "q116_source_quality_gate",
-):
-    EXTRA_QUERIES[_name] = QUERIES.pop(_name)
-    EXTRA_ORACLE[_name] = ORACLE.pop(_name)
-
-# Round 6 net-new (VERDICT r5 #4): iterated BPE merge training. EXTRA
-# until a future rotation; value-pinned by check_oracle --extra and
-# property-tested against the pure-Python replay.
-EXTRA_QUERIES["q182_bpe_train_merges"] = q182_bpe_train_merges
-EXTRA_ORACLE["q182_bpe_train_merges"] = _q182_oracle_sql(BPE_ROUNDS)
-EXTRA_QUERIES["q183_bpe_apply_compression"] = q183_bpe_apply_compression
-EXTRA_ORACLE["q183_bpe_apply_compression"] = _q183_oracle_sql(BPE_ROUNDS)
+# Iterated BPE merge training, property-tested against the pure-Python
+# replay.
+QUERIES["q182_bpe_train_merges"] = q182_bpe_train_merges
+ORACLE["q182_bpe_train_merges"] = _q182_oracle_sql(BPE_ROUNDS)
+QUERIES["q183_bpe_apply_compression"] = q183_bpe_apply_compression
+ORACLE["q183_bpe_apply_compression"] = _q183_oracle_sql(BPE_ROUNDS)
 
 
 DSIR_BUCKETS = 256
@@ -1243,8 +1161,8 @@ _DSIR_BUCKET_SQL = (
     "(('0x' || substr(md5({col}), 1, 15))::BIGINT % " + str(DSIR_BUCKETS) + ")"
 )
 
-EXTRA_QUERIES["q188_dsir_importance_select"] = q188_dsir_importance_select
-EXTRA_ORACLE["q188_dsir_importance_select"] = f"""
+QUERIES["q188_dsir_importance_select"] = q188_dsir_importance_select
+ORACLE["q188_dsir_importance_select"] = f"""
     WITH tp AS (
         SELECT doc_id, source,
                unnest(t) AS tok,
@@ -1413,8 +1331,8 @@ _Q200_GRAMS = (
     "i -> {t}[i] || ' ' || {t}[i + 1] || ' ' || {t}[i + 2]))"
 )
 
-EXTRA_QUERIES["q200_curation_funnel"] = q200_curation_funnel
-EXTRA_ORACLE["q200_curation_funnel"] = f"""
+QUERIES["q200_curation_funnel"] = q200_curation_funnel
+ORACLE["q200_curation_funnel"] = f"""
     WITH train AS (
         SELECT * FROM documents WHERE doc_id % {EVAL_MOD} <> 0
     ), ev AS (
@@ -1539,8 +1457,8 @@ def q201_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("n_tok") >= 2).orderBy("doc_id")
 
 
-EXTRA_QUERIES["q201_span_corruption"] = q201_span_corruption
-EXTRA_ORACLE["q201_span_corruption"] = f"""
+QUERIES["q201_span_corruption"] = q201_span_corruption
+ORACLE["q201_span_corruption"] = f"""
     WITH t AS (
         SELECT doc_id, {T_ops.TOKENS_SQL_DUCKDB.format(col="text")} AS toks
         FROM documents
@@ -1640,8 +1558,8 @@ def q202_batch_padding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-EXTRA_QUERIES["q202_batch_padding_efficiency"] = q202_batch_padding_efficiency
-EXTRA_ORACLE["q202_batch_padding_efficiency"] = f"""
+QUERIES["q202_batch_padding_efficiency"] = q202_batch_padding_efficiency
+ORACLE["q202_batch_padding_efficiency"] = f"""
     WITH lens AS (
         SELECT doc_id,
                ('0x' || substr(md5('bshard:' || doc_id::VARCHAR), 1, 15))::BIGINT
@@ -1714,8 +1632,8 @@ def q207_stratified_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q207_stratified_kfold"] = q207_stratified_kfold
-EXTRA_ORACLE["q207_stratified_kfold"] = f"""
+QUERIES["q207_stratified_kfold"] = q207_stratified_kfold
+ORACLE["q207_stratified_kfold"] = f"""
     WITH assigned AS (
         SELECT doc_id, lang, source,
                CAST((ROW_NUMBER() OVER (
@@ -1796,8 +1714,8 @@ def q214_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q214_js_divergence"] = q214_js_divergence
-EXTRA_ORACLE["q214_js_divergence"] = f"""
+QUERIES["q214_js_divergence"] = q214_js_divergence
+ORACLE["q214_js_divergence"] = f"""
     WITH binned AS (
         SELECT LEAST(FLOOR(n_chars / {JSD_BIN_WIDTH}), {JSD_MAX_BIN})::INT AS bin,
                CASE WHEN CAST(SUBSTR(source, 4, 10) AS INT) % 2 = 0
@@ -1901,8 +1819,8 @@ def q215_quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q215_quantile_normalization"] = q215_quantile_normalization
-EXTRA_ORACLE["q215_quantile_normalization"] = """
+QUERIES["q215_quantile_normalization"] = q215_quantile_normalization
+ORACLE["q215_quantile_normalization"] = """
     WITH gl AS (
         SELECT n_chars AS g_val,
                CAST(ROW_NUMBER() OVER (ORDER BY n_chars, doc_id) AS BIGINT)
@@ -1983,7 +1901,7 @@ def q224_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_ORACLE["q224_k_anonymity_audit"] = f"""
+ORACLE["q224_k_anonymity_audit"] = f"""
     WITH cust AS (
         SELECT c_nationkey AS nation,
                (CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) + {KANON_SHIFT}) // {KANON_BAND}
@@ -2009,7 +1927,7 @@ EXTRA_ORACLE["q224_k_anonymity_audit"] = f"""
     FROM classes
 """
 
-EXTRA_QUERIES["q224_k_anonymity_audit"] = q224_k_anonymity_audit
+QUERIES["q224_k_anonymity_audit"] = q224_k_anonymity_audit
 
 
 XS_NGRAM = 5  # shared-shingle width for the cross-source overlap
@@ -2055,7 +1973,7 @@ def q231_cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_ORACLE["q231_cross_source_overlap"] = f"""
+ORACLE["q231_cross_source_overlap"] = f"""
     WITH tok AS (
         SELECT source,
                list_filter(regexp_split_to_array(trim(text), \'\\s+\'),
@@ -2074,7 +1992,7 @@ EXTRA_ORACLE["q231_cross_source_overlap"] = f"""
     ORDER BY 1, 2
 """
 
-EXTRA_QUERIES["q231_cross_source_overlap"] = q231_cross_source_overlap
+QUERIES["q231_cross_source_overlap"] = q231_cross_source_overlap
 
 
 TCLOSE_T = 0.25  # disclosure threshold on the variational distance
@@ -2150,7 +2068,7 @@ def q340_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )))
 
 
-EXTRA_ORACLE["q340_t_closeness"] = f"""
+ORACLE["q340_t_closeness"] = f"""
     WITH cust AS (
         SELECT c_nationkey AS nation,
                (CAST(FLOOR(c_acctbal * 100 + 0.5) AS BIGINT) + {KANON_SHIFT}) // {KANON_BAND}
@@ -2192,4 +2110,4 @@ EXTRA_ORACLE["q340_t_closeness"] = f"""
            MAX(worst_k) AS worst_k
     FROM t CROSS JOIN worst
 """
-EXTRA_QUERIES["q340_t_closeness"] = q340_t_closeness
+QUERIES["q340_t_closeness"] = q340_t_closeness

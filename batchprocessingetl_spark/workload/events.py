@@ -188,8 +188,6 @@ def q28_session_window_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_window_stats(ev, gap="30 minutes").orderBy("user_id", "session_start")
 
 
-
-
 def q72_hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style rollup hierarchy (operators/rollup.py): hourly
     aggregates from raw, daily from hourly, monthly from daily — raw is
@@ -1114,31 +1112,6 @@ def q146_multitouch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Round 6 rotation (VERDICT r5 #1): the round-5 event-analytics
-# backlog gains driver rows — q123 HLL DAU/WAU/MAU twin, q139
-# audience overlap, q143 inter-arrival percentiles, q144 event-mix
-# entropy, q145 exact bitmap-word distinct rollup, q146 U-shaped
-# attribution, q153 session path mining, q154 closed-form clamped
-# running balance, q155 linear-interp gapfill, q157 max drawdown.
-# Displaced, each with retained registered evidence (docs/COVERAGE.md
-# "Round 6 rotation"): q28 session windows (q153 registers the
-# sessionization machinery; session_window streaming twin stays
-# pytest-pinned), q75 interval join (q146's attribution IS a
-# user-keyed interval join), q94 AQE skew rollup (stays benched — the
-# bake-off line needs it — and pinned by tests/test_skew.py), q98
-# EWMA / q103 z-score anomalies (time-series family's registered rows
-# move to q155 gapfill-interp + q157 drawdown windows), q102 cohort
-# retention (q142 cohort LTV registers the same cohort x age grain),
-# q106 transitions (q153 registers the strictly-richer 3-step path
-# mining), q114 exact rolling DAU/WAU/MAU (q123 registers the same
-# trailing windows AND oracle-pins the exact metrics alongside the
-# HLL flags), q121 CM heavy hitters (sketch family's registered row
-# moves to q123 HLL; CM guarantee stays pytest-pinned and q178 adds
-# the inner-product read), q122 bootstrap CI (statistics family keeps
-# q156/q159-q163 registered), q99 funnel (q153's strict-sequence path
-# mining covers ordered-event analytics), q109 DP release (draw-key
-# injectivity + replay stay pytest-pinned). All stay value-checked by
-# check_oracle --extra.
 QUERIES = {
     "q123_active_users_hll": q123_active_users_hll,
     "q139_audience_overlap": q139_audience_overlap,
@@ -1150,35 +1123,6 @@ QUERIES = {
     "q154_clamped_running_balance": q154_clamped_running_balance,
     "q155_gapfill_interpolate": q155_gapfill_interpolate,
     "q157_max_drawdown": q157_max_drawdown,
-    # Round 5 rotation (VERDICT r4 #1): the round-4 net-new event
-    # analytics gain driver-side rows. Displaced: q24 (as-of join —
-    # the range family keeps q75's big-big interval join registered;
-    # as-of stays benched + oracle-checked as EXTRA), q81 (salted skew
-    # rollup — q94 registers the SAME measured-zipf fixture through
-    # the AQE skew-join path; the salting twin stays benched), q88
-    # (gapfill+LOCF — the time-series family keeps q98 EWMA + q103
-    # z-score registered) and q91 (incremental rollup refresh — q111
-    # registers the strictly more general join-aggregate IVM).
-    # Round 4 mid-round rotation: funnel analysis and the DP release
-    # gain driver-side rows. Displaced: q20 (tumbling window — §2.9's
-    # window family keeps q28's session_window registered row and q20
-    # stays benched + streaming-pytest-pinned) and q72 (hypertable
-    # rollup — the family keeps q88 gapfill + q91 incremental refresh
-    # registered; the hierarchy algebra itself is also pinned by
-    # tests/test_rangejoin.py's rollup suite).
-}
-
-# Out of the ~50-entry driver registry budget; daily date_format rollup
-# evidence is carried by q20 (date_trunc) + q27 (date spans).
-# Round 4 displaced q29 (sliding window — the window family keeps q20
-# tumbling + q28 session registered; sliding is the overlap composite
-# of the two), q21 (lag-based sessionization — q28's session_window
-# keeps the family's registered row and q21 stays benched), q23 (JSON
-# props extraction — §2.8's string/regex family keeps q30/q46
-# registered; JSON reads stay pytest-pinned in test_pipeline) and q25
-# (broadcast range join — the range family keeps q75 big-big interval
-# + q24 as-of registered) to make room for q80-q92 per VERDICT r3 #1.
-EXTRA_QUERIES = {
     "q28_session_window_stats": q28_session_window_stats,
     "q75_interval_join_concurrency": q75_interval_join_concurrency,
     "q94_skewed_user_rollup_aqe": q94_skewed_user_rollup_aqe,
@@ -1216,7 +1160,7 @@ _EWMA_DEN = " + ".join(
     for k in range(EWMA_WINDOW)
 )
 
-_ORACLE_ALL = {
+ORACLE = {
     "q99_funnel_conversion": f"""
         WITH t1 AS (
             SELECT user_id, MIN(ts) AS t1
@@ -1470,13 +1414,13 @@ _ORACLE_ALL = {
 
 # q94 is the plain-join AQE twin of q81 — value-identical by
 # construction, so it shares q81's plain-join oracle verbatim
-_ORACLE_ALL["q94_skewed_user_rollup_aqe"] = _ORACLE_ALL["q81_skewed_user_rollup"]
+ORACLE["q94_skewed_user_rollup_aqe"] = ORACLE["q81_skewed_user_rollup"]
 
 # Monday-start date_trunc('week') agrees between Spark and DuckDB; the
 # day-difference of two week-truncated timestamps is an exact multiple
 # of 7, so /7 hits an integer in both engines (DuckDB CAST rounds,
 # Spark truncates — identical on exact integers).
-_ORACLE_ALL["q102_cohort_retention"] = """
+ORACLE["q102_cohort_retention"] = """
     WITH cohorts AS (
         SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
         FROM events GROUP BY user_id
@@ -1505,7 +1449,7 @@ from batchprocessingetl_spark.operators.privacy import (
     dp_noise_sql_duckdb as _dp_sql,
 )
 
-_ORACLE_ALL["q109_dp_daily_counts"] = f"""
+ORACLE["q109_dp_daily_counts"] = f"""
     WITH g AS (
         SELECT event_type, date_trunc('day', ts) AS day,
                COUNT(*) AS n
@@ -1520,7 +1464,7 @@ _ORACLE_ALL["q109_dp_daily_counts"] = f"""
 
 from batchprocessingetl_spark.operators.sketches import cms_sql_duckdb as _cms_sql
 
-_ORACLE_ALL["q121_heavy_hitters"] = f"""
+ORACLE["q121_heavy_hitters"] = f"""
     WITH sketch AS ({_cms_sql("events", "user_id", CMS_DEPTH, CMS_WIDTH)}),
     exact AS (
         SELECT user_id, COUNT(*) AS true_n FROM events GROUP BY user_id
@@ -1546,7 +1490,7 @@ _ORACLE_ALL["q121_heavy_hitters"] = f"""
     ORDER BY true_n DESC, user_id
 """
 
-_ORACLE_ALL["q122_bootstrap_mean_ci"] = f"""
+ORACLE["q122_bootstrap_mean_ci"] = f"""
     WITH resamp AS (
         SELECT event_type, b.b,
                SUM(CAST(value AS DECIMAL(28,6))) AS s, COUNT(*) AS m
@@ -1575,7 +1519,7 @@ _ORACLE_ALL["q122_bootstrap_mean_ci"] = f"""
     ORDER BY event_type
 """
 
-_ORACLE_ALL["q114_active_users"] = """
+ORACLE["q114_active_users"] = """
     WITH du AS (
         SELECT DISTINCT user_id, CAST(date_trunc('day', ts) AS DATE) AS day
         FROM events
@@ -1614,14 +1558,14 @@ _ORACLE_ALL["q114_active_users"] = """
 # q123: the exact q114 oracle with every HLL error-bound flag pinned
 # TRUE — the sketch estimates are engine-defined, the BOUND is the
 # cross-engine fact (q57/q121 pattern).
-_ORACLE_ALL["q123_active_users_hll"] = _ORACLE_ALL["q114_active_users"].replace(
+ORACLE["q123_active_users_hll"] = ORACLE["q114_active_users"].replace(
     "COALESCE(m.mau, 0) AS mau\n",
     "COALESCE(m.mau, 0) AS mau,\n"
     "           TRUE AS dau_ok, TRUE AS wau_ok, TRUE AS mau_ok\n",
 )
-assert "dau_ok" in _ORACLE_ALL["q123_active_users_hll"]  # replace anchored
+assert "dau_ok" in ORACLE["q123_active_users_hll"]  # replace anchored
 
-_ORACLE_ALL["q106_event_transitions"] = """
+ORACLE["q106_event_transitions"] = """
     WITH seq AS (
         SELECT event_type,
                LEAD(event_type) OVER (
@@ -1639,7 +1583,7 @@ _ORACLE_ALL["q106_event_transitions"] = """
     ORDER BY from_type, to_type
 """
 
-_ORACLE_ALL["q103_rate_anomalies"] = f"""
+ORACLE["q103_rate_anomalies"] = f"""
     WITH hourly AS (
         SELECT date_trunc('hour', ts) AS bucket, event_type, COUNT(*) AS n
         FROM events GROUP BY 1, 2
@@ -1663,7 +1607,7 @@ _ORACLE_ALL["q103_rate_anomalies"] = f"""
     ORDER BY event_type, bucket
 """
 
-_ORACLE_ALL["q139_audience_overlap"] = """
+ORACLE["q139_audience_overlap"] = """
     WITH ut AS (
         SELECT DISTINCT event_type, user_id FROM events
     ), sizes AS (
@@ -1685,7 +1629,7 @@ _ORACLE_ALL["q139_audience_overlap"] = """
     ORDER BY bt.type_a, bt.type_b
 """
 
-_ORACLE_ALL["q143_interarrival_stats"] = """
+ORACLE["q143_interarrival_stats"] = """
     WITH gaps AS (
         -- floor() before ::BIGINT: DuckDB CAST rounds while Spark's
         -- unix_timestamp truncates, and events.ts carries sub-second
@@ -1706,7 +1650,7 @@ _ORACLE_ALL["q143_interarrival_stats"] = """
     ORDER BY event_type
 """
 
-_ORACLE_ALL["q144_user_mix_entropy"] = """
+ORACLE["q144_user_mix_entropy"] = """
     WITH ut AS (
         SELECT user_id, event_type, COUNT(*) AS n
         FROM events GROUP BY 1, 2
@@ -1722,7 +1666,7 @@ _ORACLE_ALL["q144_user_mix_entropy"] = """
     ORDER BY ut.user_id
 """
 
-_ORACLE_ALL["q157_max_drawdown"] = """
+ORACLE["q157_max_drawdown"] = """
     WITH x AS (
         SELECT user_id, event_id, ts,
                CASE WHEN event_type IN ('purchase', 'signup')
@@ -1749,7 +1693,7 @@ _ORACLE_ALL["q157_max_drawdown"] = """
     ORDER BY user_id
 """
 
-_ORACLE_ALL["q155_gapfill_interpolate"] = f"""
+ORACLE["q155_gapfill_interpolate"] = f"""
     WITH a AS (
         SELECT date_trunc('hour', ts) AS bucket_ts,
                {dsum_sql('value')} AS total_value
@@ -1790,7 +1734,7 @@ _ORACLE_ALL["q155_gapfill_interpolate"] = f"""
     ORDER BY bucket_ts
 """
 
-_ORACLE_ALL["q153_top_event_paths"] = f"""
+ORACLE["q153_top_event_paths"] = f"""
     WITH s AS (
         SELECT user_id, event_id, ts, event_type,
                lag(ts) OVER w AS prev_ts
@@ -1827,7 +1771,7 @@ _ORACLE_ALL["q153_top_event_paths"] = f"""
 # q154: the oracle uses the SAME closed form (running sum minus the
 # clamped running min) — and the property test pins the closed form
 # against the literal per-row fold.
-_ORACLE_ALL["q154_clamped_running_balance"] = """
+ORACLE["q154_clamped_running_balance"] = """
     WITH x AS (
         SELECT user_id, event_id, ts,
                CASE WHEN event_type IN ('purchase', 'signup')
@@ -1854,7 +1798,7 @@ _ORACLE_ALL["q154_clamped_running_balance"] = """
     ORDER BY user_id, event_id
 """
 
-_ORACLE_ALL["q146_multitouch_attribution"] = f"""
+ORACLE["q146_multitouch_attribution"] = f"""
     WITH p AS (
         SELECT event_id AS purchase_id, user_id, ts AS p_ts
         FROM events WHERE event_type = 'purchase'
@@ -1882,16 +1826,13 @@ _ORACLE_ALL["q146_multitouch_attribution"] = f"""
 
 # q145: the oracle is the DIRECT weekly distinct count — any bitmap
 # packing or merge bug flips the hash.
-_ORACLE_ALL["q145_bitmap_distinct_rollup"] = """
+ORACLE["q145_bitmap_distinct_rollup"] = """
     SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
            COUNT(DISTINCT user_id) AS n_users
     FROM events
     GROUP BY 1
     ORDER BY week
 """
-
-ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k not in EXTRA_QUERIES}
-EXTRA_ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k in EXTRA_QUERIES}
 
 
 MARKOV_SCALE = 10**6  # fixed-point probability scale
@@ -1996,8 +1937,8 @@ def _q185_oracle_sql(k: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q185_markov_stationary"] = q185_markov_stationary
-EXTRA_ORACLE["q185_markov_stationary"] = _q185_oracle_sql(MARKOV_STEPS)
+QUERIES["q185_markov_stationary"] = q185_markov_stationary
+ORACLE["q185_markov_stationary"] = _q185_oracle_sql(MARKOV_STEPS)
 
 
 def q197_audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2075,7 +2016,7 @@ def q197_audience_overlap_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL_Q197 = """
+ORACLE["q197_audience_overlap_hll"] = """
     WITH ut AS (
         SELECT DISTINCT event_type, user_id FROM events
     ), sizes AS (
@@ -2096,8 +2037,7 @@ _ORACLE_ALL_Q197 = """
     ORDER BY p.type_a, p.type_b
 """
 
-EXTRA_QUERIES["q197_audience_overlap_hll"] = q197_audience_overlap_hll
-EXTRA_ORACLE["q197_audience_overlap_hll"] = _ORACLE_ALL_Q197
+QUERIES["q197_audience_overlap_hll"] = q197_audience_overlap_hll
 
 
 KMV_K = 64
@@ -2156,8 +2096,8 @@ def q203_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-EXTRA_QUERIES["q203_kmv_distinct"] = q203_kmv_distinct
-EXTRA_ORACLE["q203_kmv_distinct"] = f"""
+QUERIES["q203_kmv_distinct"] = q203_kmv_distinct
+ORACLE["q203_kmv_distinct"] = f"""
     WITH du AS (
         SELECT DISTINCT event_type, user_id FROM events
     ), ranked AS (
@@ -2268,8 +2208,8 @@ def q204_kmv_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q204_kmv_rolling_wau"] = q204_kmv_rolling_wau
-EXTRA_ORACLE["q204_kmv_rolling_wau"] = f"""
+QUERIES["q204_kmv_rolling_wau"] = q204_kmv_rolling_wau
+ORACLE["q204_kmv_rolling_wau"] = f"""
     WITH du AS (
         SELECT DISTINCT CAST(date_trunc('day', ts) AS DATE) AS day, user_id
         FROM events
@@ -2417,8 +2357,8 @@ def q206_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q206_permutation_test"] = q206_permutation_test
-EXTRA_ORACLE["q206_permutation_test"] = f"""
+QUERIES["q206_permutation_test"] = q206_permutation_test
+ORACLE["q206_permutation_test"] = f"""
     WITH per_user AS (
         SELECT user_id,
                SUM(CAST(CASE WHEN event_type = 'purchase' THEN value
@@ -2528,7 +2468,7 @@ def q228_next_event_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q228_next_event_accuracy"] = f"""
+ORACLE["q228_next_event_accuracy"] = f"""
     WITH ev AS (
         SELECT user_id, ts, event_id, event_type,
                ('0x' || substr(md5('mkv:' || user_id::VARCHAR), 1, 15))::BIGINT
@@ -2567,8 +2507,7 @@ _ORACLE_ALL["q228_next_event_accuracy"] = f"""
     ORDER BY 1
 """
 
-EXTRA_QUERIES["q228_next_event_accuracy"] = q228_next_event_accuracy
-EXTRA_ORACLE["q228_next_event_accuracy"] = _ORACLE_ALL["q228_next_event_accuracy"]
+QUERIES["q228_next_event_accuracy"] = q228_next_event_accuracy
 
 
 SHAPLEY_CHANNELS = ("view", "click", "signup")  # bit 0, 1, 2
@@ -2682,7 +2621,7 @@ _Q242_CH_VALUES = ", ".join(
     f"({i}, '{ch}')" for i, ch in enumerate(SHAPLEY_CHANNELS)
 )
 
-_ORACLE_ALL["q242_shapley_attribution"] = f"""
+ORACLE["q242_shapley_attribution"] = f"""
     WITH first_p AS (
         SELECT user_id, MIN(ts) AS first_ts FROM events
         WHERE event_type = 'purchase' GROUP BY 1
@@ -2721,8 +2660,7 @@ _ORACLE_ALL["q242_shapley_attribution"] = f"""
     ORDER BY n.channel
 """
 
-EXTRA_QUERIES["q242_shapley_attribution"] = q242_shapley_attribution
-EXTRA_ORACLE["q242_shapley_attribution"] = _ORACLE_ALL["q242_shapley_attribution"]
+QUERIES["q242_shapley_attribution"] = q242_shapley_attribution
 
 
 RE_SCALE = 10**6
@@ -2965,8 +2903,8 @@ def _q250_oracle_sql(k: int) -> str:
     return head + "".join(chains) + "\n    UNION ALL".join(selects) + "\n    ORDER BY channel"
 
 
-EXTRA_QUERIES["q250_markov_removal_attribution"] = q250_markov_removal_attribution
-EXTRA_ORACLE["q250_markov_removal_attribution"] = _q250_oracle_sql(RE_STEPS)
+QUERIES["q250_markov_removal_attribution"] = q250_markov_removal_attribution
+ORACLE["q250_markov_removal_attribution"] = _q250_oracle_sql(RE_STEPS)
 
 
 CRC_W1 = (1, 10)   # capture window 1: days 1-10
@@ -3024,7 +2962,7 @@ def q260_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q260_capture_recapture"] = f"""
+ORACLE["q260_capture_recapture"] = f"""
     WITH tagged AS (
         SELECT user_id,
                MAX(CASE WHEN EXTRACT(day FROM ts) BETWEEN {CRC_W1[0]} AND {CRC_W1[1]}
@@ -3053,8 +2991,7 @@ _ORACLE_ALL["q260_capture_recapture"] = f"""
     FROM cells
 """
 
-EXTRA_QUERIES["q260_capture_recapture"] = q260_capture_recapture
-EXTRA_ORACLE["q260_capture_recapture"] = _ORACLE_ALL["q260_capture_recapture"]
+QUERIES["q260_capture_recapture"] = q260_capture_recapture
 
 
 TD_WINDOW_H = 168  # attribution lookback (hours)
@@ -3120,7 +3057,7 @@ def q267_time_decay_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q267_CH_IN = ", ".join(f"'{c}'" for c in SHAPLEY_CHANNELS)
 
-_ORACLE_ALL["q267_time_decay_attribution"] = f"""
+ORACLE["q267_time_decay_attribution"] = f"""
     WITH p AS (
         SELECT event_id AS pid, user_id AS pu, ts AS pts
         FROM events WHERE event_type = 'purchase'
@@ -3150,8 +3087,7 @@ _ORACLE_ALL["q267_time_decay_attribution"] = f"""
     FROM shares GROUP BY 1 ORDER BY 1
 """
 
-EXTRA_QUERIES["q267_time_decay_attribution"] = q267_time_decay_attribution
-EXTRA_ORACLE["q267_time_decay_attribution"] = _ORACLE_ALL["q267_time_decay_attribution"]
+QUERIES["q267_time_decay_attribution"] = q267_time_decay_attribution
 
 
 def q268_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3279,7 +3215,7 @@ def q268_kmv_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q268_H = "('0x' || substr(md5('kmv:' || user_id::VARCHAR), 1, 15))::BIGINT"
 
-_ORACLE_ALL["q268_kmv_set_ops"] = f"""
+ORACLE["q268_kmv_set_ops"] = f"""
     WITH du AS (
         SELECT DISTINCT event_type, user_id FROM events
     ), hashed AS (
@@ -3350,8 +3286,7 @@ _ORACLE_ALL["q268_kmv_set_ops"] = f"""
     ORDER BY e.type_a, e.type_b
 """
 
-EXTRA_QUERIES["q268_kmv_set_ops"] = q268_kmv_set_ops
-EXTRA_ORACLE["q268_kmv_set_ops"] = _ORACLE_ALL["q268_kmv_set_ops"]
+QUERIES["q268_kmv_set_ops"] = q268_kmv_set_ops
 
 
 def q318_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3505,5 +3440,5 @@ def _q318_oracle_sql(k: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q318_markov_entropy_rate"] = q318_markov_entropy_rate
-EXTRA_ORACLE["q318_markov_entropy_rate"] = _q318_oracle_sql(MARKOV_STEPS)
+QUERIES["q318_markov_entropy_rate"] = q318_markov_entropy_rate
+ORACLE["q318_markov_entropy_rate"] = _q318_oracle_sql(MARKOV_STEPS)

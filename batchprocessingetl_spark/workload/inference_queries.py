@@ -24,9 +24,6 @@ from batchprocessingetl_spark.catalog import load_table
 
 QUERIES: dict = {}
 ORACLE: dict = {}
-EXTRA_QUERIES: dict = {}
-EXTRA_ORACLE: dict = {}
-_ORACLE_ALL: dict = {}
 
 _D38 = "decimal(38,0)"
 
@@ -121,7 +118,7 @@ def q302_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q302_logrank_test"] = """
+ORACLE["q302_logrank_test"] = """
     WITH cells AS (
         SELECT DATE_DIFF('day', CAST(o_orderdate AS DATE),
                          CAST(l_shipdate AS DATE)) AS t,
@@ -170,8 +167,7 @@ _ORACLE_ALL["q302_logrank_test"] = """
                  / CAST(SUM(vt) AS DOUBLE), 6) AS chi2
     FROM terms
 """
-EXTRA_QUERIES["q302_logrank_test"] = q302_logrank_test
-EXTRA_ORACLE["q302_logrank_test"] = _ORACLE_ALL["q302_logrank_test"]
+QUERIES["q302_logrank_test"] = q302_logrank_test
 
 
 def q303_ordinal_association(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -271,7 +267,7 @@ def q303_ordinal_association(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q303_ordinal_association"] = """
+ORACLE["q303_ordinal_association"] = """
     WITH cells AS (
         SELECT l_returnflag AS g, CAST(l_quantity AS INT) AS x,
                CAST(FLOOR(l_discount * 100 + 0.5) AS INT) AS y,
@@ -313,8 +309,7 @@ _ORACLE_ALL["q303_ordinal_association"] = """
     JOIN margins m USING (g) JOIN tx t1 USING (g) JOIN ty t2 USING (g)
     ORDER BY p.g
 """
-EXTRA_QUERIES["q303_ordinal_association"] = q303_ordinal_association
-EXTRA_ORACLE["q303_ordinal_association"] = _ORACLE_ALL["q303_ordinal_association"]
+QUERIES["q303_ordinal_association"] = q303_ordinal_association
 
 
 def q304_wasserstein_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,7 +379,7 @@ def q304_wasserstein_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-_ORACLE_ALL["q304_wasserstein_daily_revenue"] = """
+ORACLE["q304_wasserstein_daily_revenue"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -420,10 +415,7 @@ _ORACLE_ALL["q304_wasserstein_daily_revenue"] = """
     FROM stepped s CROSS JOIN tot t
     GROUP BY t.n_a, t.n_b
 """
-EXTRA_QUERIES["q304_wasserstein_daily_revenue"] = q304_wasserstein_daily_revenue
-EXTRA_ORACLE["q304_wasserstein_daily_revenue"] = _ORACLE_ALL[
-    "q304_wasserstein_daily_revenue"
-]
+QUERIES["q304_wasserstein_daily_revenue"] = q304_wasserstein_daily_revenue
 
 
 def q305_serial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,7 +483,7 @@ def q305_serial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q305_serial_correlation"] = """
+ORACLE["q305_serial_correlation"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -515,8 +507,7 @@ _ORACLE_ALL["q305_serial_correlation"] = """
                  / CAST(SUM(e * e) AS DOUBLE), 9) AS lag1_autocorr
     FROM e
 """
-EXTRA_QUERIES["q305_serial_correlation"] = q305_serial_correlation
-EXTRA_ORACLE["q305_serial_correlation"] = _ORACLE_ALL["q305_serial_correlation"]
+QUERIES["q305_serial_correlation"] = q305_serial_correlation
 
 
 def q306_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,7 +572,7 @@ def q306_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q306_anova_oneway"] = """
+ORACLE["q306_anova_oneway"] = """
     WITH groups AS (
         SELECT o_orderpriority AS g, COUNT(*) AS n,
                SUM(CAST(l_quantity AS BIGINT)) AS s,
@@ -622,8 +613,7 @@ _ORACLE_ALL["q306_anova_oneway"] = """
                  9) AS eta_sq
     FROM agg
 """
-EXTRA_QUERIES["q306_anova_oneway"] = q306_anova_oneway
-EXTRA_ORACLE["q306_anova_oneway"] = _ORACLE_ALL["q306_anova_oneway"]
+QUERIES["q306_anova_oneway"] = q306_anova_oneway
 
 
 def q307_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -717,7 +707,7 @@ def q307_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q307_wilcoxon_signed_rank"] = """
+ORACLE["q307_wilcoxon_signed_rank"] = """
     WITH pairs AS (
         SELECT n.n_name AS nation, MONTH(CAST(l.l_shipdate AS DATE)) AS mth,
                SUM(CASE WHEN YEAR(CAST(l.l_shipdate AS DATE)) = 1995
@@ -769,8 +759,7 @@ _ORACLE_ALL["q307_wilcoxon_signed_rank"] = """
                              AS DOUBLE) / 12.0), 9) AS z
     FROM agg a CROSS JOIN ties t
 """
-EXTRA_QUERIES["q307_wilcoxon_signed_rank"] = q307_wilcoxon_signed_rank
-EXTRA_ORACLE["q307_wilcoxon_signed_rank"] = _ORACLE_ALL["q307_wilcoxon_signed_rank"]
+QUERIES["q307_wilcoxon_signed_rank"] = q307_wilcoxon_signed_rank
 
 
 def q308_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -840,7 +829,7 @@ def q308_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q308_hodges_lehmann"] = """
+ORACLE["q308_hodges_lehmann"] = """
     WITH grid AS (
         SELECT l_returnflag AS g, CAST(l_quantity AS BIGINT) AS v,
                CAST(COUNT(*) AS BIGINT) AS n
@@ -872,8 +861,7 @@ _ORACLE_ALL["q308_hodges_lehmann"] = """
     FROM med m JOIN tot t ON m.g = t.g JOIN counts c ON m.g = c.g
     ORDER BY m.g
 """
-EXTRA_QUERIES["q308_hodges_lehmann"] = q308_hodges_lehmann
-EXTRA_ORACLE["q308_hodges_lehmann"] = _ORACLE_ALL["q308_hodges_lehmann"]
+QUERIES["q308_hodges_lehmann"] = q308_hodges_lehmann
 
 
 def q309_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -937,7 +925,7 @@ def q309_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q309_cochran_q"] = """
+ORACLE["q309_cochran_q"] = """
     WITH rows_ AS (
         SELECT l.l_orderkey,
                MAX(CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END) AS x1,
@@ -965,8 +953,7 @@ _ORACLE_ALL["q309_cochran_q"] = """
                  / CAST(3 * t - rr AS DOUBLE), 9) AS cochran_q
     FROM agg
 """
-EXTRA_QUERIES["q309_cochran_q"] = q309_cochran_q
-EXTRA_ORACLE["q309_cochran_q"] = _ORACLE_ALL["q309_cochran_q"]
+QUERIES["q309_cochran_q"] = q309_cochran_q
 
 
 def q310_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1027,7 +1014,7 @@ def q310_partial_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q310_partial_correlation"] = """
+ORACLE["q310_partial_correlation"] = """
     WITH m AS (
         SELECT CAST(COUNT(*) AS HUGEINT) AS n,
                CAST(SUM(CAST(l_quantity AS BIGINT)) AS HUGEINT) AS sx,
@@ -1072,8 +1059,7 @@ _ORACLE_ALL["q310_partial_correlation"] = """
                AS r_xy_given_z
     FROM r
 """
-EXTRA_QUERIES["q310_partial_correlation"] = q310_partial_correlation
-EXTRA_ORACLE["q310_partial_correlation"] = _ORACLE_ALL["q310_partial_correlation"]
+QUERIES["q310_partial_correlation"] = q310_partial_correlation
 
 
 CHOW_SPLIT_DATE = "1998-07-01"
@@ -1183,7 +1169,7 @@ def q311_chow_break_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q311_chow_break_test"] = f"""
+ORACLE["q311_chow_break_test"] = f"""
     WITH daily AS (
         SELECT DATE_DIFF('day', DATE '{CHOW_SPLIT_DATE}',
                          CAST(l_shipdate AS DATE)) AS t,
@@ -1237,8 +1223,7 @@ _ORACLE_ALL["q311_chow_break_test"] = f"""
                     / (CAST(p.n_days AS DOUBLE) - 4.0)), 6) AS chow_f
     FROM pssr p
 """
-EXTRA_QUERIES["q311_chow_break_test"] = q311_chow_break_test
-EXTRA_ORACLE["q311_chow_break_test"] = _ORACLE_ALL["q311_chow_break_test"]
+QUERIES["q311_chow_break_test"] = q311_chow_break_test
 
 
 LJUNG_BOX_LAGS = 7
@@ -1369,9 +1354,8 @@ def _lb_oracle() -> str:
 """
 
 
-_ORACLE_ALL["q314_ljung_box"] = _lb_oracle()
-EXTRA_QUERIES["q314_ljung_box"] = q314_ljung_box
-EXTRA_ORACLE["q314_ljung_box"] = _ORACLE_ALL["q314_ljung_box"]
+ORACLE["q314_ljung_box"] = _lb_oracle()
+QUERIES["q314_ljung_box"] = q314_ljung_box
 
 
 def q315_agreement_family(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1436,7 +1420,7 @@ def q315_agreement_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("stratum")
 
 
-_ORACLE_ALL["q315_agreement_family"] = """
+ORACLE["q315_agreement_family"] = """
     WITH cells AS (
         SELECT o_orderpriority AS stratum,
                CAST(SUM(CASE WHEN l_returnflag = 'R' AND l_linestatus = 'O'
@@ -1470,8 +1454,7 @@ _ORACLE_ALL["q315_agreement_family"] = """
                AS gwet_ac1
     FROM f ORDER BY stratum
 """
-EXTRA_QUERIES["q315_agreement_family"] = q315_agreement_family
-EXTRA_ORACLE["q315_agreement_family"] = _ORACLE_ALL["q315_agreement_family"]
+QUERIES["q315_agreement_family"] = q315_agreement_family
 
 
 CCF_MAX_LAG = 3
@@ -1611,9 +1594,8 @@ def _ccf_oracle() -> str:
 """
 
 
-_ORACLE_ALL["q316_cross_correlation"] = _ccf_oracle()
-EXTRA_QUERIES["q316_cross_correlation"] = q316_cross_correlation
-EXTRA_ORACLE["q316_cross_correlation"] = _ORACLE_ALL["q316_cross_correlation"]
+ORACLE["q316_cross_correlation"] = _ccf_oracle()
+QUERIES["q316_cross_correlation"] = q316_cross_correlation
 
 
 def q317_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1690,7 +1672,7 @@ def q317_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q317_pacf"] = """
+ORACLE["q317_pacf"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -1730,8 +1712,7 @@ _ORACLE_ALL["q317_pacf"] = """
                     - ((r2 - r1 * r1) / (1.0 - r1 * r1)) * r2), 9) AS pacf3
     FROM r
 """
-EXTRA_QUERIES["q317_pacf"] = q317_pacf
-EXTRA_ORACLE["q317_pacf"] = _ORACLE_ALL["q317_pacf"]
+QUERIES["q317_pacf"] = q317_pacf
 
 
 def q320_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1791,7 +1772,7 @@ def q320_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("g")
 
 
-_ORACLE_ALL["q320_jarque_bera"] = """
+ORACLE["q320_jarque_bera"] = """
     WITH g AS (
         SELECT l_returnflag AS g,
                CAST(COUNT(*) AS HUGEINT) AS n,
@@ -1833,8 +1814,7 @@ _ORACLE_ALL["q320_jarque_bera"] = """
                  * (skew * skew + kurt * kurt / 4.0), 6) AS jarque_bera
     FROM sk ORDER BY g
 """
-EXTRA_QUERIES["q320_jarque_bera"] = q320_jarque_bera
-EXTRA_ORACLE["q320_jarque_bera"] = _ORACLE_ALL["q320_jarque_bera"]
+QUERIES["q320_jarque_bera"] = q320_jarque_bera
 
 
 def q321_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1904,7 +1884,7 @@ def q321_bhattacharyya(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("priority")
 
 
-_ORACLE_ALL["q321_bhattacharyya"] = """
+ORACLE["q321_bhattacharyya"] = """
     WITH cells AS (
         SELECT o_orderpriority AS priority,
                SUM(CASE WHEN YEAR(CAST(o_orderdate AS DATE)) = 1995
@@ -1942,8 +1922,7 @@ _ORACLE_ALL["q321_bhattacharyya"] = """
     FROM (SELECT * FROM rows_ UNION ALL SELECT * FROM total)
     ORDER BY priority
 """
-EXTRA_QUERIES["q321_bhattacharyya"] = q321_bhattacharyya
-EXTRA_ORACLE["q321_bhattacharyya"] = _ORACLE_ALL["q321_bhattacharyya"]
+QUERIES["q321_bhattacharyya"] = q321_bhattacharyya
 
 
 def q322_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2034,7 +2013,7 @@ def q322_anderson_darling_2s(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q322_anderson_darling_2s"] = """
+ORACLE["q322_anderson_darling_2s"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -2086,8 +2065,7 @@ _ORACLE_ALL["q322_anderson_darling_2s"] = """
                  9) AS ad_a2
     FROM terms
 """
-EXTRA_QUERIES["q322_anderson_darling_2s"] = q322_anderson_darling_2s
-EXTRA_ORACLE["q322_anderson_darling_2s"] = _ORACLE_ALL["q322_anderson_darling_2s"]
+QUERIES["q322_anderson_darling_2s"] = q322_anderson_darling_2s
 
 
 def q323_mood_scale_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2165,7 +2143,7 @@ def q323_mood_scale_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q323_mood_scale_test"] = """
+ORACLE["q323_mood_scale_test"] = """
     WITH grid AS (
         SELECT CAST(l_quantity AS BIGINT) AS v,
                SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS ca,
@@ -2204,8 +2182,7 @@ _ORACLE_ALL["q323_mood_scale_test"] = """
                              / CAST(n AS DOUBLE))), 9) AS z
     FROM agg
 """
-EXTRA_QUERIES["q323_mood_scale_test"] = q323_mood_scale_test
-EXTRA_ORACLE["q323_mood_scale_test"] = _ORACLE_ALL["q323_mood_scale_test"]
+QUERIES["q323_mood_scale_test"] = q323_mood_scale_test
 
 
 def q324_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2302,7 +2279,7 @@ def q324_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q324_median_test"] = """
+ORACLE["q324_median_test"] = """
     WITH vals AS (
         SELECT o_orderpriority AS g,
                CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -2355,8 +2332,7 @@ _ORACLE_ALL["q324_median_test"] = """
     FROM (SELECT * FROM rows_ UNION ALL SELECT * FROM total)
     ORDER BY g
 """
-EXTRA_QUERIES["q324_median_test"] = q324_median_test
-EXTRA_ORACLE["q324_median_test"] = _ORACLE_ALL["q324_median_test"]
+QUERIES["q324_median_test"] = q324_median_test
 
 
 COOKS_TOP = 10
@@ -2434,7 +2410,7 @@ def q325_cooks_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q325_cooks_distance"] = f"""
+ORACLE["q325_cooks_distance"] = f"""
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                CAST(DATE_DIFF('day', DATE '{OLS_ANCHOR}',
@@ -2478,8 +2454,7 @@ _ORACLE_ALL["q325_cooks_distance"] = f"""
     QUALIFY ROW_NUMBER() OVER (ORDER BY cooks_d DESC, day) <= {COOKS_TOP}
     ORDER BY rank
 """
-EXTRA_QUERIES["q325_cooks_distance"] = q325_cooks_distance
-EXTRA_ORACLE["q325_cooks_distance"] = _ORACLE_ALL["q325_cooks_distance"]
+QUERIES["q325_cooks_distance"] = q325_cooks_distance
 
 
 def q326_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2565,7 +2540,7 @@ def q326_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q326_breusch_pagan"] = f"""
+ORACLE["q326_breusch_pagan"] = f"""
     WITH daily AS (
         SELECT CAST(DATE_DIFF('day', DATE '{OLS_ANCHOR}',
                               CAST(l_shipdate AS DATE)) AS HUGEINT) AS t,
@@ -2616,8 +2591,7 @@ _ORACLE_ALL["q326_breusch_pagan"] = f"""
                AS bp_lm
     FROM aux
 """
-EXTRA_QUERIES["q326_breusch_pagan"] = q326_breusch_pagan
-EXTRA_ORACLE["q326_breusch_pagan"] = _ORACLE_ALL["q326_breusch_pagan"]
+QUERIES["q326_breusch_pagan"] = q326_breusch_pagan
 
 
 def q327_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2671,7 +2645,7 @@ def q327_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q327_effect_sizes"] = """
+ORACLE["q327_effect_sizes"] = """
     WITH g AS (
         SELECT (o.o_orderpriority = '1-URGENT') AS is_t,
                CAST(COUNT(*) AS HUGEINT) AS n,
@@ -2710,8 +2684,7 @@ _ORACLE_ALL["q327_effect_sizes"] = """
            ROUND((m1 - m2) / SQRT(v2), 9) AS glass_delta
     FROM c
 """
-EXTRA_QUERIES["q327_effect_sizes"] = q327_effect_sizes
-EXTRA_ORACLE["q327_effect_sizes"] = _ORACLE_ALL["q327_effect_sizes"]
+QUERIES["q327_effect_sizes"] = q327_effect_sizes
 
 
 PH_DELTA_CENTS = 0
@@ -2786,7 +2759,7 @@ def q328_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q328_page_hinkley"] = f"""
+ORACLE["q328_page_hinkley"] = f"""
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -2820,8 +2793,7 @@ _ORACLE_ALL["q328_page_hinkley"] = f"""
                AS alarm_day
     FROM ph
 """
-EXTRA_QUERIES["q328_page_hinkley"] = q328_page_hinkley
-EXTRA_ORACLE["q328_page_hinkley"] = _ORACLE_ALL["q328_page_hinkley"]
+QUERIES["q328_page_hinkley"] = q328_page_hinkley
 
 
 def q329_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2877,7 +2849,7 @@ def q329_dickey_fuller(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q329_dickey_fuller"] = """
+ORACLE["q329_dickey_fuller"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -2907,8 +2879,7 @@ _ORACLE_ALL["q329_dickey_fuller"] = """
                         / CAST(n * sxx - sx * sx AS DOUBLE)), 6) AS df_stat
     FROM m
 """
-EXTRA_QUERIES["q329_dickey_fuller"] = q329_dickey_fuller
-EXTRA_ORACLE["q329_dickey_fuller"] = _ORACLE_ALL["q329_dickey_fuller"]
+QUERIES["q329_dickey_fuller"] = q329_dickey_fuller
 
 
 def q330_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2967,7 +2938,7 @@ def q330_turning_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q330_turning_points"] = """
+ORACLE["q330_turning_points"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -2992,8 +2963,7 @@ _ORACLE_ALL["q330_turning_points"] = """
                  / SQRT((16.0 * CAST(n AS DOUBLE) - 29.0) / 90.0), 9) AS z
     FROM agg
 """
-EXTRA_QUERIES["q330_turning_points"] = q330_turning_points
-EXTRA_ORACLE["q330_turning_points"] = _ORACLE_ALL["q330_turning_points"]
+QUERIES["q330_turning_points"] = q330_turning_points
 
 
 def q331_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3051,7 +3021,7 @@ def q331_kpss(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q331_kpss"] = """
+ORACLE["q331_kpss"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -3075,8 +3045,7 @@ _ORACLE_ALL["q331_kpss"] = """
                     * CAST(SUM(e * e) AS DOUBLE)), 9) AS kpss_eta
     FROM p
 """
-EXTRA_QUERIES["q331_kpss"] = q331_kpss
-EXTRA_ORACLE["q331_kpss"] = _ORACLE_ALL["q331_kpss"]
+QUERIES["q331_kpss"] = q331_kpss
 
 
 SEAS_P_MIN, SEAS_P_MAX = 2, 60
@@ -3164,7 +3133,7 @@ def q339_seasonality_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-_ORACLE_ALL["q339_seasonality_scan"] = f"""
+ORACLE["q339_seasonality_scan"] = f"""
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -3199,8 +3168,7 @@ _ORACLE_ALL["q339_seasonality_scan"] = f"""
     WHERE rank <= 3
     ORDER BY rank
 """
-EXTRA_QUERIES["q339_seasonality_scan"] = q339_seasonality_scan
-EXTRA_ORACLE["q339_seasonality_scan"] = _ORACLE_ALL["q339_seasonality_scan"]
+QUERIES["q339_seasonality_scan"] = q339_seasonality_scan
 
 
 HURST_WINDOWS = (16, 32, 64, 128)
@@ -3316,7 +3284,7 @@ def q341_hurst_rs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q341_hurst_rs"] = f"""
+ORACLE["q341_hurst_rs"] = f"""
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT)) AS rev
@@ -3356,8 +3324,7 @@ _ORACLE_ALL["q341_hurst_rs"] = f"""
                  / (COUNT(*) * SUM(u * u) - SUM(u) * SUM(u)), 6) AS hurst
     FROM pts
 """.replace("daily_src", "lineitem")
-EXTRA_QUERIES["q341_hurst_rs"] = q341_hurst_rs
-EXTRA_ORACLE["q341_hurst_rs"] = _ORACLE_ALL["q341_hurst_rs"]
+QUERIES["q341_hurst_rs"] = q341_hurst_rs
 
 
 def q344_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3399,7 +3366,7 @@ def q344_overdispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q344_overdispersion"] = """
+ORACLE["q344_overdispersion"] = """
     WITH daily AS (
         SELECT o_orderdate AS day, CAST(COUNT(*) AS HUGEINT) AS y
         FROM orders GROUP BY 1
@@ -3422,5 +3389,4 @@ _ORACLE_ALL["q344_overdispersion"] = """
                     * sqrt(2.0 * CAST(n AS DOUBLE))) > 1.645 AS overdispersed
     FROM a
 """
-EXTRA_QUERIES["q344_overdispersion"] = q344_overdispersion
-EXTRA_ORACLE["q344_overdispersion"] = _ORACLE_ALL["q344_overdispersion"]
+QUERIES["q344_overdispersion"] = q344_overdispersion

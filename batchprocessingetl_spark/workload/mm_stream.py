@@ -103,25 +103,10 @@ def q62_frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "frame_idx")
 
 
+# q61 has no ORACLE entry: a streaming drain is rows-only, and its
+# window semantics are pinned by the oracle-checked batch twin q20.
 QUERIES = {
-    # Round 6 rotation (VERDICT r5 #1): §2.10's registered row stays
-    # q60 (multi-format analytic decode oracle over the same
-    # mapInPandas Arrow path); q100's GIF-LZW decode moves to EXTRA to
-    # fund a q123-q163 slot — its byte-exact oracle stays checked by
-    # check_oracle --extra and tests/test_media_codecs.py pins the
-    # codec itself.
     "q60_multimodal_features": q60_multimodal_features,
-}
-
-# Out of the ~50-entry driver registry budget: the streaming run is
-# rows-only (no batch-SQL oracle for a streaming drain) and its window
-# semantics are pinned by the oracle-checked batch twin q20;
-# tests/test_streaming_state.py exercises the streaming path itself.
-# Round 4 displaced q62 (frame sampling — §2.10's registered row is
-# q60, whose analytic oracle covers the same mapInPandas decode path;
-# q62's byte-exact oracle stays pinned by check_oracle --extra) to
-# make room for q80-q92 per VERDICT r3 #1.
-EXTRA_QUERIES = {
     "q61_streaming_hourly": q61_streaming_hourly,
     "q62_frame_sampling": q62_frame_sampling,
     "q100_gif_decode": q100_gif_decode,
@@ -194,13 +179,9 @@ ORACLE = {
     """,
 }
 
-# Round 4 rotation (VERDICT r3 #1): q62 moved to EXTRA; its byte-exact
-# oracle follows it so check_oracle --extra keeps value-pinning it.
-EXTRA_ORACLE = {"q62_frame_sampling": ORACLE.pop("q62_frame_sampling")}
-
-# q100 (registered r5, EXTRA since r6): the q60 analytic raster oracle, with every
-# document an image (no wav split) and the wire format pinned to GIF.
-EXTRA_ORACLE["q100_gif_decode"] = """
+# q100: the q60 analytic raster oracle, with every document an image
+# (no wav split) and the wire format pinned to GIF.
+ORACLE["q100_gif_decode"] = """
     WITH img AS (
         SELECT doc_id, (4 + doc_id % 13) AS w, (4 + doc_id % 7) AS h
         FROM documents
@@ -240,8 +221,8 @@ def q195_dominant_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-EXTRA_QUERIES["q195_dominant_frequency"] = q195_dominant_frequency
-EXTRA_ORACLE["q195_dominant_frequency"] = f"""
+QUERIES["q195_dominant_frequency"] = q195_dominant_frequency
+ORACLE["q195_dominant_frequency"] = f"""
     SELECT doc_id,
            8000 AS sample_rate,
            {DOMFREQ_N} AS n_samples,

@@ -158,8 +158,6 @@ def q44_price_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 def q74_approx_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile-sketch companion to q44 (the q57 HLL pattern applied to
     percentiles): exact interpolated percentiles are oracle-pinned, and
@@ -469,34 +467,9 @@ def q108_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    # Round 6 rotation (VERDICT r5 #1): pipeline keeps its three §2
-    # anchors — q40 (staging: P1-P10, F3/F5/F6, A3-A5, U1), q41 (§2.11
-    # SCD2 composite) and q93 (transactional MERGE — no registered
-    # sibling) — and cedes five slots to the q123-q163 backlog.
-    # Displaced (docs/COVERAGE.md "Round 6 rotation" has the map):
-    # q79 medallion e2e (§2.12 keeps q03 registered; the composite
-    # stays pinned by tests/test_e2e.py running CSV→star→Q1-Q4
-    # verbatim), q101 CDC compaction (struct-max compaction machinery
-    # pinned by tests/test_streaming_state.py stream==batch parity;
-    # change-detection family keeps the registered q111 IVM
-    # delta-merge in relational), q108 profiler / q112 histogram
-    # (single-pass aggregate shapes; q140 RFM registers the same
-    # broadcast percentile-cut machinery as q112), q115 time-travel
-    # (operators/scd2.py::as_of stays pinned by tests/test_scd2.py and
-    # §2.11 keeps q41). All five stay value-checked by
-    # check_oracle --extra.
     "q40_staging_clean": q40_staging_clean,
     "q41_scd2_demo": q41_scd2_demo,
     "q93_merge_upsert": q93_merge_upsert,
-}
-
-# Out of the ~50-entry driver registry budget; skew-salting evidence is
-# carried by q48_salted_nation_revenue (same operator, operators/skew.py).
-# Round 3 rotated q42 (SCD2 — q41 keeps §2.11's registered row) and
-# q44 (exact percentiles — superseded in the registry by the GK-sketch
-# q74, which pins the same quantile semantics plus the sketch) out to
-# make room for the q71-q79 families per VERDICT r2 #1.
-EXTRA_QUERIES = {
     "q79_medallion_e2e": q79_medallion_e2e,
     "q101_cdc_snapshot": q101_cdc_snapshot,
     "q108_table_profile": q108_table_profile,
@@ -569,7 +542,7 @@ _SCD2_COMMON = f"""
         )
 """
 
-_ORACLE_ALL = {
+ORACLE = {
     "q92_snapshot_diff": """
         WITH old AS (
             SELECT c_custkey, c_mktsegment AS segment,
@@ -846,9 +819,6 @@ _ORACLE_ALL = {
     """,
 }
 
-ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k not in EXTRA_QUERIES}
-EXTRA_ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k in EXTRA_QUERIES}
-
 
 MERKLE_BUCKETS = 64
 
@@ -945,8 +915,8 @@ def q191_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q191_merkle_diff"] = q191_merkle_diff
-EXTRA_ORACLE["q191_merkle_diff"] = """
+QUERIES["q191_merkle_diff"] = q191_merkle_diff
+ORACLE["q191_merkle_diff"] = """
     WITH old AS (
         SELECT c_custkey, c_mktsegment AS segment,
                ROUND(c_acctbal, 2) AS acctbal
@@ -1044,10 +1014,9 @@ def _q230_oracle_sql() -> str:
     return "\nUNION ALL\n".join(selects) + "\nORDER BY edge"
 
 
-_ORACLE_ALL["q230_fk_integrity"] = _q230_oracle_sql()
+ORACLE["q230_fk_integrity"] = _q230_oracle_sql()
 
-EXTRA_QUERIES["q230_fk_integrity"] = q230_fk_integrity
-EXTRA_ORACLE["q230_fk_integrity"] = _ORACLE_ALL["q230_fk_integrity"]
+QUERIES["q230_fk_integrity"] = q230_fk_integrity
 
 
 FD_CANDIDATES = (
@@ -1116,12 +1085,11 @@ for _name, _table, _det, _dep in FD_CANDIDATES:
     )"""
     )
 
-_ORACLE_ALL["q262_fd_discovery"] = (
+ORACLE["q262_fd_discovery"] = (
     "\n    UNION ALL".join(_Q262_SELECTS) + "\n    ORDER BY fd"
 )
 
-EXTRA_QUERIES["q262_fd_discovery"] = q262_fd_discovery
-EXTRA_ORACLE["q262_fd_discovery"] = _ORACLE_ALL["q262_fd_discovery"]
+QUERIES["q262_fd_discovery"] = q262_fd_discovery
 
 
 SKEW_PARTS = 32
@@ -1208,7 +1176,7 @@ def q264_shuffle_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q264_shuffle_skew_audit"] = f"""
+ORACLE["q264_shuffle_skew_audit"] = f"""
     WITH per_key AS (
         SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS c
         FROM lineitem GROUP BY 1
@@ -1245,8 +1213,7 @@ _ORACLE_ALL["q264_shuffle_skew_audit"] = f"""
     FROM agg a CROSS JOIN tops t CROSS JOIN loads l
 """
 
-EXTRA_QUERIES["q264_shuffle_skew_audit"] = q264_shuffle_skew_audit
-EXTRA_ORACLE["q264_shuffle_skew_audit"] = _ORACLE_ALL["q264_shuffle_skew_audit"]
+QUERIES["q264_shuffle_skew_audit"] = q264_shuffle_skew_audit
 
 
 MERKLE_SHARDS = 16
@@ -1322,7 +1289,7 @@ def q272_merkle_shard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q272_merkle_shard_audit"] = f"""
+ORACLE["q272_merkle_shard_audit"] = f"""
     WITH leaves AS (
         SELECT doc_id % {MERKLE_SHARDS} AS shard, doc_id, n_chars,
                md5('doc:' || doc_id::VARCHAR || ':' || md5(text)) AS leaf
@@ -1343,8 +1310,7 @@ _ORACLE_ALL["q272_merkle_shard_audit"] = f"""
     ORDER BY shard
 """
 
-EXTRA_QUERIES["q272_merkle_shard_audit"] = q272_merkle_shard_audit
-EXTRA_ORACLE["q272_merkle_shard_audit"] = _ORACLE_ALL["q272_merkle_shard_audit"]
+QUERIES["q272_merkle_shard_audit"] = q272_merkle_shard_audit
 
 
 MERKLE_CORRUPT_MOD = 97  # deterministic ~1% corruption in the twin
@@ -1443,7 +1409,7 @@ def q277_merkle_diff_localization(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_ORACLE_ALL["q277_merkle_diff_localization"] = f"""
+ORACLE["q277_merkle_diff_localization"] = f"""
     WITH both_v AS (
         SELECT doc_id % {MERKLE_SHARDS} AS shard, doc_id,
                md5('doc:' || doc_id::VARCHAR || ':' || md5(text)) AS leaf_a,
@@ -1471,10 +1437,7 @@ _ORACLE_ALL["q277_merkle_diff_localization"] = f"""
     ORDER BY shard
 """
 
-EXTRA_QUERIES["q277_merkle_diff_localization"] = q277_merkle_diff_localization
-EXTRA_ORACLE["q277_merkle_diff_localization"] = _ORACLE_ALL[
-    "q277_merkle_diff_localization"
-]
+QUERIES["q277_merkle_diff_localization"] = q277_merkle_diff_localization
 
 
 def q279_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1559,9 +1522,8 @@ def _q279_oracle() -> str:
     return "\n    " + "\n    UNION ALL ".join(sels) + "\n    ORDER BY edge"
 
 
-_ORACLE_ALL["q279_fk_integrity_audit"] = _q279_oracle()
-EXTRA_QUERIES["q279_fk_integrity_audit"] = q279_fk_integrity_audit
-EXTRA_ORACLE["q279_fk_integrity_audit"] = _ORACLE_ALL["q279_fk_integrity_audit"]
+ORACLE["q279_fk_integrity_audit"] = _q279_oracle()
+QUERIES["q279_fk_integrity_audit"] = q279_fk_integrity_audit
 
 
 PROFILE_COLS = (
@@ -1685,6 +1647,5 @@ def _q280_oracle() -> str:
 """
 
 
-_ORACLE_ALL["q280_column_profile"] = _q280_oracle()
-EXTRA_QUERIES["q280_column_profile"] = q280_column_profile
-EXTRA_ORACLE["q280_column_profile"] = _ORACLE_ALL["q280_column_profile"]
+ORACLE["q280_column_profile"] = _q280_oracle()
+QUERIES["q280_column_profile"] = q280_column_profile

@@ -1991,13 +1991,6 @@ def q178_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    # Round 6 rotation (VERDICT r5 #1): the round-5 EXTRA backlog
-    # q123-q163 gains driver-side CORRECTNESS rows. Relational keeps
-    # q03 (§2.12 dashboard + P11 param pushdown; benched), q78
-    # (Expand-reshape family — no incoming sibling), q97 (graph +
-    # reliable-checkpoint iteration — no incoming sibling) and q111
-    # (join-aggregate IVM — no incoming sibling) as family anchors;
-    # see docs/COVERAGE.md for the per-displacement evidence map.
     "q03_product_sales_in_year": q03_product_sales_in_year,
     "q78_unpivot_metrics": q78_unpivot_metrics,
     "q97_nation_trade_pagerank": q97_nation_trade_pagerank,
@@ -2023,56 +2016,6 @@ QUERIES = {
     "q161_ab_test_ztest": q161_ab_test_ztest,
     "q162_revenue_gini": q162_revenue_gini,
     "q163_supplier_hhi": q163_supplier_hhi,
-}
-
-# Still first-class operators (pytest-covered via collect_extra_queries
-# and value-checked by tools/check_oracle.py --extra); kept out of the
-# driver registry because its CORRECTNESS run checks at most ~50
-# entries per round (round 1 stopped at exactly 50) and each item here
-# duplicates §2 evidence already carried by a registered query:
-# banding (q06->q25), multi-agg stats (q07->q01), union+dedup
-# (q10->q33/q40), countDistinct (q12->q46/q57), ratio aggs (q14->q01),
-# rollup/cube (q15/q17->q55), EXCEPT (q19->q18 set-ops), semi-join
-# (q09->q41's SCD2 semi/anti split), window-vs-avg (q26->q11),
-# window-chain analytics (q49->q11/q21/q29), date spans (q27->q02/q20/
-# q24 date arithmetic), generator spine (q59->q45 sequence/explode).
-# Round 2 rotated q07/q09/q27/q49 out to register the curation family
-# (q67-q70) with driver-side oracle evidence.
-# Round 3 rotated q04/q05 (same 3-way join+agg shape as the still-
-# registered q02/q03), q58 (SQL-surface twin of q01, also run verbatim
-# in tests/test_e2e.py), q16 (pivot — mirrored by newly-registered
-# q78 unpivot) and q18 (set-intersection; EXCEPT twin q19 was already
-# here) out, making room for the q71-q79 families per VERDICT r2 #1.
-# Round 4 rotated q48 (salted join/agg — the registered q81 pins the
-# same operators/skew.py machinery on a measured 20%-hot zipf fixture),
-# q08 (left-anti — §2.3 J2 keeps its registered row via q41's SCD2
-# anti-join leg), q55 (grouping sets — the Expand-based reshape family
-# keeps q78's registered unpivot row; rollup/cube siblings q15/q17 were
-# already EXTRA) and q57 (HLL count-distinct — the sketch family keeps
-# q74's GK-quantile registered row; the HLL error bound stays pinned by
-# tests/test_workload.py::test_approx_distinct_within_error_bound and
-# the streaming windowed_unique_users test) out, making room for the
-# r3 net-new families q80-q92 per VERDICT r3 #1.
-# Round 4 (late rotation) also displaced q01/q02 (pricing summary and
-# the flagship revenue rollup — §2.4 A6-A7/§2.6 O1-O2/§2.8 F3-F6 keep
-# registered rows via q03 + q40, q02 remains the driver's entry()
-# smoke check AND a benched query, q01 remains benched) and q13
-# (HAVING-on-aggregate — §2.2 P5 keeps registered rows via q82's and
-# q87's min-support HAVING thresholds), making room for the round-4
-# families q97/q104/q107.
-EXTRA_QUERIES = {
-    # Round 6 rotation displacements (each with retained registered
-    # evidence — docs/COVERAGE.md "Round 6 rotation" has the map):
-    # q11 top-k-per-group rank (integer-rank windows keep registered
-    # rows via q147's RRF ranks and q153's path ranking; q11 stays
-    # oracle-checked here), q104 triangles (graph family keeps q97's
-    # registered iteration machinery; α=0.13 10x probe stands), q107
-    # OLS (statistics family keeps q156/q159-q163 registered), q110
-    # co-purchase pairs (q141 registers the SAME operators/baskets.py
-    # A-priori machinery plus the rule layer on top), q117 ABC
-    # classification (q140 RFM registers the same percentile-cut
-    # segmentation shape), q119/q120 TPC-H Q15/Q22 (the TPC-H analog
-    # family now holds eight registered rows, q127-q134).
     "q11_top3_orders_per_customer": q11_top3_orders_per_customer,
     "q104_triangle_counts": q104_triangle_counts,
     "q107_price_trend_ols": q107_price_trend_ols,
@@ -2139,7 +2082,7 @@ _PR_ITER_CTES = ",\n".join(
     for i in range(1, 6)
 )
 
-_ORACLE_ALL = {
+ORACLE = {
     "q97_nation_trade_pagerank": f"""
         WITH edges AS (
             SELECT c.c_nationkey AS src, s.s_nationkey AS dst, COUNT(*)::DOUBLE AS w
@@ -2446,9 +2389,7 @@ _ORACLE_ALL = {
     """,
 }
 
-# Driver registry sees only oracles for registered queries; the rest
-# back the EXTRA_QUERIES in local parity checks (tools/check_oracle.py).
-_ORACLE_ALL["q104_triangle_counts"] = f"""
+ORACLE["q104_triangle_counts"] = f"""
     WITH raw AS (
         SELECT ('0x' || substr(md5('ta:' || o_orderkey::VARCHAR), 1, 15))::BIGINT
                    % {TRIANGLE_MOD} AS s,
@@ -2475,7 +2416,7 @@ _ORACLE_ALL["q104_triangle_counts"] = f"""
 
 from batchprocessingetl_spark.operators.stats import group_ols_sql_duckdb as _ols_sql
 
-_ORACLE_ALL["q107_price_trend_ols"] = (
+ORACLE["q107_price_trend_ols"] = (
     _ols_sql(
         "orders",
         ["o_orderpriority"],
@@ -2485,7 +2426,7 @@ _ORACLE_ALL["q107_price_trend_ols"] = (
     + " ORDER BY o_orderpriority"
 )
 
-_ORACLE_ALL["q110_copurchase_pairs"] = f"""
+ORACLE["q110_copurchase_pairs"] = f"""
     WITH bp AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     )
@@ -2499,7 +2440,7 @@ _ORACLE_ALL["q110_copurchase_pairs"] = f"""
 """
 
 # full recompute over ALL lineitem — the IVM merge must equal this
-_ORACLE_ALL["q111_ivm_nation_revenue"] = """
+ORACLE["q111_ivm_nation_revenue"] = """
     SELECT n.n_name AS nation,
            CAST(ROUND(SUM(CAST(l_extendedprice * (1 - l_discount)
                                AS DECIMAL(28,6))), 2) AS DOUBLE)
@@ -2513,7 +2454,7 @@ _ORACLE_ALL["q111_ivm_nation_revenue"] = """
     ORDER BY nation
 """
 
-_ORACLE_ALL["q117_abc_analysis"] = f"""
+ORACLE["q117_abc_analysis"] = f"""
     WITH per_part AS (
         SELECT p.p_brand, p.p_partkey,
                SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -2539,7 +2480,7 @@ _ORACLE_ALL["q117_abc_analysis"] = f"""
     ORDER BY p_brand, abc
 """
 
-_ORACLE_ALL["q119_top_suppliers"] = """
+ORACLE["q119_top_suppliers"] = """
     WITH per_supp AS (
         SELECT l_suppkey,
                SUM(CAST(l_extendedprice * (1 - l_discount)
@@ -2556,7 +2497,7 @@ _ORACLE_ALL["q119_top_suppliers"] = """
     ORDER BY s.s_suppkey
 """
 
-_ORACLE_ALL["q120_idle_customer_balances"] = f"""
+ORACLE["q120_idle_customer_balances"] = f"""
     WITH base AS (
         SELECT * FROM customer
         WHERE c_mktsegment IN ({", ".join(f"'{s}'" for s in IDLE_SEGMENTS)})
@@ -2576,7 +2517,7 @@ _ORACLE_ALL["q120_idle_customer_balances"] = f"""
     ORDER BY c_mktsegment
 """
 
-_ORACLE_ALL["q127_large_volume_orders"] = f"""
+ORACLE["q127_large_volume_orders"] = f"""
     WITH big AS (
         SELECT l_orderkey, SUM(CAST(l_quantity AS DECIMAL(18,2))) AS total_qty
         FROM lineitem
@@ -2593,7 +2534,7 @@ _ORACLE_ALL["q127_large_volume_orders"] = f"""
     ORDER BY total_qty DESC, o.o_orderkey
 """
 
-_ORACLE_ALL["q128_sole_blame_suppliers"] = """
+ORACLE["q128_sole_blame_suppliers"] = """
     WITH pairs AS (
         SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
     ), ret_pairs AS (
@@ -2615,7 +2556,7 @@ _ORACLE_ALL["q128_sole_blame_suppliers"] = """
     ORDER BY numwait DESC, s.s_suppkey
 """
 
-_ORACLE_ALL["q129_important_parts"] = f"""
+ORACLE["q129_important_parts"] = f"""
     WITH per_part AS (
         SELECT l_partkey,
                SUM(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(28,6)))
@@ -2634,7 +2575,7 @@ _ORACLE_ALL["q129_important_parts"] = f"""
     ORDER BY value DESC, p.p_partkey
 """
 
-_ORACLE_ALL["q130_rolling_revenue_range"] = """
+ORACLE["q130_rolling_revenue_range"] = """
     WITH daily AS (
         SELECT o.o_orderpriority,
                datediff('day', DATE '1990-01-01',
@@ -2654,7 +2595,7 @@ _ORACLE_ALL["q130_rolling_revenue_range"] = """
     ORDER BY o_orderpriority, day_idx
 """
 
-_ORACLE_ALL["q131_small_quantity_revenue"] = f"""
+ORACLE["q131_small_quantity_revenue"] = f"""
     WITH parts_f AS (
         SELECT p_partkey, p_brand FROM part WHERE p_type = '{Q17_TYPE}'
     ), per_part AS (
@@ -2682,7 +2623,7 @@ _Q19_SQL_BRANCHES = " OR ".join(
     f" AND l.l_quantity BETWEEN {qlo} AND {qhi})"
     for b, smax, qlo, qhi in Q19_BANDS
 )
-_ORACLE_ALL["q132_banded_promo_revenue"] = f"""
+ORACLE["q132_banded_promo_revenue"] = f"""
     SELECT p.p_brand,
            CAST(ROUND(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
                                AS DECIMAL(28,6))), 2) AS DOUBLE) AS revenue,
@@ -2693,7 +2634,7 @@ _ORACLE_ALL["q132_banded_promo_revenue"] = f"""
     ORDER BY p.p_brand
 """
 
-_ORACLE_ALL["q133_market_share"] = f"""
+ORACLE["q133_market_share"] = f"""
     WITH base AS (
         SELECT EXTRACT(year FROM o.o_orderdate) AS o_year,
                CAST(l.l_extendedprice * (1 - l.l_discount)
@@ -2726,7 +2667,7 @@ _ORACLE_ALL["q133_market_share"] = f"""
     ORDER BY o_year
 """
 
-_ORACLE_ALL["q134_nation_pair_volume"] = f"""
+ORACLE["q134_nation_pair_volume"] = f"""
     SELECT sn.n_name AS supp_nation,
            cn.n_name AS cust_nation,
            CAST(EXTRACT(year FROM l.l_shipdate) AS INT) AS l_year,
@@ -2744,7 +2685,7 @@ _ORACLE_ALL["q134_nation_pair_volume"] = f"""
     ORDER BY 1, 2, 3
 """
 
-_ORACLE_ALL["q141_copurchase_rules"] = f"""
+ORACLE["q141_copurchase_rules"] = f"""
     WITH bp AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ), pairs AS (
@@ -2771,7 +2712,7 @@ _ORACLE_ALL["q141_copurchase_rules"] = f"""
     ORDER BY p.part_a, p.part_b
 """
 
-_ORACLE_ALL["q142_cohort_ltv"] = """
+ORACLE["q142_cohort_ltv"] = """
     WITH first AS (
         SELECT o_custkey, MIN(EXTRACT(year FROM o_orderdate))::INT AS cohort
         FROM orders GROUP BY 1
@@ -2793,7 +2734,7 @@ _ORACLE_ALL["q142_cohort_ltv"] = """
     ORDER BY cohort, age
 """
 
-_ORACLE_ALL["q156_weighted_median_price"] = """
+ORACLE["q156_weighted_median_price"] = """
     WITH staged AS (
         SELECT l_returnflag, l_extendedprice,
                SUM(CAST(l_quantity AS BIGINT)) OVER (
@@ -2813,7 +2754,7 @@ _ORACLE_ALL["q156_weighted_median_price"] = """
     ORDER BY l_returnflag
 """
 
-_ORACLE_ALL["q162_revenue_gini"] = """
+ORACLE["q162_revenue_gini"] = """
     WITH per_cust AS (
         SELECT c.c_mktsegment, c.c_custkey,
                SUM(CAST(o.o_totalprice AS DECIMAL(28,6))) AS rev
@@ -2837,7 +2778,7 @@ _ORACLE_ALL["q162_revenue_gini"] = """
     ORDER BY c_mktsegment
 """
 
-_ORACLE_ALL["q163_supplier_hhi"] = """
+ORACLE["q163_supplier_hhi"] = """
     WITH per_supp AS (
         SELECT n.n_name AS nation, s.s_suppkey,
                SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
@@ -2857,7 +2798,7 @@ _ORACLE_ALL["q163_supplier_hhi"] = """
     ORDER BY p.nation
 """
 
-_ORACLE_ALL["q160_kaplan_meier"] = f"""
+ORACLE["q160_kaplan_meier"] = f"""
     WITH cust AS (
         SELECT o_custkey,
                datediff('day', CAST(MIN(o_orderdate) AS DATE),
@@ -2887,7 +2828,7 @@ _ORACLE_ALL["q160_kaplan_meier"] = f"""
     ORDER BY lt
 """
 
-_ORACLE_ALL["q161_ab_test_ztest"] = f"""
+ORACLE["q161_ab_test_ztest"] = f"""
     WITH per_user AS (
         SELECT user_id,
                MAX(CASE WHEN event_type = '{AB_PURCHASE}'
@@ -2916,7 +2857,7 @@ _ORACLE_ALL["q161_ab_test_ztest"] = f"""
     FROM r
 """
 
-_ORACLE_ALL["q159_benford_digit_audit"] = """
+ORACLE["q159_benford_digit_audit"] = """
     WITH d AS (
         SELECT CAST(substr(CAST(CAST(o_totalprice AS DECIMAL(15,2)) AS VARCHAR),
                            1, 1) AS INT) AS digit
@@ -2932,7 +2873,7 @@ _ORACLE_ALL["q159_benford_digit_audit"] = """
     ORDER BY digit
 """
 
-_ORACLE_ALL["q150_temporal_embargo_split"] = f"""
+ORACLE["q150_temporal_embargo_split"] = f"""
     SELECT o_orderkey,
            CASE WHEN o_orderdate < TIMESTAMP '{EMBARGO_CUT} 00:00:00'
                      - INTERVAL {EMBARGO_DAYS} DAYS THEN 'train'
@@ -2957,7 +2898,7 @@ def _rfm_score_sql(c: str) -> str:
     )
 
 
-_ORACLE_ALL["q140_rfm_segments"] = f"""
+ORACLE["q140_rfm_segments"] = f"""
     WITH per_cust AS (
         SELECT o_custkey,
                datediff('day', DATE '{RFM_EPOCH}',
@@ -2979,7 +2920,7 @@ _ORACLE_ALL["q140_rfm_segments"] = f"""
     ORDER BY o_custkey
 """
 
-_ORACLE_ALL["q164_min_cost_supplier"] = f"""
+ORACLE["q164_min_cost_supplier"] = f"""
     WITH eu_supp AS (
         SELECT s.s_suppkey, s.s_name, s.s_acctbal
         FROM supplier s
@@ -3008,7 +2949,7 @@ _ORACLE_ALL["q164_min_cost_supplier"] = f"""
     ORDER BY p.p_partkey, e.s_suppkey
 """
 
-_ORACLE_ALL["q165_late_shipment_priority"] = f"""
+ORACLE["q165_late_shipment_priority"] = f"""
     SELECT o_orderpriority, COUNT(*) AS order_count
     FROM orders o
     WHERE o.o_orderdate >= TIMESTAMP '{Q4_START} 00:00:00'
@@ -3022,7 +2963,7 @@ _ORACLE_ALL["q165_late_shipment_priority"] = f"""
     ORDER BY o_orderpriority
 """
 
-_ORACLE_ALL["q166_nation_profit"] = f"""
+ORACLE["q166_nation_profit"] = f"""
     SELECT n.n_name AS nation,
            EXTRACT(YEAR FROM o.o_orderdate) AS o_year,
            {dsum_sql(f"l.l_extendedprice * (1 - l.l_discount)"
@@ -3037,7 +2978,7 @@ _ORACLE_ALL["q166_nation_profit"] = f"""
     ORDER BY nation, o_year DESC
 """
 
-_ORACLE_ALL["q167_returned_item_customers"] = f"""
+ORACLE["q167_returned_item_customers"] = f"""
     WITH per_cust AS (
         SELECT o.o_custkey,
                {dsum_sql("l.l_extendedprice * (1 - l.l_discount)")} AS revenue
@@ -3058,7 +2999,7 @@ _ORACLE_ALL["q167_returned_item_customers"] = f"""
     LIMIT {Q10_TOPK}
 """
 
-_ORACLE_ALL["q168_dominant_suppliers"] = f"""
+ORACLE["q168_dominant_suppliers"] = f"""
     WITH per_ps AS (
         SELECT l_partkey, l_suppkey,
                SUM(CAST(l_quantity AS DECIMAL(18,2))) AS sq
@@ -3081,7 +3022,7 @@ _ORACLE_ALL["q168_dominant_suppliers"] = f"""
     ORDER BY c.n_parts DESC, s.s_suppkey
 """
 
-_ORACLE_ALL["q174_forecast_revenue_delta"] = f"""
+ORACLE["q174_forecast_revenue_delta"] = f"""
     SELECT {dsum_sql("l_extendedprice * l_discount")} AS revenue,
            COUNT(*) AS n_lines
     FROM lineitem
@@ -3091,7 +3032,7 @@ _ORACLE_ALL["q174_forecast_revenue_delta"] = f"""
       AND l_quantity < {Q6_MAX_QTY}
 """
 
-_ORACLE_ALL["q175_shipping_speed_priority"] = f"""
+ORACLE["q175_shipping_speed_priority"] = f"""
     WITH joined AS (
         SELECT CASE
                    WHEN date_diff('day', o.o_orderdate, l.l_shipdate)
@@ -3117,7 +3058,7 @@ _ORACLE_ALL["q175_shipping_speed_priority"] = f"""
     ORDER BY 1
 """
 
-_ORACLE_ALL["q176_promo_revenue_share"] = f"""
+ORACLE["q176_promo_revenue_share"] = f"""
     SELECT EXTRACT(MONTH FROM l.l_shipdate) AS ship_month,
            ROUND(CAST(SUM(CAST(CASE WHEN p.p_type = 'PROMO'
                        THEN l.l_extendedprice * (1 - l.l_discount)
@@ -3134,7 +3075,7 @@ _ORACLE_ALL["q176_promo_revenue_share"] = f"""
     ORDER BY 1
 """
 
-_ORACLE_ALL["q177_part_supplier_counts"] = f"""
+ORACLE["q177_part_supplier_counts"] = f"""
     SELECT p.p_brand, p.p_type, p.p_size,
            COUNT(DISTINCT l.l_suppkey) AS supplier_cnt
     FROM lineitem l
@@ -3180,10 +3121,7 @@ def _q178_oracle() -> str:
 """
 
 
-_ORACLE_ALL["q178_join_size_estimate"] = _q178_oracle()
-
-ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k not in EXTRA_QUERIES}
-EXTRA_ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k in EXTRA_QUERIES}
+ORACLE["q178_join_size_estimate"] = _q178_oracle()
 
 
 def q186_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3215,7 +3153,7 @@ def q186_customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-_ORACLE_ALL["q186_customer_order_distribution"] = """
+ORACLE["q186_customer_order_distribution"] = """
     WITH per_cust AS (
         SELECT c.c_custkey, COUNT(o.o_orderkey) AS c_count
         FROM customer c
@@ -3230,10 +3168,7 @@ _ORACLE_ALL["q186_customer_order_distribution"] = """
     ORDER BY custdist DESC, c_count DESC
 """
 
-EXTRA_QUERIES["q186_customer_order_distribution"] = q186_customer_order_distribution
-EXTRA_ORACLE["q186_customer_order_distribution"] = _ORACLE_ALL[
-    "q186_customer_order_distribution"
-]
+QUERIES["q186_customer_order_distribution"] = q186_customer_order_distribution
 
 
 BFS_SEED_MOD = 500
@@ -3303,8 +3238,8 @@ def _q190_oracle_sql(k: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q190_trade_reach_bfs"] = q190_trade_reach_bfs
-EXTRA_ORACLE["q190_trade_reach_bfs"] = _q190_oracle_sql(BFS_HOPS)
+QUERIES["q190_trade_reach_bfs"] = q190_trade_reach_bfs
+ORACLE["q190_trade_reach_bfs"] = _q190_oracle_sql(BFS_HOPS)
 
 
 AA_TOP = 20
@@ -3347,7 +3282,7 @@ def q217_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q217_adamic_adar"] = f"""
+ORACLE["q217_adamic_adar"] = f"""
     WITH baskets AS (
         SELECT DISTINCT l_orderkey, l_partkey FROM lineitem
     ), deg AS (
@@ -3369,8 +3304,7 @@ _ORACLE_ALL["q217_adamic_adar"] = f"""
     LIMIT {AA_TOP}
 """
 
-EXTRA_QUERIES["q217_adamic_adar"] = q217_adamic_adar
-EXTRA_ORACLE["q217_adamic_adar"] = _ORACLE_ALL["q217_adamic_adar"]
+QUERIES["q217_adamic_adar"] = q217_adamic_adar
 
 
 CF_MIN_CO = 3
@@ -3448,7 +3382,7 @@ def q221_itemitem_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q221_itemitem_cf"] = f"""
+ORACLE["q221_itemitem_cf"] = f"""
     WITH inc AS (
         SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS item
         FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -3482,8 +3416,7 @@ _ORACLE_ALL["q221_itemitem_cf"] = f"""
     ORDER BY item, rank
 """
 
-EXTRA_QUERIES["q221_itemitem_cf"] = q221_itemitem_cf
-EXTRA_ORACLE["q221_itemitem_cf"] = _ORACLE_ALL["q221_itemitem_cf"]
+QUERIES["q221_itemitem_cf"] = q221_itemitem_cf
 
 
 HITS_STEPS = 3
@@ -3607,8 +3540,8 @@ def _q241_oracle_sql(k: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q241_hits_hubs_authorities"] = q241_hits_hubs_authorities
-EXTRA_ORACLE["q241_hits_hubs_authorities"] = _q241_oracle_sql(HITS_STEPS)
+QUERIES["q241_hits_hubs_authorities"] = q241_hits_hubs_authorities
+ORACLE["q241_hits_hubs_authorities"] = _q241_oracle_sql(HITS_STEPS)
 
 
 PVM_Y0, PVM_Y1 = 1996, 1997
@@ -3685,7 +3618,7 @@ def q243_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("brand")
 
 
-_ORACLE_ALL["q243_price_volume_mix"] = f"""
+ORACLE["q243_price_volume_mix"] = f"""
     WITH base AS (
         SELECT p.p_brand AS brand, EXTRACT(year FROM o.o_orderdate) AS y,
                l.l_quantity AS qty,
@@ -3726,8 +3659,7 @@ _ORACLE_ALL["q243_price_volume_mix"] = f"""
     FROM eff ORDER BY brand
 """
 
-EXTRA_QUERIES["q243_price_volume_mix"] = q243_price_volume_mix
-EXTRA_ORACLE["q243_price_volume_mix"] = _ORACLE_ALL["q243_price_volume_mix"]
+QUERIES["q243_price_volume_mix"] = q243_price_volume_mix
 
 
 def q246_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3778,7 +3710,7 @@ def q246_pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q246_pareto_frontier"] = """
+ORACLE["q246_pareto_frontier"] = """
     WITH p AS (
         SELECT p_brand AS brand, p_partkey AS partkey,
                CAST(FLOOR(p_retailprice * 100 + 0.5) AS BIGINT) AS price_cents,
@@ -3796,8 +3728,7 @@ _ORACLE_ALL["q246_pareto_frontier"] = """
     ORDER BY brand, price_cents, partkey
 """
 
-EXTRA_QUERIES["q246_pareto_frontier"] = q246_pareto_frontier
-EXTRA_ORACLE["q246_pareto_frontier"] = _ORACLE_ALL["q246_pareto_frontier"]
+QUERIES["q246_pareto_frontier"] = q246_pareto_frontier
 
 
 def q247_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3849,7 +3780,7 @@ def q247_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lt")
 
 
-_ORACLE_ALL["q247_nelson_aalen"] = f"""
+ORACLE["q247_nelson_aalen"] = f"""
     WITH cust AS (
         SELECT o_custkey,
                DATE_DIFF('day', MIN(o_orderdate), MAX(o_orderdate)) AS lt,
@@ -3877,8 +3808,7 @@ _ORACLE_ALL["q247_nelson_aalen"] = f"""
     FROM terms ORDER BY lt
 """
 
-EXTRA_QUERIES["q247_nelson_aalen"] = q247_nelson_aalen
-EXTRA_ORACLE["q247_nelson_aalen"] = _ORACLE_ALL["q247_nelson_aalen"]
+QUERIES["q247_nelson_aalen"] = q247_nelson_aalen
 
 
 LPA_STEPS = 4
@@ -4004,8 +3934,8 @@ def _q251_oracle_sql(k: int) -> str:
     )
 
 
-EXTRA_QUERIES["q251_label_propagation"] = q251_label_propagation
-EXTRA_ORACLE["q251_label_propagation"] = _q251_oracle_sql(LPA_STEPS)
+QUERIES["q251_label_propagation"] = q251_label_propagation
+ORACLE["q251_label_propagation"] = _q251_oracle_sql(LPA_STEPS)
 
 
 def q319_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4113,8 +4043,8 @@ def _q319_oracle_sql(k: int) -> str:
     )
 
 
-EXTRA_QUERIES["q319_modularity_score"] = q319_modularity_score
-EXTRA_ORACLE["q319_modularity_score"] = _q319_oracle_sql(LPA_STEPS)
+QUERIES["q319_modularity_score"] = q319_modularity_score
+ORACLE["q319_modularity_score"] = _q319_oracle_sql(LPA_STEPS)
 
 
 CONTRIB_Y0, CONTRIB_Y1 = 1996, 1997
@@ -4190,7 +4120,7 @@ def q255_delta_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranked
 
 
-_ORACLE_ALL["q255_delta_contribution"] = f"""
+ORACLE["q255_delta_contribution"] = f"""
     WITH cells AS (
         SELECT n.n_name AS nation, c.c_mktsegment AS segment,
                SUM(CASE WHEN EXTRACT(year FROM o.o_orderdate) = {CONTRIB_Y0}
@@ -4223,8 +4153,7 @@ _ORACLE_ALL["q255_delta_contribution"] = f"""
     FROM ranked WHERE rank <= {CONTRIB_TOP} ORDER BY rank
 """
 
-EXTRA_QUERIES["q255_delta_contribution"] = q255_delta_contribution
-EXTRA_ORACLE["q255_delta_contribution"] = _ORACLE_ALL["q255_delta_contribution"]
+QUERIES["q255_delta_contribution"] = q255_delta_contribution
 
 
 CH_NODES, CH_VNODES = 8, 32
@@ -4383,7 +4312,7 @@ def _q256_ring_cte(tag: str, n_nodes: int) -> str:
     )"""
 
 
-_ORACLE_ALL["q256_consistent_hash_rebalance"] = f"""
+ORACLE["q256_consistent_hash_rebalance"] = f"""
     WITH keys AS (
         SELECT c_custkey AS k,
                md5('key:' || c_custkey::VARCHAR) AS h
@@ -4404,10 +4333,7 @@ _ORACLE_ALL["q256_consistent_hash_rebalance"] = f"""
     FROM asg_a a JOIN asg_b b USING (k) JOIN keys kk USING (k)
 """
 
-EXTRA_QUERIES["q256_consistent_hash_rebalance"] = q256_consistent_hash_rebalance
-EXTRA_ORACLE["q256_consistent_hash_rebalance"] = _ORACLE_ALL[
-    "q256_consistent_hash_rebalance"
-]
+QUERIES["q256_consistent_hash_rebalance"] = q256_consistent_hash_rebalance
 
 
 LOGRANK_SEG = "AUTOMOBILE"
@@ -4497,7 +4423,7 @@ def q257_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q257_logrank_test"] = f"""
+ORACLE["q257_logrank_test"] = f"""
     WITH cust AS (
         SELECT lt, churned,
                CASE WHEN c.c_mktsegment = '{LOGRANK_SEG}' THEN 1 ELSE 0 END AS g
@@ -4542,8 +4468,7 @@ _ORACLE_ALL["q257_logrank_test"] = f"""
     FROM terms
 """
 
-EXTRA_QUERIES["q257_logrank_test"] = q257_logrank_test
-EXTRA_ORACLE["q257_logrank_test"] = _ORACLE_ALL["q257_logrank_test"]
+QUERIES["q257_logrank_test"] = q257_logrank_test
 
 
 KCORE_K = 3
@@ -4639,8 +4564,8 @@ def _q261_oracle_sql(k: int, rounds: int) -> str:
     return "".join(parts) + "\n    " + "\n    UNION ALL ".join(sels) + "\n    ORDER BY round"
 
 
-EXTRA_QUERIES["q261_kcore_decomposition"] = q261_kcore_decomposition
-EXTRA_ORACLE["q261_kcore_decomposition"] = _q261_oracle_sql(KCORE_K, KCORE_ROUNDS)
+QUERIES["q261_kcore_decomposition"] = q261_kcore_decomposition
+ORACLE["q261_kcore_decomposition"] = _q261_oracle_sql(KCORE_K, KCORE_ROUNDS)
 
 
 # ---------------------------------------------------------------------------
@@ -4683,7 +4608,7 @@ def q273_cube_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q273_cube_revenue"] = """
+ORACLE["q273_cube_revenue"] = """
     SELECT o_orderstatus, o_orderpriority, o_year,
            CAST(COUNT(*) AS BIGINT) AS n_orders,
            CAST(SUM(cents) AS BIGINT) AS revenue_cents,
@@ -4702,8 +4627,7 @@ _ORACLE_ALL["q273_cube_revenue"] = """
              o_year NULLS FIRST
 """
 
-EXTRA_QUERIES["q273_cube_revenue"] = q273_cube_revenue
-EXTRA_ORACLE["q273_cube_revenue"] = _ORACLE_ALL["q273_cube_revenue"]
+QUERIES["q273_cube_revenue"] = q273_cube_revenue
 
 
 AQP_MOD = 100  # deterministic 1-in-100 hash sample
@@ -4785,7 +4709,7 @@ def q270_aqp_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority")
 
 
-_ORACLE_ALL["q270_aqp_sample_estimate"] = f"""
+ORACLE["q270_aqp_sample_estimate"] = f"""
     WITH base AS (
         SELECT o_orderpriority,
                CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -4825,8 +4749,7 @@ _ORACLE_ALL["q270_aqp_sample_estimate"] = f"""
     ORDER BY o_orderpriority
 """
 
-EXTRA_QUERIES["q270_aqp_sample_estimate"] = q270_aqp_sample_estimate
-EXTRA_ORACLE["q270_aqp_sample_estimate"] = _ORACLE_ALL["q270_aqp_sample_estimate"]
+QUERIES["q270_aqp_sample_estimate"] = q270_aqp_sample_estimate
 
 
 def q276_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4859,7 +4782,7 @@ def q276_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q276_relational_division"] = """
+ORACLE["q276_relational_division"] = """
     WITH n AS (
         SELECT COUNT(DISTINCT o_orderpriority) AS n_classes FROM orders
     )
@@ -4873,8 +4796,7 @@ _ORACLE_ALL["q276_relational_division"] = """
     ORDER BY o_custkey
 """
 
-EXTRA_QUERIES["q276_relational_division"] = q276_relational_division
-EXTRA_ORACLE["q276_relational_division"] = _ORACLE_ALL["q276_relational_division"]
+QUERIES["q276_relational_division"] = q276_relational_division
 
 
 def q283_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4930,7 +4852,7 @@ def q283_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q283_benford_audit"] = """
+ORACLE["q283_benford_audit"] = """
     WITH grid AS (
         SELECT o_orderpriority AS priority,
                CAST(SUBSTRING(CAST(CAST(FLOOR(o_totalprice) AS BIGINT)
@@ -4962,8 +4884,7 @@ _ORACLE_ALL["q283_benford_audit"] = """
                     OVER (PARTITION BY priority) AS DOUBLE) AS chi2
     FROM contribd ORDER BY priority, d
 """
-EXTRA_QUERIES["q283_benford_audit"] = q283_benford_audit
-EXTRA_ORACLE["q283_benford_audit"] = _ORACLE_ALL["q283_benford_audit"]
+QUERIES["q283_benford_audit"] = q283_benford_audit
 
 
 def q286_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5048,7 +4969,7 @@ def q286_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q286_decision_stump"] = """
+ORACLE["q286_decision_stump"] = """
     WITH rows_u AS (
         SELECT 'quantity' AS feature, CAST(l_quantity AS INT) AS v,
                CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END AS pos
@@ -5107,5 +5028,4 @@ _ORACLE_ALL["q286_decision_stump"] = """
                AS is_best
     FROM scored ORDER BY feature, threshold
 """
-EXTRA_QUERIES["q286_decision_stump"] = q286_decision_stump
-EXTRA_ORACLE["q286_decision_stump"] = _ORACLE_ALL["q286_decision_stump"]
+QUERIES["q286_decision_stump"] = q286_decision_stump

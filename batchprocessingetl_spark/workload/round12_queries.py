@@ -601,9 +601,7 @@ def q352_source_trigram_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-
-EXTRA_QUERIES = {
+QUERIES = {
     "q345_ams_f2_sketch": q345_ams_f2_sketch,
     "q346_ann_recall_audit": q346_ann_recall_audit,
     "q347_fairness_audit": q347_fairness_audit,
@@ -696,9 +694,7 @@ def _q351_oracle() -> str:
 """
 
 
-ORACLE: dict = {}
-
-EXTRA_ORACLE = {
+ORACLE = {
     "q345_ams_f2_sketch": f"""
     WITH counts AS (
         SELECT user_id, COUNT(*) AS c FROM events
@@ -858,8 +854,8 @@ EXTRA_ORACLE = {
 """,
 }
 
-EXTRA_ORACLE["q346_ann_recall_audit"] = _q346_oracle()
-EXTRA_ORACLE["q351_lsh_bucket_health"] = _q351_oracle()
+ORACLE["q346_ann_recall_audit"] = _q346_oracle()
+ORACLE["q351_lsh_bucket_health"] = _q351_oracle()
 
 
 # ---------------------------------------------------------------------------
@@ -1356,7 +1352,7 @@ def q360_dedup_token_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES.update(
+QUERIES.update(
     {
         "q353_vif_collinearity": q353_vif_collinearity,
         "q354_bartlett_test": q354_bartlett_test,
@@ -1372,7 +1368,7 @@ EXTRA_QUERIES.update(
 
 _CENTS_SQL = "CAST(FLOOR({col} * 100 + 0.5) AS BIGINT)"
 
-EXTRA_ORACLE.update(
+ORACLE.update(
     {
         "q353_vif_collinearity": """
     WITH base AS (
@@ -1954,7 +1950,7 @@ def q366_gunning_fog(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("source")
 
 
-EXTRA_QUERIES.update(
+QUERIES.update(
     {
         "q361_cross_source_dup_matrix": q361_cross_source_dup_matrix,
         "q362_keyness_g2": q362_keyness_g2,
@@ -1966,7 +1962,7 @@ EXTRA_QUERIES.update(
 )
 
 
-EXTRA_ORACLE.update(
+ORACLE.update(
     {
         "q361_cross_source_dup_matrix": f"""
     WITH per_text AS (
@@ -2341,14 +2337,14 @@ def q368_littles_law_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES.update(
+QUERIES.update(
     {
         "q367_growth_accounting": q367_growth_accounting,
         "q368_littles_law_audit": q368_littles_law_audit,
     }
 )
 
-EXTRA_ORACLE.update(
+ORACLE.update(
     {
         "q367_growth_accounting": """
     WITH ud AS (

@@ -538,10 +538,7 @@ def q374_cms_stream_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-ORACLE: dict = {}
-
-EXTRA_QUERIES = {
+QUERIES = {
     "q369_ams_stream_estimate": q369_ams_stream_estimate,
     "q370_isotonic_calibration": q370_isotonic_calibration,
     "q371_gini_concentration": q371_gini_concentration,
@@ -558,7 +555,7 @@ from batchprocessingetl_spark.operators.text import TOKENS_SQL_DUCKDB as _TOKENS
 
 _TOKENS_SQL = _TOKENS_TPL.format(col="text")
 
-EXTRA_ORACLE = {
+ORACLE = {
     "q370_isotonic_calibration": f"""
     WITH mx AS (SELECT MAX(o_totalprice) AS mx FROM orders),
     scored AS (
@@ -699,7 +696,7 @@ EXTRA_ORACLE = {
 
 from batchprocessingetl_spark.operators.sketches import cms_sql_duckdb as _cms_sql
 
-EXTRA_ORACLE["q373_count_min_sketch"] = f"""
+ORACLE["q373_count_min_sketch"] = f"""
     WITH terms AS (
         SELECT unnest({_TOKENS_SQL}) AS term FROM documents
     ), exact AS (
@@ -730,7 +727,7 @@ EXTRA_ORACLE["q373_count_min_sketch"] = f"""
     FROM est, tot ORDER BY exact_cnt DESC, term
 """
 
-EXTRA_ORACLE["q374_cms_stream_estimate"] = f"""
+ORACLE["q374_cms_stream_estimate"] = f"""
     WITH exact AS (
         SELECT user_id, COUNT(*) AS exact_cnt FROM events
         WHERE user_id IS NOT NULL GROUP BY 1

@@ -324,9 +324,7 @@ def q180_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES: dict = {}
-
-EXTRA_QUERIES = {
+QUERIES = {
     "q180_score_calibration": q180_score_calibration,
     "q169_priority_auc": q169_priority_auc,
     "q170_chisq_independence": q170_chisq_independence,
@@ -334,9 +332,9 @@ EXTRA_QUERIES = {
     "q172_ks_two_sample": q172_ks_two_sample,
 }
 
-_ORACLE_ALL: dict[str, str] = {}
+ORACLE: dict[str, str] = {}
 
-_ORACLE_ALL["q169_priority_auc"] = f"""
+ORACLE["q169_priority_auc"] = f"""
     WITH labeled AS (
         SELECT c.c_mktsegment, o.o_totalprice AS score,
                CASE WHEN o.o_orderpriority = '{AUC_POS_PRIORITY}'
@@ -363,7 +361,7 @@ _ORACLE_ALL["q169_priority_auc"] = f"""
     FROM agg ORDER BY c_mktsegment
 """
 
-_ORACLE_ALL["q170_chisq_independence"] = """
+ORACLE["q170_chisq_independence"] = """
     WITH cells AS (
         SELECT c.c_mktsegment, o.o_orderpriority, COUNT(*) AS obs
         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -391,7 +389,7 @@ _ORACLE_ALL["q170_chisq_independence"] = """
     CROSS JOIN tot
 """
 
-_ORACLE_ALL["q171_psi_price_drift"] = f"""
+ORACLE["q171_psi_price_drift"] = f"""
     WITH spine AS (
         SELECT UNNEST(RANGE(0, {PSI_MAX_BIN + 1}))::INT AS bin
     ), base AS (
@@ -423,7 +421,7 @@ _ORACLE_ALL["q171_psi_price_drift"] = f"""
     ORDER BY bin
 """
 
-_ORACLE_ALL["q172_ks_two_sample"] = f"""
+ORACLE["q172_ks_two_sample"] = f"""
     WITH labeled AS (
         SELECT o.o_totalprice AS score,
                CASE WHEN c.c_mktsegment = '{KS_GROUP_A}' THEN 1 ELSE 0 END AS is_a
@@ -456,7 +454,7 @@ _ORACLE_ALL["q172_ks_two_sample"] = f"""
     GROUP BY n_a, n_b
 """
 
-_ORACLE_ALL["q180_score_calibration"] = f"""
+ORACLE["q180_score_calibration"] = f"""
     WITH scored AS (
         SELECT o.o_totalprice / mx.m AS p,
                CASE WHEN o.o_orderpriority = '{AUC_POS_PRIORITY}'
@@ -480,9 +478,6 @@ _ORACLE_ALL["q180_score_calibration"] = f"""
     FROM per_bin
     ORDER BY bin
 """
-
-ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k not in EXTRA_QUERIES}
-EXTRA_ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k in EXTRA_QUERIES}
 
 
 TS_EPOCH = "1992-01-01"
@@ -542,7 +537,7 @@ def q193_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q193_theil_sen_trend"] = f"""
+ORACLE["q193_theil_sen_trend"] = f"""
     WITH daily AS (
         SELECT datediff('day', DATE '{TS_EPOCH}',
                         CAST(date_trunc('day', o_orderdate) AS DATE)) AS x,
@@ -565,8 +560,7 @@ _ORACLE_ALL["q193_theil_sen_trend"] = f"""
     GROUP BY s.n_pairs, s.sen_slope
 """
 
-EXTRA_QUERIES["q193_theil_sen_trend"] = q193_theil_sen_trend
-EXTRA_ORACLE["q193_theil_sen_trend"] = _ORACLE_ALL["q193_theil_sen_trend"]
+QUERIES["q193_theil_sen_trend"] = q193_theil_sen_trend
 
 
 MAD_K = 1.4826  # consistency constant for normal data
@@ -610,7 +604,7 @@ def q196_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q196_mad_outliers"] = f"""
+ORACLE["q196_mad_outliers"] = f"""
     WITH med AS (
         SELECT event_type, quantile_cont(value::DOUBLE, 0.5) AS med
         FROM events GROUP BY 1
@@ -631,8 +625,7 @@ _ORACLE_ALL["q196_mad_outliers"] = f"""
     ORDER BY 1
 """
 
-EXTRA_QUERIES["q196_mad_outliers"] = q196_mad_outliers
-EXTRA_ORACLE["q196_mad_outliers"] = _ORACLE_ALL["q196_mad_outliers"]
+QUERIES["q196_mad_outliers"] = q196_mad_outliers
 
 
 ACF_MAX_LAG = 7
@@ -700,7 +693,7 @@ def q208_acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q208_acf_daily_revenue"] = f"""
+ORACLE["q208_acf_daily_revenue"] = f"""
     WITH daily AS (
         SELECT CAST(date_trunc('day', o_orderdate) AS DATE) AS d,
                SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS xd
@@ -730,8 +723,7 @@ _ORACLE_ALL["q208_acf_daily_revenue"] = f"""
     ORDER BY l.lag
 """
 
-EXTRA_QUERIES["q208_acf_daily_revenue"] = q208_acf_daily_revenue
-EXTRA_ORACLE["q208_acf_daily_revenue"] = _ORACLE_ALL["q208_acf_daily_revenue"]
+QUERIES["q208_acf_daily_revenue"] = q208_acf_daily_revenue
 
 
 def q209_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,7 +785,7 @@ def q209_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q209_cusum_changepoint"] = """
+ORACLE["q209_cusum_changepoint"] = """
     WITH daily AS (
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                COUNT(*) AS cnt
@@ -829,8 +821,7 @@ _ORACLE_ALL["q209_cusum_changepoint"] = """
     ORDER BY day
 """
 
-EXTRA_QUERIES["q209_cusum_changepoint"] = q209_cusum_changepoint
-EXTRA_ORACLE["q209_cusum_changepoint"] = _ORACLE_ALL["q209_cusum_changepoint"]
+QUERIES["q209_cusum_changepoint"] = q209_cusum_changepoint
 
 
 TE_SMOOTH_M = 50  # m-estimate pseudo-observations
@@ -870,7 +861,7 @@ def q210_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q210_target_encoding"] = f"""
+ORACLE["q210_target_encoding"] = f"""
     WITH labeled AS (
         SELECT p.p_brand,
                CASE WHEN l.l_returnflag = 'R' THEN 1 ELSE 0 END AS y
@@ -890,8 +881,7 @@ _ORACLE_ALL["q210_target_encoding"] = f"""
     ORDER BY p_brand
 """
 
-EXTRA_QUERIES["q210_target_encoding"] = q210_target_encoding
-EXTRA_ORACLE["q210_target_encoding"] = _ORACLE_ALL["q210_target_encoding"]
+QUERIES["q210_target_encoding"] = q210_target_encoding
 
 
 WOE_BIN_WIDTH = 50_000
@@ -952,7 +942,7 @@ def q211_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q211_woe_iv"] = f"""
+ORACLE["q211_woe_iv"] = f"""
     WITH binned AS (
         SELECT LEAST(FLOOR(o_totalprice / {WOE_BIN_WIDTH}), {WOE_MAX_BIN})::INT
                    AS bin,
@@ -987,8 +977,7 @@ _ORACLE_ALL["q211_woe_iv"] = f"""
     ORDER BY bin
 """
 
-EXTRA_QUERIES["q211_woe_iv"] = q211_woe_iv
-EXTRA_ORACLE["q211_woe_iv"] = _ORACLE_ALL["q211_woe_iv"]
+QUERIES["q211_woe_iv"] = q211_woe_iv
 
 
 def q212_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1047,7 +1036,7 @@ def q212_average_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q212_average_precision"] = f"""
+ORACLE["q212_average_precision"] = f"""
     WITH labeled AS (
         SELECT c.c_mktsegment, o.o_totalprice AS score,
                CASE WHEN o.o_orderpriority = '{AUC_POS_PRIORITY}'
@@ -1077,8 +1066,7 @@ _ORACLE_ALL["q212_average_precision"] = f"""
     ORDER BY c_mktsegment
 """
 
-EXTRA_QUERIES["q212_average_precision"] = q212_average_precision
-EXTRA_ORACLE["q212_average_precision"] = _ORACLE_ALL["q212_average_precision"]
+QUERIES["q212_average_precision"] = q212_average_precision
 
 
 STUMP_BIN = 1_000  # candidate thresholds at $1000 granularity
@@ -1144,7 +1132,7 @@ def q213_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q213_decision_stump"] = f"""
+ORACLE["q213_decision_stump"] = f"""
     WITH cells AS (
         SELECT FLOOR(o_totalprice / {STUMP_BIN})::BIGINT AS bin,
                COUNT(*) AS cnt,
@@ -1179,8 +1167,7 @@ _ORACLE_ALL["q213_decision_stump"] = f"""
     LIMIT 1
 """
 
-EXTRA_QUERIES["q213_decision_stump"] = q213_decision_stump
-EXTRA_ORACLE["q213_decision_stump"] = _ORACLE_ALL["q213_decision_stump"]
+QUERIES["q213_decision_stump"] = q213_decision_stump
 
 
 OOF_FOLDS = 5
@@ -1260,7 +1247,7 @@ def q218_oof_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_brand", "fold")
 
 
-_ORACLE_ALL["q218_oof_target_encoding"] = f"""
+ORACLE["q218_oof_target_encoding"] = f"""
     WITH labeled AS (
         SELECT p.p_brand,
                CAST(('0x' || substr(md5('{OOF_SEED}:' || l.l_orderkey::VARCHAR),
@@ -1290,8 +1277,7 @@ _ORACLE_ALL["q218_oof_target_encoding"] = f"""
     ORDER BY p_brand, fold
 """
 
-EXTRA_QUERIES["q218_oof_target_encoding"] = q218_oof_target_encoding
-EXTRA_ORACLE["q218_oof_target_encoding"] = _ORACLE_ALL["q218_oof_target_encoding"]
+QUERIES["q218_oof_target_encoding"] = q218_oof_target_encoding
 
 
 MOM_SCALE = 1_000_000  # price scaled to ~[0, 0.6] before power sums
@@ -1343,7 +1329,7 @@ def q219_group_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("c_mktsegment")
 
 
-_ORACLE_ALL["q219_group_moments"] = f"""
+ORACLE["q219_group_moments"] = f"""
     WITH base AS (
         SELECT c.c_mktsegment,
                o.o_totalprice::DOUBLE / {MOM_SCALE} AS z
@@ -1369,8 +1355,7 @@ _ORACLE_ALL["q219_group_moments"] = f"""
     ORDER BY c_mktsegment
 """
 
-EXTRA_QUERIES["q219_group_moments"] = q219_group_moments
-EXTRA_ORACLE["q219_group_moments"] = _ORACLE_ALL["q219_group_moments"]
+QUERIES["q219_group_moments"] = q219_group_moments
 
 
 CONF_FOLDS = 5  # fold 0 calibrates, folds 1..4 are the held-out test
@@ -1466,7 +1451,7 @@ def q223_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q223_conformal_coverage"] = f"""
+ORACLE["q223_conformal_coverage"] = f"""
     WITH o AS (
         SELECT o_orderpriority,
                CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
@@ -1504,8 +1489,7 @@ _ORACLE_ALL["q223_conformal_coverage"] = f"""
     GROUP BY kk.n_calib, kk.k, q.qhat
 """
 
-EXTRA_QUERIES["q223_conformal_coverage"] = q223_conformal_coverage
-EXTRA_ORACLE["q223_conformal_coverage"] = _ORACLE_ALL["q223_conformal_coverage"]
+QUERIES["q223_conformal_coverage"] = q223_conformal_coverage
 
 
 BENFORD_SCALE = 10**9  # fixed-point scale for the expected-frequency table
@@ -1569,7 +1553,7 @@ def q226_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy("digit")
 
 
-_ORACLE_ALL["q226_benford_audit"] = None  # set below with Python-computed constants
+ORACLE["q226_benford_audit"] = None  # set below with Python-computed constants
 
 
 def _q226_oracle_sql() -> str:
@@ -1605,10 +1589,9 @@ def _q226_oracle_sql() -> str:
 """
 
 
-_ORACLE_ALL["q226_benford_audit"] = _q226_oracle_sql()
+ORACLE["q226_benford_audit"] = _q226_oracle_sql()
 
-EXTRA_QUERIES["q226_benford_audit"] = q226_benford_audit
-EXTRA_ORACLE["q226_benford_audit"] = _ORACLE_ALL["q226_benford_audit"]
+QUERIES["q226_benford_audit"] = q226_benford_audit
 
 
 MI_PRICE_BAND = 50_000  # totalprice band width (dollars) for the banded feature
@@ -1679,7 +1662,7 @@ def q229_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q229_mutual_information"] = f"""
+ORACLE["q229_mutual_information"] = f"""
     WITH base AS (
         SELECT o.o_orderstatus AS label,
                o.o_orderpriority AS f_priority,
@@ -1723,8 +1706,7 @@ _ORACLE_ALL["q229_mutual_information"] = f"""
     ORDER BY mi DESC, j.feature
 """
 
-EXTRA_QUERIES["q229_mutual_information"] = q229_mutual_information
-EXTRA_ORACLE["q229_mutual_information"] = _ORACLE_ALL["q229_mutual_information"]
+QUERIES["q229_mutual_information"] = q229_mutual_information
 
 
 def q232_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1779,7 +1761,7 @@ def q232_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q232_spearman_corr"] = """
+ORACLE["q232_spearman_corr"] = """
     WITH users AS (
         SELECT user_id, COUNT(*) AS x,
                SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS y
@@ -1819,8 +1801,7 @@ _ORACLE_ALL["q232_spearman_corr"] = """
     FROM sums
 """
 
-EXTRA_QUERIES["q232_spearman_corr"] = q232_spearman_corr
-EXTRA_ORACLE["q232_spearman_corr"] = _ORACLE_ALL["q232_spearman_corr"]
+QUERIES["q232_spearman_corr"] = q232_spearman_corr
 
 
 def q233_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1895,7 +1876,7 @@ def q233_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q233_kruskal_wallis"] = """
+ORACLE["q233_kruskal_wallis"] = """
     WITH base AS (
         SELECT c.c_mktsegment AS grp,
                CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT) AS v
@@ -1939,8 +1920,7 @@ _ORACLE_ALL["q233_kruskal_wallis"] = """
     FROM sums, tot, ties
 """
 
-EXTRA_QUERIES["q233_kruskal_wallis"] = q233_kruskal_wallis
-EXTRA_ORACLE["q233_kruskal_wallis"] = _ORACLE_ALL["q233_kruskal_wallis"]
+QUERIES["q233_kruskal_wallis"] = q233_kruskal_wallis
 
 
 CUPED_SPLIT_DAY = 16  # days 1-15 pre-period, 16+ experiment period
@@ -2042,7 +2022,7 @@ def q234_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q234_cuped_adjustment"] = f"""
+ORACLE["q234_cuped_adjustment"] = f"""
     WITH users AS (
         SELECT user_id,
                SUM(CASE WHEN EXTRACT(day FROM ts) < {CUPED_SPLIT_DAY}
@@ -2098,8 +2078,7 @@ _ORACLE_ALL["q234_cuped_adjustment"] = f"""
     FROM pooled p, wide w
 """
 
-EXTRA_QUERIES["q234_cuped_adjustment"] = q234_cuped_adjustment
-EXTRA_ORACLE["q234_cuped_adjustment"] = _ORACLE_ALL["q234_cuped_adjustment"]
+QUERIES["q234_cuped_adjustment"] = q234_cuped_adjustment
 
 
 def q235_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2158,7 +2137,7 @@ def q235_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q235_diff_in_diff"] = f"""
+ORACLE["q235_diff_in_diff"] = f"""
     WITH cells AS (
         SELECT ('0x' || substr(md5('cuped:' || user_id::VARCHAR), 1, 15))::BIGINT
                    % 2 AS t,
@@ -2184,8 +2163,7 @@ _ORACLE_ALL["q235_diff_in_diff"] = f"""
     FROM wide
 """
 
-EXTRA_QUERIES["q235_diff_in_diff"] = q235_diff_in_diff
-EXTRA_ORACLE["q235_diff_in_diff"] = _ORACLE_ALL["q235_diff_in_diff"]
+QUERIES["q235_diff_in_diff"] = q235_diff_in_diff
 
 
 TRIM_DEN = 10  # 10% trimmed from each tail
@@ -2286,7 +2264,7 @@ def q236_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q236_trimmed_mean"] = f"""
+ORACLE["q236_trimmed_mean"] = f"""
     WITH vals AS (
         SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v FROM orders
     ), kk AS (
@@ -2315,8 +2293,7 @@ _ORACLE_ALL["q236_trimmed_mean"] = f"""
     FROM core, kk
 """
 
-EXTRA_QUERIES["q236_trimmed_mean"] = q236_trimmed_mean
-EXTRA_ORACLE["q236_trimmed_mean"] = _ORACLE_ALL["q236_trimmed_mean"]
+QUERIES["q236_trimmed_mean"] = q236_trimmed_mean
 
 
 MDE_Z_ALPHA = 1.959964  # two-sided alpha = 0.05
@@ -2396,7 +2373,7 @@ def q237_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q237_ab_power_mde"] = f"""
+ORACLE["q237_ab_power_mde"] = f"""
     WITH users AS (
         SELECT user_id,
                SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS y,
@@ -2434,8 +2411,7 @@ _ORACLE_ALL["q237_ab_power_mde"] = f"""
     FROM pooled
 """
 
-EXTRA_QUERIES["q237_ab_power_mde"] = q237_ab_power_mde
-EXTRA_ORACLE["q237_ab_power_mde"] = _ORACLE_ALL["q237_ab_power_mde"]
+QUERIES["q237_ab_power_mde"] = q237_ab_power_mde
 
 
 def q238_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2495,7 +2471,7 @@ def q238_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q238_friedman_test"] = """
+ORACLE["q238_friedman_test"] = """
     WITH cells AS (
         SELECT c.c_nationkey AS block, c.c_mktsegment AS treat,
                CAST(SUM(CAST(FLOOR(o.o_totalprice * 100 + 0.5) AS BIGINT))
@@ -2522,8 +2498,7 @@ _ORACLE_ALL["q238_friedman_test"] = """
     FROM agg
 """
 
-EXTRA_QUERIES["q238_friedman_test"] = q238_friedman_test
-EXTRA_ORACLE["q238_friedman_test"] = _ORACLE_ALL["q238_friedman_test"]
+QUERIES["q238_friedman_test"] = q238_friedman_test
 
 
 def q239_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2570,7 +2545,7 @@ def q239_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q239_cochran_armitage"] = """
+ORACLE["q239_cochran_armitage"] = """
     WITH cells AS (
         SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS w,
                COUNT(*) AS n_i,
@@ -2596,8 +2571,7 @@ _ORACLE_ALL["q239_cochran_armitage"] = """
     FROM sums
 """
 
-EXTRA_QUERIES["q239_cochran_armitage"] = q239_cochran_armitage
-EXTRA_ORACLE["q239_cochran_armitage"] = _ORACLE_ALL["q239_cochran_armitage"]
+QUERIES["q239_cochran_armitage"] = q239_cochran_armitage
 
 
 BH_ALPHA = 0.10
@@ -2742,7 +2716,7 @@ def q244_bh_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q244_bh_fdr_screen"] = f"""
+ORACLE["q244_bh_fdr_screen"] = f"""
     WITH conv AS (
         SELECT DISTINCT o_custkey, 1 AS conv FROM orders
         WHERE o_orderpriority = '{BH_CONV_PRIORITY}'
@@ -2792,8 +2766,7 @@ _ORACLE_ALL["q244_bh_fdr_screen"] = f"""
     FROM thr ORDER BY bh_rank
 """
 
-EXTRA_QUERIES["q244_bh_fdr_screen"] = q244_bh_fdr_screen
-EXTRA_ORACLE["q244_bh_fdr_screen"] = _ORACLE_ALL["q244_bh_fdr_screen"]
+QUERIES["q244_bh_fdr_screen"] = q244_bh_fdr_screen
 
 
 IPW_BAL_SPLIT = 4500.0  # treatment = affluent account (confounded by segment)
@@ -2896,7 +2869,7 @@ def q245_stratified_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strata.unionByName(raw).unionByName(adj).orderBy("stratum")
 
 
-_ORACLE_ALL["q245_stratified_effect"] = f"""
+ORACLE["q245_stratified_effect"] = f"""
     WITH spend AS (
         SELECT o_custkey,
                CAST(SUM(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)) AS BIGINT) AS y
@@ -2949,8 +2922,7 @@ _ORACLE_ALL["q245_stratified_effect"] = f"""
     ORDER BY stratum
 """
 
-EXTRA_QUERIES["q245_stratified_effect"] = q245_stratified_effect
-EXTRA_ORACLE["q245_stratified_effect"] = _ORACLE_ALL["q245_stratified_effect"]
+QUERIES["q245_stratified_effect"] = q245_stratified_effect
 
 
 def q248_seasonality_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3009,7 +2981,7 @@ def q248_seasonality_indices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q248_seasonality_indices"] = """
+ORACLE["q248_seasonality_indices"] = """
     WITH daily AS (
         SELECT date_trunc('day', ts) AS d,
                CAST(SUM(CAST(FLOOR(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
@@ -3040,8 +3012,7 @@ _ORACLE_ALL["q248_seasonality_indices"] = """
     FROM ratios GROUP BY dow ORDER BY dow
 """
 
-EXTRA_QUERIES["q248_seasonality_indices"] = q248_seasonality_indices
-EXTRA_ORACLE["q248_seasonality_indices"] = _ORACLE_ALL["q248_seasonality_indices"]
+QUERIES["q248_seasonality_indices"] = q248_seasonality_indices
 
 
 CVM_G1, CVM_G2 = "1-URGENT", "5-LOW"
@@ -3108,7 +3079,7 @@ def q258_cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q258_cvm_two_sample"] = f"""
+ORACLE["q258_cvm_two_sample"] = f"""
     WITH base AS (
         SELECT CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT) AS v,
                CASE WHEN o_orderpriority = '{CVM_G1}' THEN 1 ELSE 0 END AS g1
@@ -3140,8 +3111,7 @@ _ORACLE_ALL["q258_cvm_two_sample"] = f"""
     FROM sums
 """
 
-EXTRA_QUERIES["q258_cvm_two_sample"] = q258_cvm_two_sample
-EXTRA_ORACLE["q258_cvm_two_sample"] = _ORACLE_ALL["q258_cvm_two_sample"]
+QUERIES["q258_cvm_two_sample"] = q258_cvm_two_sample
 
 
 FE_Y0, FE_Y1 = 1995, 1998  # panel window (inclusive)
@@ -3234,7 +3204,7 @@ def q263_fixed_effects_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q263_fixed_effects_ols"] = f"""
+ORACLE["q263_fixed_effects_ols"] = f"""
     WITH panel AS (
         SELECT o_custkey % 25 AS nat,
                date_trunc('month', o_orderdate) AS mon,
@@ -3278,8 +3248,7 @@ _ORACLE_ALL["q263_fixed_effects_ols"] = f"""
     FROM sums
 """
 
-EXTRA_QUERIES["q263_fixed_effects_ols"] = q263_fixed_effects_ols
-EXTRA_ORACLE["q263_fixed_effects_ols"] = _ORACLE_ALL["q263_fixed_effects_ols"]
+QUERIES["q263_fixed_effects_ols"] = q263_fixed_effects_ols
 
 
 GAINS_BIN = 100  # cents-grain score bins for the decile cut
@@ -3355,7 +3324,7 @@ def q265_gains_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q265_gains_lift_curve"] = """
+ORACLE["q265_gains_lift_curve"] = """
     WITH cells AS (
         SELECT CAST(FLOOR(CAST(FLOOR(o_totalprice * 100 + 0.5) AS BIGINT)
                           / 100) AS BIGINT) AS bin,
@@ -3386,8 +3355,7 @@ _ORACLE_ALL["q265_gains_lift_curve"] = """
     FROM per_d ORDER BY decile
 """
 
-EXTRA_QUERIES["q265_gains_lift_curve"] = q265_gains_lift_curve
-EXTRA_ORACLE["q265_gains_lift_curve"] = _ORACLE_ALL["q265_gains_lift_curve"]
+QUERIES["q265_gains_lift_curve"] = q265_gains_lift_curve
 
 
 RANSAC_CANDS = 16
@@ -3562,9 +3530,8 @@ def _q269_oracle() -> str:
     """
 
 
-_ORACLE_ALL["q269_ransac_line"] = _q269_oracle()
-EXTRA_QUERIES["q269_ransac_line"] = q269_ransac_line
-EXTRA_ORACLE["q269_ransac_line"] = _ORACLE_ALL["q269_ransac_line"]
+ORACLE["q269_ransac_line"] = _q269_oracle()
+QUERIES["q269_ransac_line"] = q269_ransac_line
 
 
 THEILSEN_CORESET = 256  # fixed-size deterministic point coreset
@@ -3657,7 +3624,7 @@ def q282_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q282_kendall_tau"] = """
+ORACLE["q282_kendall_tau"] = """
     WITH cells AS (
         SELECT l_returnflag AS g, CAST(l_quantity AS INT) AS x,
                CAST(FLOOR(l_discount * 100 + 0.5) AS INT) AS y,
@@ -3688,8 +3655,7 @@ _ORACLE_ALL["q282_kendall_tau"] = """
     JOIN margins m USING (g) JOIN tx t1 USING (g) JOIN ty t2 USING (g)
     ORDER BY g
 """
-EXTRA_QUERIES["q282_kendall_tau"] = q282_kendall_tau
-EXTRA_ORACLE["q282_kendall_tau"] = _ORACLE_ALL["q282_kendall_tau"]
+QUERIES["q282_kendall_tau"] = q282_kendall_tau
 
 
 def q287_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3792,9 +3758,8 @@ def _q287_oracle() -> str:
     """
 
 
-_ORACLE_ALL["q287_theil_sen"] = _q287_oracle()
-EXTRA_QUERIES["q287_theil_sen"] = q287_theil_sen
-EXTRA_ORACLE["q287_theil_sen"] = _ORACLE_ALL["q287_theil_sen"]
+ORACLE["q287_theil_sen"] = _q287_oracle()
+QUERIES["q287_theil_sen"] = q287_theil_sen
 
 
 def q290_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3869,7 +3834,7 @@ def q290_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q290_mahalanobis_outliers"] = """
+ORACLE["q290_mahalanobis_outliers"] = """
     WITH base AS (
         SELECT l_returnflag AS g,
                CAST(l_quantity AS HUGEINT) AS x,
@@ -3905,8 +3870,7 @@ _ORACLE_ALL["q290_mahalanobis_outliers"] = """
                  / CAST(n_rows AS DOUBLE), 9) AS outlier_frac
     FROM scored GROUP BY 1, 2 ORDER BY g
 """
-EXTRA_QUERIES["q290_mahalanobis_outliers"] = q290_mahalanobis_outliers
-EXTRA_ORACLE["q290_mahalanobis_outliers"] = _ORACLE_ALL["q290_mahalanobis_outliers"]
+QUERIES["q290_mahalanobis_outliers"] = q290_mahalanobis_outliers
 
 
 def q284_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3990,7 +3954,7 @@ def q284_spearman_rho(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("g")
 
 
-_ORACLE_ALL["q284_spearman_rho"] = """
+ORACLE["q284_spearman_rho"] = """
     WITH cells AS (
         SELECT l_returnflag AS g, CAST(l_quantity AS INT) AS x,
                CAST(FLOOR(l_discount * 100 + 0.5) AS INT) AS y,
@@ -4027,8 +3991,7 @@ _ORACLE_ALL["q284_spearman_rho"] = """
                         * CAST(nn * syy - sy * sy AS DOUBLE)), 9) AS rho_s
     FROM m ORDER BY g
 """
-EXTRA_QUERIES["q284_spearman_rho"] = q284_spearman_rho
-EXTRA_ORACLE["q284_spearman_rho"] = _ORACLE_ALL["q284_spearman_rho"]
+QUERIES["q284_spearman_rho"] = q284_spearman_rho
 
 
 def q285_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4109,7 +4072,7 @@ def q285_isotonic_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q285_isotonic_regression"] = """
+ORACLE["q285_isotonic_regression"] = """
     WITH lv AS (
         SELECT CAST(l_quantity AS INT) AS q,
                CAST(COUNT(*) AS HUGEINT) AS c,
@@ -4139,8 +4102,7 @@ _ORACLE_ALL["q285_isotonic_regression"] = """
            ROUND(MAX(mn) / 1e8, 6) AS fit_dollars
     FROM mn GROUP BY 1, 2, 3 ORDER BY quantity
 """
-EXTRA_QUERIES["q285_isotonic_regression"] = q285_isotonic_regression
-EXTRA_ORACLE["q285_isotonic_regression"] = _ORACLE_ALL["q285_isotonic_regression"]
+QUERIES["q285_isotonic_regression"] = q285_isotonic_regression
 
 
 def q288_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4218,7 +4180,7 @@ def q288_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("g")
 
 
-_ORACLE_ALL["q288_mann_whitney_u"] = """
+ORACLE["q288_mann_whitney_u"] = """
     WITH cells AS (
         SELECT l_linestatus AS g, CAST(l_quantity AS INT) AS v,
                CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
@@ -4247,8 +4209,7 @@ _ORACLE_ALL["q288_mann_whitney_u"] = """
                                       AS DOUBLE))), 9) AS z
     FROM m ORDER BY g
 """
-EXTRA_QUERIES["q288_mann_whitney_u"] = q288_mann_whitney_u
-EXTRA_ORACLE["q288_mann_whitney_u"] = _ORACLE_ALL["q288_mann_whitney_u"]
+QUERIES["q288_mann_whitney_u"] = q288_mann_whitney_u
 
 
 def q289_cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4350,7 +4311,7 @@ def q289_cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q289_cramers_v_matrix"] = """
+ORACLE["q289_cramers_v_matrix"] = """
     WITH stacked AS (
         SELECT 'rf:ls' AS pair, l_returnflag AS a, l_linestatus AS b
         FROM lineitem
@@ -4397,8 +4358,7 @@ _ORACLE_ALL["q289_cramers_v_matrix"] = """
                                   AS DOUBLE)), 9) AS cramers_v
     FROM agg ORDER BY pair
 """
-EXTRA_QUERIES["q289_cramers_v_matrix"] = q289_cramers_v_matrix
-EXTRA_ORACLE["q289_cramers_v_matrix"] = _ORACLE_ALL["q289_cramers_v_matrix"]
+QUERIES["q289_cramers_v_matrix"] = q289_cramers_v_matrix
 
 
 def q291_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4470,7 +4430,7 @@ def q291_cochran_armitage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q291_cochran_armitage"] = """
+ORACLE["q291_cochran_armitage"] = """
     WITH cells AS (
         SELECT o_orderpriority AS priority,
                CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS s,
@@ -4499,8 +4459,7 @@ _ORACLE_ALL["q291_cochran_armitage"] = """
     FROM cells c CROSS JOIN stat s2
     ORDER BY c.priority
 """
-EXTRA_QUERIES["q291_cochran_armitage"] = q291_cochran_armitage
-EXTRA_ORACLE["q291_cochran_armitage"] = _ORACLE_ALL["q291_cochran_armitage"]
+QUERIES["q291_cochran_armitage"] = q291_cochran_armitage
 
 
 def q292_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4605,7 +4564,7 @@ def q292_brown_forsythe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q292_brown_forsythe"] = """
+ORACLE["q292_brown_forsythe"] = """
     WITH cells AS (
         SELECT l_returnflag AS g, CAST(l_quantity AS INT) AS v,
                CAST(COUNT(*) AS BIGINT) AS n
@@ -4659,8 +4618,7 @@ _ORACLE_ALL["q292_brown_forsythe"] = """
     FROM per p CROSS JOIN stat s
     ORDER BY p.g
 """
-EXTRA_QUERIES["q292_brown_forsythe"] = q292_brown_forsythe
-EXTRA_ORACLE["q292_brown_forsythe"] = _ORACLE_ALL["q292_brown_forsythe"]
+QUERIES["q292_brown_forsythe"] = q292_brown_forsythe
 
 
 def q293_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4740,7 +4698,7 @@ def q293_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q293_kaplan_meier"] = """
+ORACLE["q293_kaplan_meier"] = """
     WITH cells AS (
         SELECT DATE_DIFF('day', CAST(o_orderdate AS DATE),
                          CAST(l_shipdate AS DATE)) AS t,
@@ -4770,8 +4728,7 @@ _ORACLE_ALL["q293_kaplan_meier"] = """
                           AND CURRENT ROW) AS DOUBLE)), 6) AS s_km
     FROM terms ORDER BY t
 """
-EXTRA_QUERIES["q293_kaplan_meier"] = q293_kaplan_meier
-EXTRA_ORACLE["q293_kaplan_meier"] = _ORACLE_ALL["q293_kaplan_meier"]
+QUERIES["q293_kaplan_meier"] = q293_kaplan_meier
 
 
 def q294_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4852,7 +4809,7 @@ def q294_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q294_runs_test"] = """
+ORACLE["q294_runs_test"] = """
     WITH daily AS (
         SELECT CAST(l_shipdate AS DATE) AS day,
                CAST(SUM(CAST(FLOOR(l_extendedprice * 100 + 0.5) AS BIGINT))
@@ -4887,8 +4844,7 @@ _ORACLE_ALL["q294_runs_test"] = """
                                AS DOUBLE)), 9) AS z
     FROM runs
 """
-EXTRA_QUERIES["q294_runs_test"] = q294_runs_test
-EXTRA_ORACLE["q294_runs_test"] = _ORACLE_ALL["q294_runs_test"]
+QUERIES["q294_runs_test"] = q294_runs_test
 
 
 def q295_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4967,7 +4923,7 @@ def q295_jonckheere_terpstra(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q295_jonckheere_terpstra"] = """
+ORACLE["q295_jonckheere_terpstra"] = """
     WITH cells AS (
         SELECT CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS g,
                CAST(l_quantity AS INT) AS v,
@@ -4999,8 +4955,7 @@ _ORACLE_ALL["q295_jonckheere_terpstra"] = """
                AS z
     FROM jt CROSS JOIN m
 """
-EXTRA_QUERIES["q295_jonckheere_terpstra"] = q295_jonckheere_terpstra
-EXTRA_ORACLE["q295_jonckheere_terpstra"] = _ORACLE_ALL["q295_jonckheere_terpstra"]
+QUERIES["q295_jonckheere_terpstra"] = q295_jonckheere_terpstra
 
 
 def q296_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5080,7 +5035,7 @@ def q296_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q296_friedman_test"] = """
+ORACLE["q296_friedman_test"] = """
     WITH cells0 AS (
         SELECT DATE_TRUNC('month', o_orderdate) AS blk,
                o_orderpriority AS trt,
@@ -5118,8 +5073,7 @@ _ORACLE_ALL["q296_friedman_test"] = """
     FROM rsum r CROSS JOIN tot t
     ORDER BY priority
 """
-EXTRA_QUERIES["q296_friedman_test"] = q296_friedman_test
-EXTRA_ORACLE["q296_friedman_test"] = _ORACLE_ALL["q296_friedman_test"]
+QUERIES["q296_friedman_test"] = q296_friedman_test
 
 
 def q297_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5189,7 +5143,7 @@ def q297_mantel_haenszel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q297_mantel_haenszel"] = """
+ORACLE["q297_mantel_haenszel"] = """
     WITH cells AS (
         SELECT o_orderpriority AS stratum,
                CAST(SUM(CASE WHEN l_returnflag = 'R' AND l_linestatus = 'F'
@@ -5222,8 +5176,7 @@ _ORACLE_ALL["q297_mantel_haenszel"] = """
     FROM terms t CROSS JOIN pooled p
     ORDER BY t.stratum
 """
-EXTRA_QUERIES["q297_mantel_haenszel"] = q297_mantel_haenszel
-EXTRA_ORACLE["q297_mantel_haenszel"] = _ORACLE_ALL["q297_mantel_haenszel"]
+QUERIES["q297_mantel_haenszel"] = q297_mantel_haenszel
 
 
 def q298_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5300,7 +5253,7 @@ def q298_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q298_kruskal_wallis"] = """
+ORACLE["q298_kruskal_wallis"] = """
     WITH cells AS (
         SELECT l_returnflag AS g, CAST(l_quantity AS INT) AS v,
                CAST(COUNT(*) AS BIGINT) AS n
@@ -5340,8 +5293,7 @@ _ORACLE_ALL["q298_kruskal_wallis"] = """
                AS h_stat
     FROM tot t CROSS JOIN ties ti
 """
-EXTRA_QUERIES["q298_kruskal_wallis"] = q298_kruskal_wallis
-EXTRA_ORACLE["q298_kruskal_wallis"] = _ORACLE_ALL["q298_kruskal_wallis"]
+QUERIES["q298_kruskal_wallis"] = q298_kruskal_wallis
 
 
 def q299_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5412,7 +5364,7 @@ def q299_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("stratum")
 
 
-_ORACLE_ALL["q299_cohens_kappa"] = """
+ORACLE["q299_cohens_kappa"] = """
     WITH cells AS (
         SELECT o_orderpriority AS stratum,
                CAST(SUM(CASE WHEN l_returnflag = 'R' AND l_linestatus = 'O'
@@ -5438,8 +5390,7 @@ _ORACLE_ALL["q299_cohens_kappa"] = """
                            AS DOUBLE)), 9) AS kappa
     FROM cells ORDER BY stratum
 """
-EXTRA_QUERIES["q299_cohens_kappa"] = q299_cohens_kappa
-EXTRA_ORACLE["q299_cohens_kappa"] = _ORACLE_ALL["q299_cohens_kappa"]
+QUERIES["q299_cohens_kappa"] = q299_cohens_kappa
 
 
 def q300_pages_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5510,7 +5461,7 @@ def q300_pages_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q300_pages_trend"] = """
+ORACLE["q300_pages_trend"] = """
     WITH cells0 AS (
         SELECT DATE_TRUNC('month', o_orderdate) AS blk,
                CAST(SUBSTRING(o_orderpriority, 1, 1) AS INT) AS s,
@@ -5543,8 +5494,7 @@ _ORACLE_ALL["q300_pages_trend"] = """
                                     AS DOUBLE) / 144.0)), 9) AS z
     FROM agg
 """
-EXTRA_QUERIES["q300_pages_trend"] = q300_pages_trend
-EXTRA_ORACLE["q300_pages_trend"] = _ORACLE_ALL["q300_pages_trend"]
+QUERIES["q300_pages_trend"] = q300_pages_trend
 
 
 def q301_theils_u(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5636,7 +5586,7 @@ def q301_theils_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q301_theils_u"] = """
+ORACLE["q301_theils_u"] = """
     WITH stacked AS (
         SELECT 'rf:ls' AS pair, l_returnflag AS x, l_linestatus AS y
         FROM lineitem
@@ -5682,5 +5632,4 @@ _ORACLE_ALL["q301_theils_u"] = """
     FROM hyx JOIN hy ON hy.pair = hyx.pair
     ORDER BY hyx.pair
 """
-EXTRA_QUERIES["q301_theils_u"] = q301_theils_u
-EXTRA_ORACLE["q301_theils_u"] = _ORACLE_ALL["q301_theils_u"]
+QUERIES["q301_theils_u"] = q301_theils_u

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.catalog import load_table
 from batchprocessingetl_spark.session import WORK_CODEC, work_dir
+from batchprocessingetl_spark.sources.readers import fs_delete
 from batchprocessingetl_spark.operators import text as T_ops
 
 
@@ -456,8 +457,6 @@ def q124_incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs with >= 1 batch member — pinning the incremental protocol's
     defining invariant (incremental == full recompute on the batch's
     slice) AND the band join's recall, same as q37."""
-    import shutil
-
     from batchprocessingetl_spark.operators.dedup import (
         band_signatures,
         incremental_lsh_pairs,
@@ -470,7 +469,7 @@ def q124_incremental_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch_docs = docs.filter(F.col("doc_id") % 10 == 0)
 
     work = work_dir(spark, "lshstore")
-    shutil.rmtree(work, ignore_errors=True)
+    fs_delete(spark, work)
     band_signatures(
         minhash_signatures(store_docs, "doc_id", "text", n_hashes=32, n=3), bands=16
     ).write.option("compression", WORK_CODEC).parquet(work)
@@ -774,72 +773,6 @@ def q64_curated_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Round 6 rotation (VERDICT r5 #1): the round-5 text/dedup/retrieval
-# backlog gains driver rows — q124 incremental LSH vs the persisted
-# band store, q126 prefix-filtered set-similarity join, q135
-# directional containment join, q137 Heaps vocab growth, q138
-# Dirichlet log-odds keyness, q147 hybrid BM25+vector RRF, q158
-# lang x source mutual information. Displaced, each with retained
-# registered evidence (docs/COVERAGE.md "Round 6 rotation"): q37
-# MinHash LSH (q124 registers the SAME band_signatures machinery PLUS
-# the incremental protocol; its oracle is the identical exact-Jaccard
-# pair set; q37 stays benched), q45 winnowing (fingerprint guarantees
-# stay property-tested in tests/test_dedup_text.py; near-dup family
-# holds q124/q126/q135 registered rows), q46 TF-IDF (term-weighting
-# family's registered row moves to q147, whose BM25 leg computes the
-# same DF/IDF statistics; vocab analytics keep q137/q138), q80 BM25
-# (q147 registers the SAME bm25_topk_join machinery fused with the
-# vector leg), q89 fuzzy pairs / q113 entity clusters (the
-# connected-components machinery keeps q97's registered
-# iteration-barrier row; pair+cluster results stay value-checked by
-# check_oracle --extra), q95 LM quality / q96 shard overlap / q105
-# phrase search / q118 leakage-free split (each stays value-checked
-# by check_oracle --extra; q118's sampling family keeps registered
-# rows via q136/q150/q151).
-QUERIES = {
-    "q124_incremental_near_dups": q124_incremental_near_dups,
-    "q126_setsim_prefix_join": q126_setsim_prefix_join,
-    "q135_containment_near_dups": q135_containment_near_dups,
-    "q137_vocab_growth": q137_vocab_growth,
-    "q138_keyness_by_source": q138_keyness_by_source,
-    "q147_hybrid_retrieval_rrf": q147_hybrid_retrieval_rrf,
-    "q158_lang_source_mi": q158_lang_source_mi,
-    # Round 5 rotation (VERDICT r4 #1): the end-to-end entity
-    # resolution pipeline and the near-dup-aware leakage-free split
-    # gain driver-side rows. Displaced: q47 (SimHash — the near-dup
-    # family keeps q37 MinHash + q45 winnowing registered), q63
-    # (connected-components clusters — q113 registers the SAME
-    # min-label machinery end-to-end on fuzzy pairs), q31 (quality
-    # score — family keeps q46 TF-IDF + q95 LM quality), q33 (exact
-    # dedup — §2.4 A4/A5 keeps q40's full-row dropDuplicates
-    # registered), q86/q87 (vocab / co-occurrence — family keeps q46 +
-    # q95 + q105 registered; q87's min-support HAVING shape is also
-    # pinned by q82).
-    # Round 4 mid-round rotation: LM quality scoring, shard-overlap
-    # estimation and batch phrase matching gain driver-side rows.
-    # Displaced: q30 (token stats — the family keeps q31 quality +
-    # q46 TF-IDF + q86 vocab registered), q34 (language-ID — same
-    # family line, q39's prediction twin was already EXTRA) and q36
-    # (exact n-gram Jaccard pairs — that exact pair set IS q37's
-    # oracle, so the registered q37 pins it every round by
-    # construction).
-    # Round 4 rotation (VERDICT r3 #1): multi-query BM25 retrieval
-    # join, vocab table, skip-gram co-occurrence and blocked fuzzy
-    # matching gain driver-side CORRECTNESS rows.
-}
-
-# Out of the ~50-entry driver registry budget (engine-defined-hash,
-# rows-only entries): xxhash64 fingerprints are evidenced with a full
-# oracle by q45 (winnowing, md5-based); SimHash signatures feed the
-# oracle-checked q47/q63/q64 pair/cluster queries directly.
-# Round 3 rotated q32 (raw term frequencies — the registered q46 TF-IDF
-# recomputes the same TF as its first stage) and q39 (n-gram language
-# prediction — q34's language-ID heuristic keeps the family's
-# registered row) out to make room for q71-q79 per VERDICT r2 #1.
-# Round 4 displaced q77 (single-query BM25 — the registered q80 pins
-# the same operators/retrieval.py machinery generalized to a query
-# batch) and q64 (curation composite — every component stays
-# registered: q31 quality, q33 exact dedup, q63 clusters, q67-q70).
 NDCG_K = 10
 LN2 = 0.6931471805599453
 
@@ -922,7 +855,14 @@ def q179_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES = {
+QUERIES = {
+    "q124_incremental_near_dups": q124_incremental_near_dups,
+    "q126_setsim_prefix_join": q126_setsim_prefix_join,
+    "q135_containment_near_dups": q135_containment_near_dups,
+    "q137_vocab_growth": q137_vocab_growth,
+    "q138_keyness_by_source": q138_keyness_by_source,
+    "q147_hybrid_retrieval_rrf": q147_hybrid_retrieval_rrf,
+    "q158_lang_source_mi": q158_lang_source_mi,
     "q113_entity_clusters": q113_entity_clusters,
     "q118_leakage_free_split": q118_leakage_free_split,
     "q45_winnowing_fingerprints": q45_winnowing_fingerprints,
@@ -977,7 +917,7 @@ _SIMHASH_SIG_CTES = f"""tok AS (
             FROM bits GROUP BY doc_id
         )"""
 
-_ORACLE_ALL = {
+ORACLE = {
     "q35_fingerprint": f"""
         SELECT doc_id,
                ('0x' || substr(md5({_NORM_SQL}), 1, 15))::BIGINT AS fingerprint,
@@ -1298,7 +1238,7 @@ _PHRASE_HITS_SQL = "\n        UNION ALL\n".join(
     for label, terms in PHRASES.items()
 )
 
-_ORACLE_ALL.update({
+ORACLE.update({
     "q118_leakage_free_split": f"""
         WITH RECURSIVE {_SIMHASH_SIG_CTES},
         pairs AS (
@@ -1530,13 +1470,11 @@ _ORACLE_ALL.update({
     """,
 })
 
-# The registered/extra oracle split derives from EXTRA_QUERIES, so
-# rotations only ever touch the QUERIES/EXTRA_QUERIES dicts above.
 # q135: the probe-side prefix cut is lossless for containment
 # (overlap >= ceil(t|a|) forces a match inside a's first
 # |a| - ceil(t|a|) + 1 ranked shingles), so the oracle is the full
 # exact DIRECTIONAL pair set.
-_ORACLE_ALL["q135_containment_near_dups"] = f"""
+ORACLE["q135_containment_near_dups"] = f"""
     WITH sh AS (
         SELECT doc_id AS id, {_SHINGLES_SQL.format(toks=_TOKENS_SQL)} AS sh
         FROM documents
@@ -1553,7 +1491,7 @@ _ORACLE_ALL["q135_containment_near_dups"] = f"""
     ORDER BY id_a, id_b
 """
 
-_ORACLE_ALL["q137_vocab_growth"] = f"""
+ORACLE["q137_vocab_growth"] = f"""
     WITH d AS (
         SELECT doc_id, {_TOKENS_SQL} AS toks FROM documents
     ), mx AS (
@@ -1584,7 +1522,7 @@ _ORACLE_ALL["q137_vocab_growth"] = f"""
 # q138: counts are integer-exact; the double-domain log-odds math is
 # written as the IDENTICAL expression tree so both engines divide /
 # ln / sqrt the same IEEE inputs (round-4 swallows libm 1-ulp jitter).
-_ORACLE_ALL["q138_keyness_by_source"] = f"""
+ORACLE["q138_keyness_by_source"] = f"""
     WITH tok AS (
         SELECT source AS grp, unnest({_TOKENS_SQL}) AS term FROM documents
     ), y AS (
@@ -1621,7 +1559,7 @@ _ORACLE_ALL["q138_keyness_by_source"] = f"""
     ORDER BY source, term
 """
 
-_ORACLE_ALL["q158_lang_source_mi"] = """
+ORACLE["q158_lang_source_mi"] = """
     WITH cell AS (
         SELECT lang, source, COUNT(*) AS n_xy FROM documents GROUP BY 1, 2
     ), mx AS (
@@ -1651,7 +1589,7 @@ _RRF_SQL = (
 )
 # q147: both rankers replicated exactly (the q80 BM25 pipeline over the
 # filtered corpus; the q65 cosine top-k), fused on integer ranks.
-_ORACLE_ALL["q147_hybrid_retrieval_rrf"] = f"""
+ORACLE["q147_hybrid_retrieval_rrf"] = f"""
     WITH q(qid, term) AS (VALUES {_HYBRID_QUERY_VALUES}),
     base AS (
         SELECT doc_id, len({_TOKENS_SQL})::DOUBLE AS dl, {_TOKENS_SQL} AS toks
@@ -1730,7 +1668,7 @@ _NDCG_TERM = (
     "CAST(ROUND((POW(2.0, {rel}) - 1.0) * {ln2} / LN({rank} + 1.0), 9)"
     " AS DECIMAL(28,10))"
 )
-_ORACLE_ALL["q179_retrieval_ndcg"] = f"""
+ORACLE["q179_retrieval_ndcg"] = f"""
     WITH q(qid, term) AS (VALUES {_BM25_QUERY_VALUES}),
     base AS (
         SELECT doc_id, len({_TOKENS_SQL})::DOUBLE AS dl, {_TOKENS_SQL} AS toks
@@ -1791,9 +1729,6 @@ _ORACLE_ALL["q179_retrieval_ndcg"] = f"""
     ORDER BY d.qid
 """
 
-ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k not in EXTRA_QUERIES}
-EXTRA_ORACLE = {k: v for k, v in _ORACLE_ALL.items() if k in EXTRA_QUERIES}
-
 
 PMI_MIN_COUNT = 10
 PMI_TOP = 30
@@ -1851,7 +1786,7 @@ def q184_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q184_pmi_collocations"] = f"""
+ORACLE["q184_pmi_collocations"] = f"""
     WITH toks AS (
         SELECT {T_ops.TOKENS_SQL_DUCKDB.format(col="text")} AS t FROM documents
     ), uni AS (
@@ -1885,8 +1820,7 @@ _ORACLE_ALL["q184_pmi_collocations"] = f"""
     LIMIT {PMI_TOP}
 """
 
-EXTRA_QUERIES["q184_pmi_collocations"] = q184_pmi_collocations
-EXTRA_ORACLE["q184_pmi_collocations"] = _ORACLE_ALL["q184_pmi_collocations"]
+QUERIES["q184_pmi_collocations"] = q184_pmi_collocations
 
 
 def q194_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1919,7 +1853,7 @@ def q194_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q194_tokenizer_fertility"] = f"""
+ORACLE["q194_tokenizer_fertility"] = f"""
     WITH per_doc AS (
         SELECT lang,
                len({T_ops.TOKENS_SQL_DUCKDB.format(col="text")})::BIGINT AS n_words,
@@ -1939,8 +1873,7 @@ _ORACLE_ALL["q194_tokenizer_fertility"] = f"""
     ORDER BY 1
 """
 
-EXTRA_QUERIES["q194_tokenizer_fertility"] = q194_tokenizer_fertility
-EXTRA_ORACLE["q194_tokenizer_fertility"] = _ORACLE_ALL["q194_tokenizer_fertility"]
+QUERIES["q194_tokenizer_fertility"] = q194_tokenizer_fertility
 
 
 WJ_THRESHOLD = 0.3
@@ -2000,7 +1933,7 @@ def q198_weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q198_weighted_jaccard_pairs"] = f"""
+ORACLE["q198_weighted_jaccard_pairs"] = f"""
     WITH d AS (
         SELECT doc_id, text FROM documents WHERE doc_id % {WJ_MOD} = 0
     ), sh AS (
@@ -2034,10 +1967,7 @@ _ORACLE_ALL["q198_weighted_jaccard_pairs"] = f"""
     ORDER BY i.id_a, i.id_b
 """
 
-EXTRA_QUERIES["q198_weighted_jaccard_pairs"] = q198_weighted_jaccard_pairs
-EXTRA_ORACLE["q198_weighted_jaccard_pairs"] = _ORACLE_ALL[
-    "q198_weighted_jaccard_pairs"
-]
+QUERIES["q198_weighted_jaccard_pairs"] = q198_weighted_jaccard_pairs
 
 
 def q199_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2099,7 +2029,7 @@ def q199_corpus_datacard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q199_corpus_datacard"] = f"""
+ORACLE["q199_corpus_datacard"] = f"""
     WITH base AS (
         SELECT doc_id, lang,
                len({_TOKENS_SQL})::BIGINT AS n_tok,
@@ -2132,8 +2062,7 @@ _ORACLE_ALL["q199_corpus_datacard"] = f"""
     FROM vol v, vocab vb, ent e
 """
 
-EXTRA_QUERIES["q199_corpus_datacard"] = q199_corpus_datacard
-EXTRA_ORACLE["q199_corpus_datacard"] = _ORACLE_ALL["q199_corpus_datacard"]
+QUERIES["q199_corpus_datacard"] = q199_corpus_datacard
 
 
 def _langpred_cte() -> str:
@@ -2210,7 +2139,7 @@ def q205_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q205_cohens_kappa"] = f"""
+ORACLE["q205_cohens_kappa"] = f"""
     WITH {_langpred_cte()}, cm AS (
         SELECT lang, predicted_lang, COUNT(*) AS n
         FROM pred GROUP BY 1, 2
@@ -2234,8 +2163,7 @@ _ORACLE_ALL["q205_cohens_kappa"] = f"""
     FROM diag d, tot t, marg m
 """
 
-EXTRA_QUERIES["q205_cohens_kappa"] = q205_cohens_kappa
-EXTRA_ORACLE["q205_cohens_kappa"] = _ORACLE_ALL["q205_cohens_kappa"]
+QUERIES["q205_cohens_kappa"] = q205_cohens_kappa
 
 
 ZIPF_TOP = 500
@@ -2288,7 +2216,7 @@ def q216_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q216_zipf_slope"] = f"""
+ORACLE["q216_zipf_slope"] = f"""
     WITH tf AS (
         SELECT t.term, COUNT(*) AS cnt
         FROM documents d,
@@ -2320,8 +2248,7 @@ _ORACLE_ALL["q216_zipf_slope"] = f"""
     FROM sums
 """
 
-EXTRA_QUERIES["q216_zipf_slope"] = q216_zipf_slope
-EXTRA_ORACLE["q216_zipf_slope"] = _ORACLE_ALL["q216_zipf_slope"]
+QUERIES["q216_zipf_slope"] = q216_zipf_slope
 
 
 FH_BITS = 12  # 2^12 = 4096 hash buckets
@@ -2374,7 +2301,7 @@ def q222_feature_hash_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q222_feature_hash_audit"] = f"""
+ORACLE["q222_feature_hash_audit"] = f"""
     WITH terms AS (
         SELECT tok, COUNT(DISTINCT doc_id) AS df
         FROM (
@@ -2401,8 +2328,7 @@ _ORACLE_ALL["q222_feature_hash_audit"] = f"""
     FROM per_bucket
 """
 
-EXTRA_QUERIES["q222_feature_hash_audit"] = q222_feature_hash_audit
-EXTRA_ORACLE["q222_feature_hash_audit"] = _ORACLE_ALL["q222_feature_hash_audit"]
+QUERIES["q222_feature_hash_audit"] = q222_feature_hash_audit
 
 
 BQ_BANDS, BQ_WIDTH = 4, 15  # 60-bit SimHash split into 4 x 15-bit blocking keys
@@ -2485,7 +2411,7 @@ def q225_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q225_blocking_quality"] = f"""
+ORACLE["q225_blocking_quality"] = f"""
     WITH {_SIMHASH_SIG_CTES},
     bands AS (
         SELECT s.doc_id, i.i AS band_idx,
@@ -2531,12 +2457,11 @@ _ORACLE_ALL["q225_blocking_quality"] = f"""
                AS reduction_ratio
     FROM counts, nd
 """
-_ORACLE_ALL["q225_blocking_quality"] = _ORACLE_ALL["q225_blocking_quality"].replace(
+ORACLE["q225_blocking_quality"] = ORACLE["q225_blocking_quality"].replace(
     "{shingles}", _SHINGLES_SQL.format(toks=_TOKENS_SQL)
 )
 
-EXTRA_QUERIES["q225_blocking_quality"] = q225_blocking_quality
-EXTRA_ORACLE["q225_blocking_quality"] = _ORACLE_ALL["q225_blocking_quality"]
+QUERIES["q225_blocking_quality"] = q225_blocking_quality
 
 
 NB_FOLDS = 5  # md5 fold 0 is the held-out test split
@@ -2718,7 +2643,7 @@ _NB_PRED_CTES = f"""
         FROM nb_scored
     )"""
 
-_ORACLE_ALL["q227_naive_bayes_langid"] = (
+ORACLE["q227_naive_bayes_langid"] = (
     _NB_PRED_CTES
     + """
     SELECT true_lang, pred_lang, CAST(COUNT(*) AS BIGINT) AS n
@@ -2728,8 +2653,7 @@ _ORACLE_ALL["q227_naive_bayes_langid"] = (
 """
 )
 
-EXTRA_QUERIES["q227_naive_bayes_langid"] = q227_naive_bayes_langid
-EXTRA_ORACLE["q227_naive_bayes_langid"] = _ORACLE_ALL["q227_naive_bayes_langid"]
+QUERIES["q227_naive_bayes_langid"] = q227_naive_bayes_langid
 
 
 def q240_mcnemar_classifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2778,7 +2702,7 @@ def q240_mcnemar_classifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q240_mcnemar_classifiers"] = (
+ORACLE["q240_mcnemar_classifiers"] = (
     _NB_PRED_CTES
     + ", "
     + _langpred_cte()
@@ -2811,8 +2735,7 @@ _ORACLE_ALL["q240_mcnemar_classifiers"] = (
 """
 )
 
-EXTRA_QUERIES["q240_mcnemar_classifiers"] = q240_mcnemar_classifiers
-EXTRA_ORACLE["q240_mcnemar_classifiers"] = _ORACLE_ALL["q240_mcnemar_classifiers"]
+QUERIES["q240_mcnemar_classifiers"] = q240_mcnemar_classifiers
 
 
 MRR_K = NDCG_K
@@ -2916,7 +2839,7 @@ _Q249_RETR_CTES = f"""
         QUALIFY rank <= {MRR_K}
     )"""
 
-_ORACLE_ALL["q249_mrr_retrieval"] = f"""{_Q249_RETR_CTES}, docterms AS (
+ORACLE["q249_mrr_retrieval"] = f"""{_Q249_RETR_CTES}, docterms AS (
         SELECT doc_id, unnest(list_distinct({_TOKENS_SQL})) AS term
         FROM documents
     ), rel AS (
@@ -2944,8 +2867,7 @@ _ORACLE_ALL["q249_mrr_retrieval"] = f"""{_Q249_RETR_CTES}, docterms AS (
     ORDER BY qid
 """
 
-EXTRA_QUERIES["q249_mrr_retrieval"] = q249_mrr_retrieval
-EXTRA_ORACLE["q249_mrr_retrieval"] = _ORACLE_ALL["q249_mrr_retrieval"]
+QUERIES["q249_mrr_retrieval"] = q249_mrr_retrieval
 
 
 FS_LN2 = 0.6931471805599453
@@ -3067,7 +2989,7 @@ def q252_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q252_fellegi_sunter"] = f"""
+ORACLE["q252_fellegi_sunter"] = f"""
     WITH base AS (
         SELECT c_custkey, c_name, c_nationkey, c_mktsegment,
                CAST(FLOOR(c_acctbal / {FS_BAND}) AS BIGINT) AS band,
@@ -3121,8 +3043,7 @@ _ORACLE_ALL["q252_fellegi_sunter"] = f"""
     FROM fields ORDER BY field
 """
 
-EXTRA_QUERIES["q252_fellegi_sunter"] = q252_fellegi_sunter
-EXTRA_ORACLE["q252_fellegi_sunter"] = _ORACLE_ALL["q252_fellegi_sunter"]
+QUERIES["q252_fellegi_sunter"] = q252_fellegi_sunter
 
 
 PPL_MOD, PPL_TRAIN_LT = 10, 8  # md5 doc split: 80% train / 20% held out
@@ -3207,7 +3128,7 @@ def q254_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q254_heldout_perplexity"] = f"""
+ORACLE["q254_heldout_perplexity"] = f"""
     WITH d AS (
         SELECT doc_id, source, {_TOKENS_SQL} AS t,
                ('0x' || substr(md5('ppl:' || doc_id::VARCHAR), 1, 15))::BIGINT
@@ -3252,8 +3173,7 @@ _ORACLE_ALL["q254_heldout_perplexity"] = f"""
     FROM scored GROUP BY source ORDER BY source
 """
 
-EXTRA_QUERIES["q254_heldout_perplexity"] = q254_heldout_perplexity
-EXTRA_ORACLE["q254_heldout_perplexity"] = _ORACLE_ALL["q254_heldout_perplexity"]
+QUERIES["q254_heldout_perplexity"] = q254_heldout_perplexity
 
 
 GT_MAX_R = 10
@@ -3333,7 +3253,7 @@ def q259_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return unseen.unionByName(rows).orderBy("r")
 
 
-_ORACLE_ALL["q259_good_turing"] = f"""
+ORACLE["q259_good_turing"] = f"""
     WITH counts AS (
         SELECT ('0x' || substr(md5(gram), 1, 15))::BIGINT AS gkey,
                COUNT(*) AS r
@@ -3367,8 +3287,7 @@ _ORACLE_ALL["q259_good_turing"] = f"""
     ORDER BY r
 """
 
-EXTRA_QUERIES["q259_good_turing"] = q259_good_turing
-EXTRA_ORACLE["q259_good_turing"] = _ORACLE_ALL["q259_good_turing"]
+QUERIES["q259_good_turing"] = q259_good_turing
 
 
 BURST_MIN_DF = 5
@@ -3424,7 +3343,7 @@ def q266_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q266_term_burstiness"] = f"""
+ORACLE["q266_term_burstiness"] = f"""
     WITH per_dt AS (
         SELECT doc_id, tok AS t, CAST(COUNT(*) AS BIGINT) AS c
         FROM (SELECT doc_id, unnest({_TOKENS_SQL}) AS tok FROM documents)
@@ -3445,8 +3364,7 @@ _ORACLE_ALL["q266_term_burstiness"] = f"""
     ORDER BY vmr DESC, term LIMIT {BURST_TOP}
 """
 
-EXTRA_QUERIES["q266_term_burstiness"] = q266_term_burstiness
-EXTRA_ORACLE["q266_term_burstiness"] = _ORACLE_ALL["q266_term_burstiness"]
+QUERIES["q266_term_burstiness"] = q266_term_burstiness
 
 
 IPF_ITERS = 4
@@ -3554,9 +3472,8 @@ def _q271_oracle() -> str:
     """
 
 
-_ORACLE_ALL["q271_ipf_raking"] = _q271_oracle()
-EXTRA_QUERIES["q271_ipf_raking"] = q271_ipf_raking
-EXTRA_ORACLE["q271_ipf_raking"] = _ORACLE_ALL["q271_ipf_raking"]
+ORACLE["q271_ipf_raking"] = _q271_oracle()
+QUERIES["q271_ipf_raking"] = q271_ipf_raking
 
 
 def q274_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3610,7 +3527,7 @@ def q274_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORACLE_ALL["q274_kneser_ney"] = f"""
+ORACLE["q274_kneser_ney"] = f"""
     WITH bgr AS (
         SELECT t[pos] AS a, t[pos + 1] AS b
         FROM (SELECT t, unnest(range(1, len(t))) AS pos
@@ -3638,8 +3555,7 @@ _ORACLE_ALL["q274_kneser_ney"] = f"""
     ORDER BY context, word
 """
 
-EXTRA_QUERIES["q274_kneser_ney"] = q274_kneser_ney
-EXTRA_ORACLE["q274_kneser_ney"] = _ORACLE_ALL["q274_kneser_ney"]
+QUERIES["q274_kneser_ney"] = q274_kneser_ney
 
 
 SETCOVER_K = 6
@@ -3774,9 +3690,8 @@ def _q275_oracle() -> str:
     )
 
 
-_ORACLE_ALL["q275_setcover_selection"] = _q275_oracle()
-EXTRA_QUERIES["q275_setcover_selection"] = q275_setcover_selection
-EXTRA_ORACLE["q275_setcover_selection"] = _ORACLE_ALL["q275_setcover_selection"]
+ORACLE["q275_setcover_selection"] = _q275_oracle()
+QUERIES["q275_setcover_selection"] = q275_setcover_selection
 
 
 SETCOVER_SG_MOD = 4  # static candidate buckets; round r reads bucket (r-1)%MOD
@@ -3824,13 +3739,11 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs' shingles are read back from the store filtered on their
     buckets as well as their ids, so that scan stays partition-pruned
     to the buckets already picked from."""
-    import shutil
-
     from batchprocessingetl_spark.operators.dedup import shingle_frame
 
     docs = load_table(spark, sf_dir, "documents")
     work = work_dir(spark, "sgcover")
-    shutil.rmtree(work, ignore_errors=True)
+    fs_delete(spark, work)
     # map-only materialization: shingles are deduped WITHIN each doc's
     # array (array_distinct before the explode) — (doc_id, sh) is then
     # distinct by construction, so no global distinct shuffle; the
@@ -3956,9 +3869,8 @@ def _q281_oracle() -> str:
     )
 
 
-_ORACLE_ALL["q281_stochastic_setcover"] = _q281_oracle()
-EXTRA_QUERIES["q281_stochastic_setcover"] = q281_stochastic_setcover
-EXTRA_ORACLE["q281_stochastic_setcover"] = _ORACLE_ALL["q281_stochastic_setcover"]
+ORACLE["q281_stochastic_setcover"] = _q281_oracle()
+QUERIES["q281_stochastic_setcover"] = q281_stochastic_setcover
 
 
 ZIPF_TOP = 200
@@ -4062,8 +3974,8 @@ _Q342_ORACLE = f"""
                AS r_squared
     FROM a CROSS JOIN vocab
 """
-EXTRA_QUERIES["q342_zipf_fit"] = q342_zipf_fit
-EXTRA_ORACLE["q342_zipf_fit"] = _Q342_ORACLE
+QUERIES["q342_zipf_fit"] = q342_zipf_fit
+ORACLE["q342_zipf_fit"] = _Q342_ORACLE
 
 
 def q343_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4166,5 +4078,5 @@ _Q343_ORACLE = f"""
                         * CAST(su AS DOUBLE)) / k), 6) AS heaps_k
     FROM a CROSS JOIN tot
 """
-EXTRA_QUERIES["q343_heaps_law"] = q343_heaps_law
-EXTRA_ORACLE["q343_heaps_law"] = _Q343_ORACLE
+QUERIES["q343_heaps_law"] = q343_heaps_law
+ORACLE["q343_heaps_law"] = _Q343_ORACLE

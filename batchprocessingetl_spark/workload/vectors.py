@@ -267,14 +267,16 @@ def q173_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 QUERIES = {
-    # Round 6 rotation (VERDICT r5 #1): the ANN family's registered
-    # row moves to q125 — the multiprobe-IVF + int8-re-rank composite
-    # whose oracle IS the exact full-probe answer, so it pins q54's
-    # IVF machinery AND the exact-scoring path (q50/q53's tiled GEMM
-    # semantics) by construction. q53/q54 move to EXTRA (both stay
-    # benched / oracle-checked; q50's exact top-k remains the recall
-    # ground truth of the recall floors in tests/test_vectors.py).
+    "q50_knn_bruteforce": q50_knn_bruteforce,
+    "q51_label_centroid_similarity": q51_label_centroid_similarity,
+    "q52_knn_lsh": q52_knn_lsh,
+    "q53_embedding_similar_pairs": q53_embedding_similar_pairs,
+    "q54_knn_ivf": q54_knn_ivf,
+    "q56_knn_int8": q56_knn_int8,
     "q125_knn_ivf_int8": q125_knn_ivf_int8,
+    "q65_knn_join": q65_knn_join,
+    "q66_semantic_dedup": q66_semantic_dedup,
+    "q173_embedding_covariance": q173_embedding_covariance,
 }
 
 _COS = """
@@ -413,32 +415,6 @@ ORACLE = {
               / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))) >= 0.4
         ORDER BY id_a, id_b
     """,
-}
-
-# Out of the ~50-entry driver registry budget, still pytest +
-# check_oracle --extra verified: q56's oracle IS q50's (the int8 pass
-# is a candidate generator whose exact re-rank restores q50's answer),
-# and q51's grouped-agg-over-cosine evidence is covered by the five
-# registered cosine oracles (q50/q52/q53/q65/q66). Displaced in favor
-# of q65 (batch kNN join) and q66 (semantic dedup), which pin brand-new
-# operator machinery.
-# Round 4 mid-round rotation displaced q52 (sign-LSH kNN): the ANN
-# family keeps q54 (IVF probe, same bucket-pruning posture) and q50
-# (exact baseline) registered, and q52's retrieval quality is pinned
-# by the measured recall floors in tests/test_vectors.py.
-EXTRA_QUERIES = {
-    "q53_embedding_similar_pairs": q53_embedding_similar_pairs,
-    "q54_knn_ivf": q54_knn_ivf,
-    "q173_embedding_covariance": q173_embedding_covariance,
-    "q50_knn_bruteforce": q50_knn_bruteforce,
-    "q65_knn_join": q65_knn_join,
-    "q66_semantic_dedup": q66_semantic_dedup,
-    "q52_knn_lsh": q52_knn_lsh,
-    "q56_knn_int8": q56_knn_int8,
-    "q51_label_centroid_similarity": q51_label_centroid_similarity,
-}
-
-EXTRA_ORACLE = {
     # generate_subscripts/unnest replay the same upper-triangle
     # product frame (this DuckDB lacks WITH ORDINALITY); subscripts
     # are 1-based, so indices shift by 1 to match Spark's 0-based
@@ -469,6 +445,8 @@ EXTRA_ORACLE = {
         JOIN dims dj ON m.j = dj.i
         ORDER BY m.i, m.j
     """,
+    # the int8 pass is a candidate generator whose exact re-rank
+    # restores q50's answer, so q56 and q125 share q50's oracle
     "q56_knn_int8": _Q50_SQL,
     "q125_knn_ivf_int8": _Q50_SQL,
     "q51_label_centroid_similarity": f"""
@@ -489,19 +467,6 @@ EXTRA_ORACLE = {
         ORDER BY label
     """,
 }
-
-# Rotation bookkeeping: align the oracle dicts with the
-# QUERIES/EXTRA_QUERIES split above (r4: q52; r5: q50/q65/q66;
-# r6: q53/q54 out, q125 in).
-EXTRA_ORACLE["q52_knn_lsh"] = ORACLE.pop("q52_knn_lsh")
-EXTRA_ORACLE["q50_knn_bruteforce"] = ORACLE.pop("q50_knn_bruteforce")
-EXTRA_ORACLE["q65_knn_join"] = ORACLE.pop("q65_knn_join")
-EXTRA_ORACLE["q66_semantic_dedup"] = ORACLE.pop("q66_semantic_dedup")
-EXTRA_ORACLE["q53_embedding_similar_pairs"] = ORACLE.pop(
-    "q53_embedding_similar_pairs"
-)
-EXTRA_ORACLE["q54_knn_ivf"] = ORACLE.pop("q54_knn_ivf")
-ORACLE["q125_knn_ivf_int8"] = EXTRA_ORACLE.pop("q125_knn_ivf_int8")
 
 
 KM_K = 8
@@ -614,8 +579,8 @@ def _q187_oracle_sql(k: int, iters: int, seed: str, scale: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q187_kmeans_clusters"] = q187_kmeans_clusters
-EXTRA_ORACLE["q187_kmeans_clusters"] = _q187_oracle_sql(
+QUERIES["q187_kmeans_clusters"] = q187_kmeans_clusters
+ORACLE["q187_kmeans_clusters"] = _q187_oracle_sql(
     KM_K, KM_ITERS, KM_SEED, KM_SCALE
 )
 
@@ -696,8 +661,8 @@ _COS_AB = """
        * sqrt(list_sum(list_transform(ae, x -> x * x))))
 """
 
-EXTRA_QUERIES["q189_triplet_mining"] = q189_triplet_mining
-EXTRA_ORACLE["q189_triplet_mining"] = f"""
+QUERIES["q189_triplet_mining"] = q189_triplet_mining
+ORACLE["q189_triplet_mining"] = f"""
     WITH a AS (
         SELECT vec_id AS anchor_id, label AS anchor_label,
                list_transform(embedding, x -> x::DOUBLE) AS ae
@@ -862,8 +827,8 @@ def _q192_oracle_sql(k: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q192_mmr_rerank"] = q192_mmr_rerank
-EXTRA_ORACLE["q192_mmr_rerank"] = _q192_oracle_sql(MMR_K)
+QUERIES["q192_mmr_rerank"] = q192_mmr_rerank
+ORACLE["q192_mmr_rerank"] = _q192_oracle_sql(MMR_K)
 
 
 PCA_QS = 10_000  # float -> fixed-point quantization of embedding entries
@@ -996,8 +961,8 @@ def _q220_oracle_sql(k: int) -> str:
     return "".join(parts)
 
 
-EXTRA_QUERIES["q220_pca_power_iteration"] = q220_pca_power_iteration
-EXTRA_ORACLE["q220_pca_power_iteration"] = _q220_oracle_sql(PCA_STEPS)
+QUERIES["q220_pca_power_iteration"] = q220_pca_power_iteration
+ORACLE["q220_pca_power_iteration"] = _q220_oracle_sql(PCA_STEPS)
 
 
 KC_K = 6
@@ -1126,8 +1091,8 @@ def _q253_oracle_sql(k: int, seed: str, scale: int) -> str:
     )
 
 
-EXTRA_QUERIES["q253_kcenter_coreset"] = q253_kcenter_coreset
-EXTRA_ORACLE["q253_kcenter_coreset"] = _q253_oracle_sql(KC_K, KC_SEED, KC_SCALE)
+QUERIES["q253_kcenter_coreset"] = q253_kcenter_coreset
+ORACLE["q253_kcenter_coreset"] = _q253_oracle_sql(KC_K, KC_SEED, KC_SCALE)
 
 
 PQ_SUB, PQ_SUBDIM, PQ_K, PQ_ITERS, PQ_SCALE = 4, 16, 8, 2, 10**6
@@ -1255,8 +1220,8 @@ def _q278_oracle_sql() -> str:
     )
 
 
-EXTRA_QUERIES["q278_product_quantization"] = q278_product_quantization
-EXTRA_ORACLE["q278_product_quantization"] = _q278_oracle_sql()
+QUERIES["q278_product_quantization"] = q278_product_quantization
+ORACLE["q278_product_quantization"] = _q278_oracle_sql()
 
 
 MRL_PREFIX = 8
@@ -1332,8 +1297,8 @@ _PRECOS = """
        * sqrt(list_sum(list_transform(qe[1:8], x -> x * x))))
 """
 
-EXTRA_QUERIES["q312_matryoshka_rerank"] = q312_matryoshka_rerank
-EXTRA_ORACLE["q312_matryoshka_rerank"] = f"""
+QUERIES["q312_matryoshka_rerank"] = q312_matryoshka_rerank
+ORACLE["q312_matryoshka_rerank"] = f"""
     WITH q AS (
         SELECT vec_id AS qid, list_transform(embedding, x -> x::DOUBLE) AS qe
         FROM embeddings WHERE vec_id % 100 = 0
@@ -1445,8 +1410,8 @@ def q313_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-EXTRA_QUERIES["q313_binary_hamming_rerank"] = q313_binary_hamming_rerank
-EXTRA_ORACLE["q313_binary_hamming_rerank"] = f"""
+QUERIES["q313_binary_hamming_rerank"] = q313_binary_hamming_rerank
+ORACLE["q313_binary_hamming_rerank"] = f"""
     WITH q AS (
         SELECT vec_id AS qid, list_transform(embedding, x -> x::DOUBLE) AS qe
         FROM embeddings WHERE vec_id % 100 = 0
@@ -2444,7 +2409,7 @@ _R11_ORACLE = {
 """,
 }
 
-EXTRA_QUERIES.update(
+QUERIES.update(
     {
         "q332_knn_shapley": q332_knn_shapley,
         "q333_mmd_quadratic": q333_mmd_quadratic,
@@ -2455,4 +2420,4 @@ EXTRA_QUERIES.update(
         "q338_twonn_intrinsic_dim": q338_twonn_intrinsic_dim,
     }
 )
-EXTRA_ORACLE.update(_R11_ORACLE)
+ORACLE.update(_R11_ORACLE)

@@ -26,7 +26,7 @@ from batchprocessingetl_spark.workload import collect_extra_queries, collect_que
 # pipeline composites, event analytics, and one of each north-star
 # extension family (exact dedup, minhash near-dup, knn, exact pair
 # GEMM). Same set as BENCH_r01 (for round-over-round comparability;
-# q12 now lives in EXTRA_QUERIES but stays benched) + q53 added in r2
+# q12 is no longer registered but stays benched) + q53 added in r2
 # after its de-collect rewrite + q81 added in r3 (the measured-skew
 # salted join, VERDICT r2 #4) + q94 added in r4 (q81's plain-join AQE
 # twin — the salted-vs-AQE bake-off line, VERDICT r3 #7).

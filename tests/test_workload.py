@@ -33,6 +33,38 @@ def test_registry_within_driver_budget():
     assert not set(QUERIES) & set(EXTRA)
 
 
+@pytest.mark.parametrize(
+    "attr, collect", [("QUERIES", "collect_extra_queries"), ("ORACLE", "collect_extra_oracle")]
+)
+def test_name_defined_in_two_modules_fails_loudly(monkeypatch, attr, collect):
+    """A name two modules both define is an error, not a silent
+    last-module-wins overwrite."""
+    import types
+
+    from batchprocessingetl_spark import workload
+
+    def stub(value):
+        mod = types.SimpleNamespace(QUERIES={}, ORACLE={})
+        getattr(mod, attr)["q_dup"] = value
+        return mod
+
+    monkeypatch.setattr(workload, "_MODULES", (stub("SELECT 1"), stub("SELECT 2")))
+    with pytest.raises(ValueError, match="q_dup"):
+        getattr(workload, collect)()
+
+
+@pytest.mark.parametrize("name", ["q124_incremental_near_dups", "q281_stochastic_setcover"])
+def test_work_dir_store_reruns_on_uri_work_dir(spark, tmp_path, monkeypatch, name):
+    """These queries clear their work-dir store through the Hadoop FS
+    API, so a second run in the same app over a ``file://`` work dir
+    replaces the first run's store instead of failing its write with
+    "path already exists" (a local-path rmtree silently no-ops on a URI)."""
+    monkeypatch.setenv("SPARK_GRAFT_WORK_DIR", tmp_path.as_uri())
+    first = ALL[name](spark, SF_SMOKE).collect()
+    assert first
+    assert ALL[name](spark, SF_SMOKE).collect() == first
+
+
 @pytest.mark.parametrize("name", sorted({**QUERIES, **EXTRA}))
 def test_query_runs(spark, name):
     df = {**QUERIES, **EXTRA}[name](spark, SF_SMOKE)
@@ -347,7 +379,7 @@ def test_q21_session_average_rounds_ties_half_up(spark, tmp_path):
 
     import duckdb
 
-    from batchprocessingetl_spark.workload.events import _ORACLE_ALL, q21_sessionization
+    from batchprocessingetl_spark.workload.events import ORACLE, q21_sessionization
 
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -365,7 +397,7 @@ def test_q21_session_average_rounds_ties_half_up(spark, tmp_path):
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet/*.parquet')"
     )
-    assert con.execute(_ORACLE_ALL["q21_sessionization"]).fetchall() == got
+    assert con.execute(ORACLE["q21_sessionization"]).fetchall() == got
 
 
 def test_group_ols_recovers_known_line(spark):

@@ -5,7 +5,10 @@ the matching ``oracle_sql()`` in DuckDB over the same parquet tables,
 and compares row count, column names/dtypes, and order-insensitive
 values. Queries without an oracle get a rows-only check.
 
-Usage: python tools/check_oracle.py [sf_dir] [query_name ...]
+Usage: python tools/check_oracle.py [sf_dir] [query_name ...] [--extra]
+
+``--extra`` adds the queries outside the registry. A named query
+that is not in the checked set exits non-zero before any check runs.
 """
 
 from __future__ import annotations
@@ -82,8 +85,8 @@ def main() -> int:
 
     qs, oracles = ent.queries(), ent.oracle_sql()
     if include_extra:
-        # the EXTRA_QUERIES kept out of the driver's ~50-entry check
-        # budget still get local differential evidence here
+        # the queries not in workload._REGISTERED (outside the ~50-entry
+        # CORRECTNESS registry) still get local differential evidence here
         from batchprocessingetl_spark.workload import (
             collect_extra_oracle,
             collect_extra_queries,
@@ -91,6 +94,10 @@ def main() -> int:
 
         qs = {**qs, **collect_extra_queries()}
         oracles = {**oracles, **collect_extra_oracle()}
+    unknown = sorted(only - set(qs))
+    if unknown:
+        hint = "" if include_extra else " (non-registered queries need --extra)"
+        sys.exit(f"unknown queries: {unknown}{hint}")
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:

@@ -28,8 +28,6 @@ from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.operators import media_codecs as codecs
 
-MEDIA_META_FIELDS = "kind string, width int, height int, sample_rate int, n_frames int"
-
 FEATURE_SCHEMA = (
     "doc_id long, kind string, n_bytes long, content_hash string, feature array<float>"
 )

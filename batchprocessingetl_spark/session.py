@@ -78,9 +78,6 @@ def get_spark(
         # carriage-return redraws interleave with every tool's stderr
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        # events.parquet carries TIMESTAMP(NANOS) which vanilla Spark
-        # rejects; read as epoch-nanos long, converted in the catalog.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # Reliable checkpoints (operators/iteration.py barriers) are
         # never deleted by default; let the ContextCleaner GC a
         # round's snapshot once its RDD is unreferenced. Must be set

@@ -387,28 +387,6 @@ def deduped_ingest_stream(
     q.awaitTermination()
 
 
-def incremental_ingest_stream(
-    spark: SparkSession,
-    source_dir: str,
-    target_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Streaming version of the raw-layer incremental load
-    (raw_layer.py:94-159): new files land append-only in the target;
-    progress lives in the checkpoint, so re-runs are exactly-once
-    without the union+dropDuplicates re-read the reference needs."""
-    events = stream_events(spark, source_dir)
-    q = (
-        events.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", target_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def _drain_files(
     spark: SparkSession,
     source_dir: str,

@@ -1060,14 +1060,6 @@ DSIR_TARGET = "src0"
 DSIR_TOP = 50
 
 
-def _md5_bucket(col, n: int):
-    """Deterministic engine-replayable hash bucket: md5 hex prefix →
-    long → mod n (the q148 idiom)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % n
-    )
-
-
 def q188_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR-style data selection (Xie et al., 2023 — hashed n-gram
     importance resampling): score every RAW-pool document by how
@@ -1156,10 +1148,6 @@ def q188_dsir_importance_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(DSIR_TOP)
     )
 
-
-_DSIR_BUCKET_SQL = (
-    "(('0x' || substr(md5({col}), 1, 15))::BIGINT % " + str(DSIR_BUCKETS) + ")"
-)
 
 QUERIES["q188_dsir_importance_select"] = q188_dsir_importance_select
 ORACLE["q188_dsir_importance_select"] = f"""

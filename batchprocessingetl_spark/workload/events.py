@@ -968,7 +968,6 @@ def q145_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-PATH_N = 3
 PATH_TOP = 20
 
 

@@ -1366,8 +1366,6 @@ QUERIES.update(
 )
 
 
-_CENTS_SQL = "CAST(FLOOR({col} * 100 + 0.5) AS BIGINT)"
-
 ORACLE.update(
     {
         "q353_vif_collinearity": """

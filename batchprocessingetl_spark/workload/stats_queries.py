@@ -2298,7 +2298,6 @@ QUERIES["q236_trimmed_mean"] = q236_trimmed_mean
 
 MDE_Z_ALPHA = 1.959964  # two-sided alpha = 0.05
 MDE_Z_POWER = 0.841621  # power = 0.80
-MDE_SCALE = 10**6  # fixed-point scale of the z constants
 
 
 def q237_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,6 +7,7 @@ never would."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.workload.relational import (
@@ -437,3 +438,71 @@ def test_extra_workload_has_no_unguarded_global_windows(spark):
         if n:
             offenders[name] = n
     assert not offenders, offenders
+
+
+def test_declared_table_schemas_match_the_parquet_files(spark):
+    """catalog.TABLES declares each table's schema; it must equal what
+    Spark infers from the fixture files themselves."""
+    from batchprocessingetl_spark.catalog import TABLES, load_table
+
+    for name in TABLES:
+        inferred = spark.read.parquet(f"{SF_SMOKE}/{name}.parquet").schema
+        assert load_table(spark, SF_SMOKE, name).schema == inferred, name
+
+
+def test_loading_every_table_runs_no_job(spark):
+    """A declared-schema load infers nothing, so building a query's
+    scans starts no Spark job."""
+    from batchprocessingetl_spark.catalog import TABLES, load_table
+
+    sc = spark.sparkContext
+    group = "catalog-load-no-jobs"
+    sc.setJobGroup(group, "load every catalog table")
+    try:
+        for name in TABLES:
+            load_table(spark, SF_SMOKE, name)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
+def test_timestamp_columns_load_as_timestamp_in_an_ntz_session(spark):
+    """A session that infers parquet timestamps as TIMESTAMP_NTZ (for
+    example a caller's vanilla session) still gets LTZ timestamps from
+    the catalog, as the epoch functions the queries use require."""
+    from batchprocessingetl_spark.catalog import load_table
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        got = {
+            col: dict(load_table(spark, SF_SMOKE, table).dtypes)[col]
+            for table, col in (("orders", "o_orderdate"), ("lineitem", "l_shipdate"), ("events", "ts"))
+        }
+    finally:
+        spark.conf.set(key, before)
+    assert got == {"o_orderdate": "timestamp", "l_shipdate": "timestamp", "ts": "timestamp"}
+
+
+def test_nanos_events_file_fails_at_scan(spark, tmp_path):
+    """events.ts is declared TIMESTAMP over parquet TIMESTAMP(MICROS);
+    a TIMESTAMP(NANOS) file fails loudly when a query scans it."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from batchprocessingetl_spark.catalog import load_table
+
+    events = pa.table({
+        "event_id": pa.array([1], pa.int64()),
+        "ts": pa.array([dt.datetime(2024, 1, 1, 0, 0, 0, 1)], pa.timestamp("ns")),
+        "user_id": pa.array([7], pa.int64()),
+        "event_type": ["click"],
+        "value": [1.0],
+        "props": ["{}"],
+    })
+    pq.write_table(events, str(tmp_path / "events.parquet"))
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        load_table(spark, str(tmp_path), "events").select(F.unix_micros("ts")).collect()

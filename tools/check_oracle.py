@@ -16,12 +16,13 @@ from __future__ import annotations
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from batchprocessingetl_spark.catalog import TABLES
 from batchprocessingetl_spark.session import get_spark

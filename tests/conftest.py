@@ -63,5 +63,29 @@ def spark():
     yield s
 
 
+@pytest.fixture(scope="session")
+def query_plans():
+    """Physical plan string of each workload query built at SF_SMOKE,
+    by name. ``test_workload.py::test_query_runs`` records the plan of
+    the frame it runs, so the plan audits in ``test_plans.py`` read it
+    instead of building all 374 queries a second time; a plan missing
+    from the dict (a partial run) is built by the audit itself."""
+    return {}
+
+
+def pytest_collection_modifyitems(items):
+    """Run the tests that read ``query_plans`` after the smoke runs
+    that fill it, keeping every other test in file order."""
+    readers = [
+        item
+        for item in items
+        if "query_plans" in getattr(item, "fixturenames", ())
+        and getattr(item, "originalname", None) != "test_query_runs"
+    ]
+    if readers:
+        late = set(map(id, readers))
+        items[:] = [item for item in items if id(item) not in late] + readers
+
+
 def ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)

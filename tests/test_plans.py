@@ -404,39 +404,43 @@ def test_shingle_explode_evaluates_hof_once(spark):
     assert _physical(bad).count("transform(sequence") > 1
 
 
-def test_registered_workload_has_no_unguarded_global_windows(spark):
+def _global_window_offenders(spark, queries, query_plans) -> dict:
+    """Unguarded global-window count per query, for the queries that
+    have any. Plans come from ``query_plans`` (recorded by the smoke
+    runs) and are built here only when missing."""
+    from tools.plan_audit import unguarded_global_windows
+
+    offenders = {}
+    for name, fn in queries.items():
+        if name not in query_plans:
+            query_plans[name] = _physical(fn(spark, SF_SMOKE))
+        n = unguarded_global_windows(query_plans[name])
+        if n:
+            offenders[name] = n
+    return offenders
+
+
+def test_registered_workload_has_no_unguarded_global_windows(spark, query_plans):
     """Every driver-registered query's physical plan: any
     empty-partition WindowExec must sit above a grain-collapsing
     aggregate (the documented collapsed-frame designs — cents bins,
     distinct-value ranks, test-level BH ranking). A fact-grain global
     window introduced anywhere in the registered surface fails here."""
     from batchprocessingetl_spark.workload import collect_queries
-    from tools.plan_audit import unguarded_global_windows
 
-    offenders = {}
-    for name, fn in collect_queries().items():
-        plan = _physical(fn(spark, SF_SMOKE))
-        n = unguarded_global_windows(plan)
-        if n:
-            offenders[name] = n
+    offenders = _global_window_offenders(spark, collect_queries(), query_plans)
     assert not offenders, offenders
 
 
-def test_extra_workload_has_no_unguarded_global_windows(spark):
+def test_extra_workload_has_no_unguarded_global_windows(spark, query_plans):
     """Round-8 VERDICT #4: the same gate over the EXTRA surface, so a
     fact-grain global window introduced in ANY declared query is
     caught at pytest time, not only at PLANS.md regeneration. Plans
     are built at smoke SF (iterative queries run their loops at
     plan-build time, so this stays cheap there)."""
     from batchprocessingetl_spark.workload import collect_extra_queries
-    from tools.plan_audit import unguarded_global_windows
 
-    offenders = {}
-    for name, fn in collect_extra_queries().items():
-        plan = _physical(fn(spark, SF_SMOKE))
-        n = unguarded_global_windows(plan)
-        if n:
-            offenders[name] = n
+    offenders = _global_window_offenders(spark, collect_extra_queries(), query_plans)
     assert not offenders, offenders
 
 

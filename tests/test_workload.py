@@ -66,8 +66,10 @@ def test_work_dir_store_reruns_on_uri_work_dir(spark, tmp_path, monkeypatch, nam
 
 
 @pytest.mark.parametrize("name", sorted({**QUERIES, **EXTRA}))
-def test_query_runs(spark, name):
+def test_query_runs(spark, name, query_plans):
     df = {**QUERIES, **EXTRA}[name](spark, SF_SMOKE)
+    # the plan audits in test_plans.py read this instead of a rebuild
+    query_plans[name] = df._jdf.queryExecution().executedPlan().toString()
     assert df.count() >= 0
     assert len(df.columns) > 0
 

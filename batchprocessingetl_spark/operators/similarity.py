@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batchprocessingetl_spark.sources.readers import local_frame
+
 
 def as_double(col: Column) -> Column:
     """array<float> -> array<double> so all math is double-precision
@@ -234,7 +236,7 @@ def ivf_topk(
     # cell id = clusterCenters() index, matching model.transform's
     # prediction ids
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = spark.createDataFrame(centers, "__cell int, centroid array<double>")
+    cents = local_frame(spark, centers, "__cell int, centroid array<double>")
     probes = (
         query_df.crossJoin(F.broadcast(cents))
         .withColumn(
@@ -292,7 +294,7 @@ def ivf_topk_int8(
     _require_single_query(query_df, "ivf_topk_int8")
     spark = df.sparkSession
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = spark.createDataFrame(centers, "__cell int, centroid array<double>")
+    cents = local_frame(spark, centers, "__cell int, centroid array<double>")
     probes = (
         query_df.crossJoin(F.broadcast(cents))
         .withColumn(
@@ -351,7 +353,7 @@ def probe_cells(query_df: DataFrame, model, nprobe: int) -> list[int]:
     _require_single_query(query_df, "probe_cells")
     spark = query_df.sparkSession
     centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = spark.createDataFrame(centers, "__cell int, centroid array<double>")
+    cents = local_frame(spark, centers, "__cell int, centroid array<double>")
     ranked = (
         query_df.crossJoin(F.broadcast(cents))
         .withColumn(

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from batchprocessingetl_spark.sources.readers import local_frame
+
 # Tokenization: trim -> split on runs of whitespace -> drop the
 # empty-string artifact ''.split() produces on empty input.
 TOKENS_SQL_DUCKDB = "list_filter(regexp_split_to_array(trim({col}), '\\s+'), t -> t <> '')"
@@ -604,7 +606,8 @@ def bpe_train_merges(
                 ).alias("seg"),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges,
         "merge_round int, lft string, rgt string, merged string, n_occ bigint",
     )

@@ -27,6 +27,31 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
+def local_frame(spark: SparkSession, rows, ddl: str) -> DataFrame:
+    """Driver-sized rows (tuples in ``ddl`` column order) as a
+    ``LocalRelation``, whatever the session's Arrow setting. The list
+    path, ``createDataFrame(rows, ddl)``, plans as ``Scan ExistingRDD``
+    over a PythonRDD: every scan of it starts Python workers to
+    unpickle the rows (5 rows on a 4-core host: 0.46 s wall and 1.2 s
+    of executor time, against 0.07 s here; docs/BENCH_NOTES.md). The
+    rows go through one ``pyarrow.Table`` typed by the parsed schema
+    instead, so a value its column cannot hold (an out-of-range
+    ``int``, a string in a number column) raises here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = T.StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [
+            pa.array([row[i] for row in rows], type=field.type)
+            for i, field in enumerate(arrow_schema)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 

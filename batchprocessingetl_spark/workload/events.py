@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batchprocessingetl_spark.catalog import load_table
+from batchprocessingetl_spark.sources.readers import local_frame
 from batchprocessingetl_spark.workload.parity import davg, davg_sql, dsum, dsum_sql
 
 SESSION_GAP_MINUTES = 30
@@ -144,7 +145,8 @@ def q25_value_band_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batchprocessingetl_spark.operators.asof import range_join_broadcast
 
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("p0_25", 0.0, 25.0), ("p25_50", 25.0, 50.0), ("p50_75", 50.0, 75.0), ("p75_up", 75.0, 1e18)],
         "band string, lo double, hi double",
     )
@@ -2584,7 +2586,8 @@ def q242_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s")
         .agg(F.coalesce(F.sum("n"), F.lit(0)).alias("v"))
     )
-    terms = spark.createDataFrame(
+    terms = local_frame(
+        spark,
         _shapley_terms(), "ch int, s int, s_i int, w6 long"
     )
     va = v.select(F.col("s").alias("s_i"), F.col("v").alias("v_with"))
@@ -2599,7 +2602,8 @@ def q242_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    names = spark.createDataFrame(
+    names = local_frame(
+        spark,
         [(i, ch) for i, ch in enumerate(SHAPLEY_CHANNELS)], "ch int, channel string"
     )
     return (

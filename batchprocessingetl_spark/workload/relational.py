@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batchprocessingetl_spark.catalog import load_table
+from batchprocessingetl_spark.sources.readers import local_frame
 from batchprocessingetl_spark.workload.parity import davg, dsum, dsum_sql, year_equals
 
 
@@ -4188,15 +4189,7 @@ def q256_consistent_hash_rebalance(spark: SparkSession, sf_dir: str) -> DataFram
             "h"
         ),
     )
-    # pandas path on purpose: it plans as LocalTableScan (genuinely
-    # driver-literal), which the plan gate accepts as bounded — the
-    # list path plans as Scan ExistingRDD, indistinguishable from a
-    # localCheckpoint of a fact frame and so no longer a guard.
-    import pandas as pd
-
-    bucket_spine = spark.createDataFrame(
-        pd.DataFrame({"b": list("0123456789abcdef")})
-    )
+    bucket_spine = local_frame(spark, [(b,) for b in "0123456789abcdef"], "b string")
 
     def ring_assign(n_nodes: int) -> DataFrame:
         pts = spark.range(n_nodes * CH_VNODES).select(
@@ -4524,7 +4517,8 @@ def q261_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             deg.filter(F.col("deg") >= KCORE_K).select(F.col("a").alias("node"))
         )
         counts.append((r, alive.count()))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         counts, "round int, n_in_core long"
     ).orderBy("round")
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from batchprocessingetl_spark.catalog import load_table
+from batchprocessingetl_spark.sources.readers import local_frame
 from batchprocessingetl_spark.workload.parity import year_equals
 
 AUC_POS_PRIORITY = "1-URGENT"
@@ -1512,7 +1513,7 @@ def q226_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         (d, int(round(math.log10(1.0 + 1.0 / d) * BENFORD_SCALE)))
         for d in range(1, 10)
     ]
-    exp_df = spark.createDataFrame(exp_rows, "digit int, exp_s long").select(
+    exp_df = local_frame(spark, exp_rows, "digit int, exp_s long").select(
         "digit", (F.col("exp_s") / BENFORD_SCALE).alias("expected")
     )
     orders = load_table(spark, sf_dir, "orders")

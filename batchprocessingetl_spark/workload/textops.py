@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.catalog import load_table
 from batchprocessingetl_spark.session import WORK_CODEC, work_dir
-from batchprocessingetl_spark.sources.readers import fs_delete
+from batchprocessingetl_spark.sources.readers import fs_delete, local_frame
 from batchprocessingetl_spark.operators import text as T_ops
 
 
@@ -233,7 +233,8 @@ def q80_bm25_query_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batchprocessingetl_spark.operators.retrieval import bm25_topk_join
 
     docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(qid, list(terms)) for qid, terms in BM25_QUERY_SET],
         "qid int, terms array<string>",
     )
@@ -267,7 +268,8 @@ def q147_hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batchprocessingetl_spark.operators.retrieval import bm25_topk_join
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 100 != 0)
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(qid, list(terms)) for qid, terms in HYBRID_QUERY_SET],
         "qid int, terms array<string>",
     )
@@ -797,7 +799,8 @@ def q179_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batchprocessingetl_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(qid, list(terms)) for qid, terms in BM25_QUERY_SET],
         "qid int, terms array<string>",
     )
@@ -2757,7 +2760,8 @@ def q249_mrr_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batchprocessingetl_spark.operators.text import tokens
 
     docs = load_table(spark, sf_dir, "documents")
-    queries = spark.createDataFrame(
+    queries = local_frame(
+        spark,
         [(qid, list(terms)) for qid, terms in BM25_QUERY_SET],
         "qid int, terms array<string>",
     )
@@ -3588,12 +3592,15 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     round at a 1/m sample of the candidate docs.
 
     r14 note (guide §1.1, measure first): a driver-side-set rewrite of
-    the covered state (collect + createDataFrame per round) was
-    measured SLOWER (+0.35s/round: a parallelize-backed broadcast
-    build costs far more than one built on the localCheckpointed
-    frame), so the covered set stays a filter of that frame. The
-    final round's covered-set update is dead work (nothing reads it)
-    and is skipped."""
+    the covered state (collect + a list-built frame per round) was
+    measured SLOWER (+0.35s/round). That figure measured the list
+    path's PythonRDD scan, which starts Python workers on every scan
+    of the frame; ``readers.local_frame`` builds a LocalRelation
+    instead and does not pay it. The rejection is therefore stale; it
+    has not been re-measured with ``local_frame``. The covered set
+    stays a filter of the localCheckpointed frame. The final round's
+    covered-set update is dead work (nothing reads it) and is
+    skipped."""
     from batchprocessingetl_spark.operators.dedup import shingle_frame
     from batchprocessingetl_spark.operators.iteration import barrier
 
@@ -3642,7 +3649,8 @@ def q275_setcover_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         # frame; no distinct: the left-anti join ignores duplicate
         # keys on its build side
         covered_sh = sh.filter(F.col("doc_id").isin(picked_ids)).select("sh")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         picked, "round int, doc_id long, gain long, covered long"
     ).orderBy("round")
 
@@ -3800,7 +3808,8 @@ def q281_stochastic_setcover(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("bucket").isin(picked_buckets)
             & F.col("doc_id").isin(picked_ids)
         ).select("sh")
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         picked, "round int, doc_id long, gain long, covered long"
     ).orderBy("round")
 

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.catalog import load_table
+from batchprocessingetl_spark.sources.readers import local_frame
 from batchprocessingetl_spark.operators import similarity as S
 
 QUERY_VEC_ID = 0
@@ -761,7 +762,8 @@ def q192_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         picked.append(int(r["vec_id"]))
         rows.append((rank, int(r["vec_id"]), float(r["rel"]), float(r["msim"]),
                      float(r["score"])))
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "sel_rank int, vec_id bigint, rel double, msim double, score double"
     )
 
@@ -1031,7 +1033,8 @@ def q253_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least("d", dist_to(centers[-1][3])).alias("d"),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, vid, d) for r, vid, d, _ in centers],
         "rank int, vec_id long, sep_dist long",
     ).orderBy("rank")

@@ -348,11 +348,11 @@ def test_global_window_guard_detects_fact_grain_windows(spark):
     )
     assert unguarded_global_windows(_physical(barricaded)) >= 1
 
-    # ...while a genuinely driver-literal spine (createDataFrame via
-    # pandas -> LocalTableScan) under a global window stays guarded
-    import pandas as pd
+    # ...while a genuinely driver-literal spine (local_frame ->
+    # LocalTableScan) under a global window stays guarded
+    from batchprocessingetl_spark.sources.readers import local_frame
 
-    spine = spark.createDataFrame(pd.DataFrame({"b": list("0123456789")}))
+    spine = local_frame(spark, [(b,) for b in "0123456789"], "b string")
     spined = spine.withColumn("rk", F.row_number().over(Window.orderBy("b")))
     splan = _physical(spined)
     assert count_global_windows(splan) >= 1
@@ -510,3 +510,91 @@ def test_nanos_events_file_fails_at_scan(spark, tmp_path):
     pq.write_table(events, str(tmp_path / "events.parquet"))
     with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
         load_table(spark, str(tmp_path), "events").select(F.unix_micros("ts")).collect()
+
+
+@pytest.fixture(params=["true", "false"], ids=["arrow_on", "arrow_off"])
+def arrow_conf(spark, request):
+    """Run a test with ``spark.sql.execution.arrow.pyspark.enabled`` on
+    and off, restoring the session's setting afterwards."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, request.param)
+    yield request.param
+    spark.conf.set(key, before)
+
+
+_LOCAL_DDL = "qid int, score double, label string, terms array<string>"
+
+
+def test_local_frame_is_a_local_relation_with_the_declared_schema(spark, arrow_conf):
+    from pyspark.sql.types import StructType
+
+    from batchprocessingetl_spark.sources.readers import local_frame
+
+    rows = [
+        (1, 0.5, "a", ["x", "y"]),
+        (2, None, None, None),
+        (None, 2.0, "c", []),
+        (4, 1e18, "d", ["z", None]),
+    ]
+    for data in (rows, []):
+        df = local_frame(spark, data, _LOCAL_DDL)
+        assert df._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+        assert df.schema == StructType.fromDDL(_LOCAL_DDL)
+        assert [tuple(r) for r in df.collect()] == data
+
+
+def test_local_frame_rejects_a_value_its_column_cannot_hold(spark, arrow_conf):
+    """An out-of-range ``int`` raises, as it does on the list path."""
+    from batchprocessingetl_spark.sources.readers import local_frame
+
+    bad = [(2**31, 0.0, "a", [])]
+    with pytest.raises(ValueError):
+        spark.createDataFrame(bad, _LOCAL_DDL)
+    with pytest.raises(ValueError):
+        local_frame(spark, bad, _LOCAL_DDL)
+
+
+def test_create_dataframe_appears_only_inside_local_frame():
+    """Every driver-built frame in the package goes through
+    ``sources/readers.py::local_frame``, so none plans as a PythonRDD
+    scan."""
+    import inspect
+    from pathlib import Path
+
+    import batchprocessingetl_spark
+    from batchprocessingetl_spark.sources import readers
+
+    root = Path(batchprocessingetl_spark.__file__).parent
+    body, start = inspect.getsourcelines(readers.local_frame)
+    helper = {("sources/readers.py", n) for n in range(start, start + len(body))}
+    hits = {
+        (path.relative_to(root).as_posix(), n)
+        for path in root.rglob("*.py")
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "createDataFrame(" in line
+    }
+    assert hits and hits <= helper, sorted(hits - helper)
+
+
+def test_q147_and_q275_plan_no_python_rdd_scan(spark):
+    from batchprocessingetl_spark.workload.textops import (
+        q147_hybrid_retrieval_rrf,
+        q275_setcover_selection,
+    )
+
+    for query in (q147_hybrid_retrieval_rrf, q275_setcover_selection):
+        assert "LogicalRDD" not in _optimized(query(spark, SF_SMOKE)), query.__name__
+
+
+@pytest.mark.parametrize("arrow_conf", ["false"], indirect=True)
+def test_q256_spine_is_a_local_table_scan_with_arrow_off(spark, arrow_conf):
+    """q256's 16-row bucket spine is driver-literal in a vanilla
+    session too, so the global-window audit counts it as bounded."""
+    from batchprocessingetl_spark.workload.relational import (
+        q256_consistent_hash_rebalance,
+    )
+
+    plan = _physical(q256_consistent_hash_rebalance(spark, SF_SMOKE))
+    assert "LocalTableScan" in plan
+    assert "Scan ExistingRDD" not in plan

@@ -71,8 +71,8 @@ def _window_is_global(line: str) -> bool:
 # / barrier of ANY frame (including a fact-grain one) prints the same
 # node as createDataFrame(list), and the two are indistinguishable in
 # both the physical and logical plan strings (round-9 ADVICE). Driver-
-# literal spines must be built via createDataFrame(pandas_df) (prints
-# LocalTableScan) or spark.range to count as bounded-by-construction.
+# literal spines must be built via sources/readers.py::local_frame
+# (prints LocalTableScan) or spark.range to count as bounded-by-construction.
 _GUARD = re.compile(
     r"\b(?:(?:Hash|Sort|ObjectHash)Aggregate|TakeOrderedAndProject"
     r"|GlobalLimit|CollectLimit|LocalTableScan"
@@ -186,8 +186,8 @@ def unguarded_global_windows(plan: str) -> int:
     construction. `Scan ExistingRDD` does NOT count: localCheckpoint /
     barrier of a fact-grain frame prints the same node as
     createDataFrame(list) and the two are indistinguishable (round-9
-    ADVICE) — driver spines must use createDataFrame(pandas) or
-    spark.range instead. An aggregate on a
+    ADVICE) — driver spines must use sources/readers.py::local_frame
+    or spark.range instead. An aggregate on a
     join's BUILD side does not count — every streamed row survives
     the probe, so the build side bounds nothing (round-8 ADVICE
     false negative); a join printing NO build marker requires BOTH

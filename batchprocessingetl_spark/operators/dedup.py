@@ -32,11 +32,6 @@ from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.operators.text import tokens
 
-# minhash_dedup_pairs materializes its shingle frame only above this
-# input-size estimate (see the gate rationale there).
-SHINGLE_BARRIER_MIN_BYTES = 1 << 30
-
-
 def shingles_of_tokens(toks: Column, n: int = 3, hashed: bool = False) -> Column:
     """Distinct word n-gram shingles from a token-array column.
 
@@ -506,36 +501,19 @@ def minhash_dedup_pairs(
       hash mapping preserves. Jaccard values are unchanged unless two
       DISTINCT shingles within one candidate pair's union collide
       under xxhash64 (p ~ s^2/2^64 per pair — negligible; the oracle
-      pins q37/q124 green at every tested SF). Hashing shrinks both
-      the lazy plan's verify-join shuffles and the barriered frame
-      ~3-5x, and turns verify intersections into long comparisons.
-    - SIZE-GATED shingle barrier: the signature-frame barrier (id +
-      n_hashes longs — cheap, removes the double min-aggregate) is
-      unconditional; the shingle-frame barrier only fires above an
-      input-size threshold (SHINGLE_BARRIER_MIN_BYTES, 1 GiB), where
-      re-tokenizing the corpus twice more for the verify sides
-      outweighs one materialization. Below it the shingle frame stays
-      lazy (3 tokenize passes, no eager job — measured 1.65 -> 1.30 s
-      at sf0.1). At 100 TB the gate fires and the materialized bytes
-      are a fraction of what the r13 plan shuffled four times;
-      executor MEMORY_AND_DISK spills gracefully
-      (operators/iteration.py)."""
-    from batchprocessingetl_spark.operators.iteration import (
-        barrier,
-        input_size_estimate,
-    )
+      pins q37/q124 green at every tested SF). Hashing shrinks the
+      verify-join shuffles ~3-5x and turns verify intersections into
+      long comparisons.
+    - LAZY shingle frame: only the signature frame (id + n_hashes
+      longs — cheap, removes the double min-aggregate) is barriered.
+      The shingle frame is recomputed for the two verify-join sides
+      (3 tokenize passes, no eager job): materializing it is a fixed
+      eager job that lost at sf0.1 (q37 1.65 -> 1.30 s without it),
+      and the size gate that once brought it back above 1 GiB was
+      never reached (docs/BENCH_NOTES.md)."""
+    from batchprocessingetl_spark.operators.iteration import barrier
 
     sh = shingle_frame(df, id_col, text_col, n, hashed=True)
-    # Size-gated shingle barrier (VERDICT r14 #1): materializing the
-    # shingle frame costs a fixed eager job that LOSES at bench scale
-    # (driver r14: q37 1.124 -> 1.455 s; removing it measured 1.65 ->
-    # 1.30 s back-to-back in r15) but WINS once the corpus is large
-    # enough that re-tokenizing it for the two verify-join sides
-    # dominates the materialization. Gate on the optimizer's input
-    # size estimate (driver-side, no job). Results are gate-independent:
-    # both branches compute the same hashed-shingle frame.
-    if input_size_estimate(df) > SHINGLE_BARRIER_MIN_BYTES:
-        sh = barrier(sh)
     sigs = barrier(
         minhash_signatures(sh, "id", None, n_hashes, n, pre_shingled="sh")
     )

@@ -23,21 +23,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def input_size_estimate(df: DataFrame) -> int:
-    """The optimizer's size-in-bytes estimate for ``df``'s plan —
-    driver-side only, runs no job. Used to GATE barriers on input
-    size (r15): eager materialization loses at bench scale and wins at
-    cluster scale, and the estimate is how an operator picks the right
-    branch without a probe job. Returns a huge value when the estimate
-    is unavailable so gated callers default to the scale-safe
-    (barriered) branch."""
-    try:
-        # py4j maps the scala BigInt to a Python int directly
-        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 - internal API probe; any failure means "unknown"
-        return 1 << 62
-
-
 def barrier(df: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """Materialize ``df`` and truncate its lineage. With
     ``checkpoint_dir`` None, an executor-local checkpoint; otherwise a

@@ -126,7 +126,7 @@ def _feature_vector(payload: bytes) -> list[float]:
     ]
 
 
-def extract_features(media: DataFrame, batch_hint: int = 256) -> DataFrame:
+def extract_features(media: DataFrame) -> DataFrame:
     """Feature extraction over Arrow batches with ``mapInPandas``.
 
     Per batch: payload bytes -> (n_bytes, md5 content hash, feature

@@ -1,10 +1,12 @@
 """Embedding similarity search (approximate-nearest-neighbor surface).
 
-Brute-force cosine top-k as the exactness baseline, plus an LSH
-(random-hyperplane-style) bucketed variant as the scale path. All
-vector math uses built-in higher-order array functions
-(``zip_with``/``aggregate`` — JVM-side, codegen), so the hot path never
-crosses into Python.
+Brute-force cosine top-k as the exactness baseline, plus LSH, IVF and
+int8 candidate paths for scale. Two execution styles: the single-query
+operators and ``semantic_dedup`` use built-in higher-order array
+functions (``zip_with``/``aggregate`` — JVM-side, codegen) and never
+cross into Python; the blocked operators (``similar_pairs_exact``,
+``knn_join``, ``hamming_knn_join``) run one numpy kernel per row-block
+(BLAS GEMM or byte-table popcount) in a cogroup ``applyInPandas``.
 
 Scale notes (100 TB / billions of vectors):
 - brute force is one broadcast of the query batch + a single scan:
@@ -57,18 +59,15 @@ def cosine_topk(
     final top-k is a TakeOrdered (no full sort) on (cosine DESC, id).
     """
     _require_single_query(query_df, "cosine_topk")
+    return _rank_by_cosine(df.crossJoin(F.broadcast(query_df)), k, vec_col, id_col)
+
+
+def _rank_by_cosine(cands: DataFrame, k: int, vec_col: str, id_col: str) -> DataFrame:
+    """Exact top-k tail of the single-query operators: ``cands`` rows
+    carry the query as ``qvec``; cosine rounds to 6 dp before ranking."""
     e = as_double(F.col(vec_col))
-    q = F.col("qvec")
-    return (
-        df.crossJoin(F.broadcast(query_df))
-        .select(
-            id_col,
-            "label",
-            F.round(cosine(e, q), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    cos = F.round(cosine(e, F.col("qvec")), 6).alias("cosine")
+    return cands.select(id_col, "label", cos).orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
 
 
 def similar_pairs_exact(
@@ -208,6 +207,29 @@ def ivf_assign(df: DataFrame, model, vec_col: str = "embedding") -> DataFrame:
     )
 
 
+def _nearest_cells(query_df: DataFrame, model, nprobe: int) -> DataFrame:
+    """The ``(qvec, __cell)`` probe frame: the query's ``nprobe``
+    nearest cells by centroid cosine, ties to the lower cell id. Cell
+    id = centroid index, matching ``model.transform``'s predictions."""
+    from pyspark.sql.window import Window
+
+    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
+    cents = local_frame(query_df.sparkSession, centers, "__cell int, centroid array<double>")
+    return (
+        query_df.crossJoin(F.broadcast(cents))
+        .withColumn(
+            "__rnk",
+            F.row_number().over(
+                Window.orderBy(
+                    F.desc(cosine(F.col("qvec"), F.col("centroid"))), F.asc("__cell")
+                )
+            ),
+        )
+        .filter(F.col("__rnk") <= nprobe)
+        .select("qvec", "__cell")
+    )
+
+
 def ivf_topk(
     df: DataFrame,
     query_df: DataFrame,
@@ -229,35 +251,10 @@ def ivf_topk(
     candidate scan shrinks ~k/nprobe-fold; recall is tuned by nprobe.
     At scale, persist ``ivf_assign``'s output partitioned by __cell so
     probes prune partitions instead of re-assigning per query."""
-    from pyspark.sql.window import Window
-
     _require_single_query(query_df, "ivf_topk")
-    spark = df.sparkSession
-    # cell id = clusterCenters() index, matching model.transform's
-    # prediction ids
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = local_frame(spark, centers, "__cell int, centroid array<double>")
-    probes = (
-        query_df.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "__rnk",
-            F.row_number().over(
-                Window.orderBy(
-                    F.desc(cosine(F.col("qvec"), F.col("centroid"))), F.asc("__cell")
-                )
-            ),
-        )
-        .filter(F.col("__rnk") <= nprobe)
-        .select("qvec", "__cell")
-    )
-    e = as_double(F.col(vec_col))
+    probes = _nearest_cells(query_df, model, nprobe)
     assigned = ivf_assign(df, model, vec_col)
-    return (
-        assigned.join(F.broadcast(probes), "__cell")
-        .select(id_col, "label", F.round(cosine(e, F.col("qvec")), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _rank_by_cosine(assigned.join(F.broadcast(probes), "__cell"), k, vec_col, id_col)
 
 
 def ivf_topk_int8(
@@ -289,44 +286,14 @@ def ivf_topk_int8(
     can't beat its scan fraction) this reaches ~1.0 recall at ~0.13
     float-equivalent scan; measured curves in docs/SCALE.md, floor
     pinned in tests/test_vectors.py."""
-    from pyspark.sql.window import Window
-
     _require_single_query(query_df, "ivf_topk_int8")
-    spark = df.sparkSession
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = local_frame(spark, centers, "__cell int, centroid array<double>")
-    probes = (
-        query_df.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "__rnk",
-            F.row_number().over(
-                Window.orderBy(
-                    F.desc(cosine(F.col("qvec"), F.col("centroid"))), F.asc("__cell")
-                )
-            ),
-        )
-        .filter(F.col("__rnk") <= nprobe)
-        .select("qvec", "__cell")
-    )
+    probes = _nearest_cells(query_df, model, nprobe)
     survivors = ivf_assign(df.select(id_col, vec_col), model, vec_col).join(
         F.broadcast(probes.select("__cell")), "__cell"
     )
-    quant = quantize_int8(survivors, vec_col)
-    q8 = quantize_int8(query_df.select(F.col("qvec").alias("v")), "v").select(
-        F.col("qvec").alias("q8")
-    )
-    a8 = F.transform(F.col("qvec"), lambda v: v.cast("double"))
-    b8 = F.transform(F.col("q8"), lambda v: v.cast("double"))
-    cands = (
-        quant.crossJoin(F.broadcast(q8))
-        .select(
-            id_col, (dot(a8, b8) / (l2_norm(a8) * l2_norm(b8))).alias("approx_cos")
-        )
-        .orderBy(F.desc("approx_cos"), F.asc(id_col))
-        .limit(rerank * k)
-    )
-    return cosine_topk(
-        df.join(cands.select(id_col), id_col), query_df, k, vec_col, id_col
+    short = _int8_shortlist(survivors, query_df, rerank * k, vec_col, id_col)
+    return _rank_by_cosine(
+        df.join(short, id_col).crossJoin(F.broadcast(query_df)), k, vec_col, id_col
     )
 
 
@@ -348,25 +315,8 @@ def probe_cells(query_df: DataFrame, model, nprobe: int) -> list[int]:
     ties to the lower cell id). Returns plain ints — an O(nprobe)
     parameter materialization (like q52's hyperplane rows), so the
     probe can reach the scan as a LITERAL partition filter."""
-    from pyspark.sql.window import Window
-
     _require_single_query(query_df, "probe_cells")
-    spark = query_df.sparkSession
-    centers = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    cents = local_frame(spark, centers, "__cell int, centroid array<double>")
-    ranked = (
-        query_df.crossJoin(F.broadcast(cents))
-        .withColumn(
-            "__rnk",
-            F.row_number().over(
-                Window.orderBy(
-                    F.desc(cosine(F.col("qvec"), F.col("centroid"))), F.asc("__cell")
-                )
-            ),
-        )
-        .filter(F.col("__rnk") <= nprobe)
-        .select("__cell")
-    )
+    ranked = _nearest_cells(query_df, model, nprobe).select("__cell")
     return [int(r["__cell"]) for r in ranked.collect()]
 
 
@@ -388,14 +338,8 @@ def probe_ivf_index(
     The scan then computes exact cosines over the surviving ~N*nprobe/k
     vectors and takes top-k (TakeOrdered, no full sort)."""
     cells = probe_cells(query_df, model, nprobe)
-    e = as_double(F.col(vec_col))
     idx = spark.read.parquet(path).filter(F.col("__cell").isin(cells))
-    return (
-        idx.crossJoin(F.broadcast(query_df))
-        .select(id_col, "label", F.round(cosine(e, F.col("qvec")), 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    return _rank_by_cosine(idx.crossJoin(F.broadcast(query_df)), k, vec_col, id_col)
 
 
 def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
@@ -443,19 +387,8 @@ def cosine_topk_lsh(
     q_bucketed = query_df.select(
         "qvec", F.explode(probes).alias("__qbucket")
     )
-    return (
-        bucketed.join(
-            F.broadcast(q_bucketed),
-            bucketed["__bucket"] == q_bucketed["__qbucket"],
-        )
-        .select(
-            id_col,
-            "label",
-            F.round(cosine(e, F.col("qvec")), 6).alias("cosine"),
-        )
-        .orderBy(F.desc("cosine"), F.asc(id_col))
-        .limit(k)
-    )
+    cands = bucketed.join(F.broadcast(q_bucketed), bucketed["__bucket"] == q_bucketed["__qbucket"])
+    return _rank_by_cosine(cands, k, vec_col, id_col)
 
 
 def quantize_int8(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
@@ -494,19 +427,28 @@ def cosine_topk_int8(
     from the full-precision table by an id equi-join (at scale: a
     targeted point-lookup join, not a second full scan). Returns the
     same schema as :func:`cosine_topk`."""
-    quant = quantize_int8(df.select(id_col, vec_col), vec_col)
-    q_quant = quantize_int8(
-        query_df.select(F.col("qvec").alias("v")), "v"
-    ).select(F.col("qvec").alias("q8"))
+    short = _int8_shortlist(df.select(id_col, vec_col), query_df, rerank * k, vec_col, id_col)
+    return cosine_topk(df.join(short, id_col), query_df, k, vec_col, id_col)
+
+
+def _int8_shortlist(
+    df: DataFrame, query_df: DataFrame, n: int, vec_col: str, id_col: str
+) -> DataFrame:
+    """Ids of the ``n`` rows of ``df`` nearest the query by cosine over
+    the int8 codes (the per-vector scales cancel), ties by id ASC."""
+    quant = quantize_int8(df, vec_col)
+    q8 = quantize_int8(query_df.select(F.col("qvec").alias("v")), "v").select(
+        F.col("qvec").alias("q8")
+    )
     a8 = F.transform(F.col("qvec"), lambda v: v.cast("double"))
     b8 = F.transform(F.col("q8"), lambda v: v.cast("double"))
-    cands = (
-        quant.crossJoin(F.broadcast(q_quant))
+    return (
+        quant.crossJoin(F.broadcast(q8))
         .select(id_col, (dot(a8, b8) / (l2_norm(a8) * l2_norm(b8))).alias("approx_cos"))
         .orderBy(F.desc("approx_cos"), F.asc(id_col))
-        .limit(rerank * k)
+        .limit(n)
+        .select(id_col)
     )
-    return cosine_topk(df.join(cands.select(id_col), id_col), query_df, k, vec_col, id_col)
 
 
 def knn_join(
@@ -551,51 +493,84 @@ def knn_join(
     ROUND(...,6)-then-ROW_NUMBER SQL oracle.
     """
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.window import Window
-
-    B = int(n_blocks)
-    pay = list(payload_cols)
-    src = corpus.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *pay
-    )
-    left = src.withColumn("__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(B)).cast("int"))
-    right = (
-        queries.select(F.col(qid_col).alias("qid"), as_double(F.col(qvec_col)).alias("qv"))
-        .withColumn("__blk", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-    )
-    pay_schema = "".join(
-        f", {f.name} {f.dataType.simpleString()}" for f in src.select(*pay).schema.fields
-    )
-
-    def block_topk(key, cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {
-            "qid": pd.Series(dtype="int64"),
-            "id": pd.Series(dtype="int64"),
-            "cosine": pd.Series(dtype="float64"),
-        }
-        for p in pay:
-            cols[p] = pd.Series(dtype=cpdf[p].dtype if len(cpdf) else "object")
-        empty = pd.DataFrame(cols)
-        if cpdf.empty or qpdf.empty:
-            return empty
+    def gemm_cosines(cpdf, qpdf):
         a = np.stack(cpdf["v"].to_numpy()).astype(np.float64)
         an = np.linalg.norm(a, axis=1, keepdims=True)
         a /= np.where(an == 0.0, 1.0, an)
         q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
         qn = np.linalg.norm(q, axis=1, keepdims=True)
         q /= np.where(qn == 0.0, 1.0, qn)
-        sims = np.round(a @ q.T, 6)  # (n_block, Q); round BEFORE ranking
+        return np.round(a @ q.T, 6)  # (n_block, Q); round BEFORE ranking
+
+    top = _blocked_topk(
+        corpus.select(
+            F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"), *payload_cols
+        ),
+        queries.select(F.col(qid_col).alias("qid"), as_double(F.col(qvec_col)).alias("qv")),
+        k,
+        n_blocks,
+        gemm_cosines,
+        score_col="cosine",
+        score_type="double",
+        descending=True,
+        payload=payload_cols,
+    )
+    return top.select(
+        "qid", F.col("id").alias(id_col), *payload_cols, "cosine", F.col("rank").cast("int")
+    )
+
+
+def _blocked_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    n_blocks: int,
+    scores,
+    score_col: str,
+    score_type: str,
+    descending: bool,
+    payload: tuple[str, ...] = (),
+) -> DataFrame:
+    """Two-phase top-k of :func:`knn_join` / :func:`hamming_knn_join`:
+    ``scores(corpus_pdf, query_pdf)`` gives each block's (n, Q) matrix,
+    each block keeps its local top-k per qid by (score, id ASC), and one
+    window over the <= B*Q*k candidates keeps ``rank <= k``."""
+    import numpy as np
+    import pandas as pd
+
+    from pyspark.sql.window import Window
+
+    B = int(n_blocks)
+    left = corpus.withColumn("__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(B)).cast("int"))
+    right = queries.withColumn("__blk", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
+    pay_schema = "".join(
+        f", {f.name} {f.dataType.simpleString()}" for f in corpus.select(*payload).schema.fields
+    )
+    score_dtype = {"double": "float64", "int": "int32"}[score_type]
+
+    def block_topk(key, cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
+        cols = {
+            "qid": pd.Series(dtype="int64"),
+            "id": pd.Series(dtype="int64"),
+            score_col: pd.Series(dtype=score_dtype),
+        }
+        for p in payload:
+            cols[p] = pd.Series(dtype=cpdf[p].dtype if len(cpdf) else "object")
+        empty = pd.DataFrame(cols)
+        if cpdf.empty or qpdf.empty:
+            return empty
+        s = scores(cpdf, qpdf)
+        keys = -s if descending else s
         ids = cpdf["id"].to_numpy()
         qids = qpdf["qid"].to_numpy()
         kk = min(k, len(ids))
         out = []
-        for j in range(sims.shape[1]):
-            # order by (-cosine, id): lexsort keys are last-key-primary
-            order = np.lexsort((ids, -sims[:, j]))[:kk]
-            frame = {"qid": qids[j], "id": ids[order], "cosine": sims[order, j]}
-            for p in pay:
+        for j in range(s.shape[1]):
+            # order by (score, id): lexsort keys are last-key-primary
+            order = np.lexsort((ids, keys[:, j]))[:kk]
+            frame = {"qid": qids[j], "id": ids[order], score_col: s[order, j]}
+            for p in payload:
                 frame[p] = cpdf[p].to_numpy()[order]
             out.append(pd.DataFrame(frame))
         return pd.concat(out, ignore_index=True) if out else empty
@@ -603,14 +578,13 @@ def knn_join(
     cands = (
         left.groupBy("__blk")
         .cogroup(right.groupBy("__blk"))
-        .applyInPandas(block_topk, schema=f"qid long, id long, cosine double{pay_schema}")
+        .applyInPandas(
+            block_topk, schema=f"qid long, id long, {score_col} {score_type}{pay_schema}"
+        )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("id").alias(id_col), *pay, "cosine", F.col("rank").cast("int"))
-    )
+    order = F.desc(score_col) if descending else F.asc(score_col)
+    w = Window.partitionBy("qid").orderBy(order, F.asc("id"))
+    return cands.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def semantic_dedup(
@@ -793,62 +767,23 @@ def hamming_knn_join(
     phases break ties by id ASC, so the result is pinned by a plain
     SQL oracle computing the same distance positionally."""
     import numpy as np
-    import pandas as pd
 
-    from pyspark.sql.window import Window
-
-    B = int(n_blocks)
     pop = np.array([bin(i).count("1") for i in range(256)], dtype=np.int32)
-    left = corpus_sigs.select(
-        F.col("id"), F.col("w0"), F.col("w1")
-    ).withColumn("__blk", F.pmod(F.xxhash64(F.col("id")), F.lit(B)).cast("int"))
-    right = query_sigs.select(
-        F.col("qid"), F.col("qw0"), F.col("qw1")
-    ).withColumn("__blk", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
 
-    def block_topk(key, cpdf: pd.DataFrame, qpdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "qid": pd.Series(dtype="int64"),
-                "id": pd.Series(dtype="int64"),
-                "hamming": pd.Series(dtype="int32"),
-            }
-        )
-        if cpdf.empty or qpdf.empty:
-            return empty
-        ids = cpdf["id"].to_numpy()
+    def popcounts(cpdf, qpdf):
         w = cpdf[["w0", "w1"]].to_numpy(dtype="int64")
         qw = qpdf[["qw0", "qw1"]].to_numpy(dtype="int64")
-        qids = qpdf["qid"].to_numpy()
-        x = np.ascontiguousarray(
-            np.bitwise_xor(w[:, None, :], qw[None, :, :])
-        )  # (n, Q, 2)
-        ham = pop[x.view(np.uint8)].reshape(len(ids), len(qids), 16).sum(
-            axis=2, dtype=np.int32
-        )
-        kk = min(k, len(ids))
-        out = []
-        for j in range(ham.shape[1]):
-            order = np.lexsort((ids, ham[:, j]))[:kk]
-            out.append(
-                pd.DataFrame(
-                    {
-                        "qid": qids[j],
-                        "id": ids[order],
-                        "hamming": ham[order, j],
-                    }
-                )
-            )
-        return pd.concat(out, ignore_index=True) if out else empty
+        x = np.ascontiguousarray(np.bitwise_xor(w[:, None, :], qw[None, :, :]))  # (n, Q, 2)
+        return pop[x.view(np.uint8)].reshape(len(w), len(qw), 16).sum(axis=2, dtype=np.int32)
 
-    cands = (
-        left.groupBy("__blk")
-        .cogroup(right.groupBy("__blk"))
-        .applyInPandas(block_topk, schema="qid long, id long, hamming int")
+    top = _blocked_topk(
+        corpus_sigs.select(F.col("id"), F.col("w0"), F.col("w1")),
+        query_sigs.select(F.col("qid"), F.col("qw0"), F.col("qw1")),
+        k,
+        n_blocks,
+        popcounts,
+        score_col="hamming",
+        score_type="int",
+        descending=False,
     )
-    w = Window.partitionBy("qid").orderBy(F.asc("hamming"), F.asc("id"))
-    return (
-        cands.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "id", "hamming", F.col("rank").cast("int"))
-    )
+    return top.select("qid", "id", "hamming", F.col("rank").cast("int"))

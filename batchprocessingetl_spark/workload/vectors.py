@@ -67,13 +67,7 @@ def q52_knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     poor, which is a data property, not an operator property; the
     oracle checks the operator.)"""
     emb = load_table(spark, sf_dir, "embeddings")
-    planes_rows = (
-        emb.filter(F.col("vec_id").isin([1, 2, 3, 4]))
-        .orderBy("vec_id")
-        .select("embedding")
-        .collect()
-    )
-    planes = [[float(x) for x in r["embedding"]] for r in planes_rows]
+    planes = _plane_rows(spark, sf_dir)
     base = emb.filter(~F.col("vec_id").isin([QUERY_VEC_ID, 1, 2, 3, 4]))
     return S.cosine_topk_lsh(base, _query_df(spark, sf_dir), planes, TOP_K)
 
@@ -1269,27 +1263,39 @@ def q312_matryoshka_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "qid", "vec_id", "label", F.col("cosine").alias("coarse_cosine")
     )
+    return _exact_rerank(
+        cand, corpus, queries, MRL_K, ("qid", "vec_id", "label", "coarse_cosine")
+    )
+
+
+def _exact_rerank(
+    cand: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    cols: tuple[str, ...],
+    corpus_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Exact re-rank stage of the q312/q313 funnels: join the
+    (qid, vec_id) shortlist ``cand`` to the full corpus vectors (plus
+    ``corpus_cols``) and the broadcast query vectors, score round-6
+    cosine, and keep rank <= ``k`` per qid (cosine DESC, vec_id ASC).
+    Output: ``cols``, cosine, rank."""
+    from pyspark.sql.window import Window
+
     full = corpus.select(
-        F.col("vec_id").alias("__vid"), S.as_double(F.col("embedding")).alias("vv")
+        F.col("vec_id").alias("__vid"), *corpus_cols, S.as_double(F.col("embedding")).alias("vv")
     )
     qfull = queries.select(
         F.col("vec_id").alias("__qid"), S.as_double(F.col("embedding")).alias("qv")
     )
-    from pyspark.sql.window import Window
-
     w = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
     return (
         cand.join(full, cand["vec_id"] == full["__vid"])
         .join(F.broadcast(qfull), cand["qid"] == qfull["__qid"])
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            "coarse_cosine",
-            F.round(S.cosine(F.col("vv"), F.col("qv")), 6).alias("cosine"),
-        )
+        .select(*cols, F.round(S.cosine(F.col("vv"), F.col("qv")), 6).alias("cosine"))
         .withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= MRL_K)
+        .filter(F.col("rank") <= k)
         .orderBy("qid", "rank")
     )
 
@@ -1386,30 +1392,8 @@ def q313_binary_hamming_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig_q,
         BQ_CAND,
     ).select("qid", F.col("id").alias("vec_id"), "hamming")
-    full = corpus.select(
-        F.col("vec_id").alias("__vid"),
-        "label",
-        S.as_double(F.col("embedding")).alias("vv"),
-    )
-    qfull = queries.select(
-        F.col("vec_id").alias("__qid"), S.as_double(F.col("embedding")).alias("qv")
-    )
-    from pyspark.sql.window import Window
-
-    wr = Window.partitionBy("qid").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        cand.join(full, cand["vec_id"] == full["__vid"])
-        .join(F.broadcast(qfull), cand["qid"] == qfull["__qid"])
-        .select(
-            "qid",
-            "vec_id",
-            "label",
-            "hamming",
-            F.round(S.cosine(F.col("vv"), F.col("qv")), 6).alias("cosine"),
-        )
-        .withColumn("rank", F.row_number().over(wr).cast("int"))
-        .filter(F.col("rank") <= BQ_K)
-        .orderBy("qid", "rank")
+    return _exact_rerank(
+        cand, corpus, queries, BQ_K, ("qid", "vec_id", "label", "hamming"), ("label",)
     )
 
 

@@ -6,7 +6,6 @@ silently break the argument the speedup was shipped on.
 - BM25's tokenize-free stats pass: regexp_count(text, '\\S+') ==
   size(tokens(text)) on every boundary case.
 - Hashed shingles == xxhash64 of string shingles, elementwise.
-- The q37 shingle-barrier size gate changes the PLAN, never the rows.
 - The set-cover picks (q275, q281) match the oracle.
 """
 
@@ -85,27 +84,6 @@ def test_hashed_shingles_equal_xxhash_of_string_shingles(spark):
         .count()
     )
     assert bad == 0
-
-
-def test_minhash_barrier_gate_does_not_change_rows(spark, monkeypatch):
-    """SHINGLE_BARRIER_MIN_BYTES=0 forces the shingle barrier on; a
-    huge value forces it off. Same pairs either way."""
-    from batchprocessingetl_spark.operators import dedup
-
-    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-
-    def pairs():
-        return sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in dedup.minhash_dedup_pairs(docs, "doc_id", "text").collect()
-        )
-
-    monkeypatch.setattr(dedup, "SHINGLE_BARRIER_MIN_BYTES", 0)
-    forced_on = pairs()
-    monkeypatch.setattr(dedup, "SHINGLE_BARRIER_MIN_BYTES", 1 << 62)
-    forced_off = pairs()
-    assert forced_on == forced_off
-    assert len(forced_on) > 0
 
 
 def test_setcover_picks_match_oracle(spark):

@@ -10,6 +10,7 @@ completeness, and exhaustive-probe exactness.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from batchprocessingetl_spark.catalog import load_table
@@ -20,6 +21,7 @@ from batchprocessingetl_spark.operators.similarity import (
     learn_ivf_centroids,
     similar_pairs_exact,
 )
+from batchprocessingetl_spark.sources.readers import local_frame
 from batchprocessingetl_spark.workload.vectors import _query_df
 from tests.conftest import SF_SMOKE
 
@@ -29,7 +31,6 @@ def test_similar_pairs_is_lazy_no_driver_materialization(spark):
     # driver: an exploding upstream stage only fires if something forces
     # execution. (The r1 implementation ran df.count() + collect() at
     # call time — this pins the fix.)
-    import pytest
 
     def bomb(batches):
         raise RuntimeError("operator construction forced execution")
@@ -156,7 +157,7 @@ def test_knn_join_matches_per_query_bruteforce(spark):
         ], f"qid={qid} diverges from brute force"
 
 
-def test_knn_join_invariant_to_block_count(spark):
+def _cosine_knn_rows(spark, n_blocks):
     from batchprocessingetl_spark.operators.similarity import as_double, knn_join
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -164,13 +165,52 @@ def test_knn_join_invariant_to_block_count(spark):
         F.col("vec_id").alias("qid"), as_double(F.col("embedding")).alias("qvec")
     )
     corpus = emb.filter(F.col("vec_id") >= 3)
-    base = {(r["qid"], r["rank"], r["vec_id"], r["cosine"])
-            for r in knn_join(corpus, queries, k=5, n_blocks=1).collect()}
+    return {(r["qid"], r["rank"], r["vec_id"], r["cosine"])
+            for r in knn_join(corpus, queries, k=5, n_blocks=n_blocks).collect()}
+
+
+def _hamming_knn_rows(spark, n_blocks):
+    from batchprocessingetl_spark.operators.similarity import hamming_knn_join
+
+    # 60 ids share 6 word pairs, so each query's top-5 cuts through a
+    # run of equal distances that only the id ASC tie-break orders
+    corpus = [(i, i % 6, (i % 6) << 3) for i in range(60)]
+    queries = [(100, 0, 0), (101, 5, 40), (102, 3, 1)]
+    cdf = local_frame(spark, corpus, "id long, w0 long, w1 long")
+    qdf = local_frame(spark, queries, "qid long, qw0 long, qw1 long")
+    return {(r["qid"], r["rank"], r["id"], r["hamming"])
+            for r in hamming_knn_join(cdf, qdf, 5, n_blocks=n_blocks).collect()}
+
+
+@pytest.mark.parametrize("rows", [_cosine_knn_rows, _hamming_knn_rows], ids=["cosine", "hamming"])
+def test_knn_join_invariant_to_block_count(spark, rows):
+    base = rows(spark, 1)
     assert len(base) == 15
+    if rows is _hamming_knn_rows:
+        assert len({(qid, score) for qid, _, _, score in base}) < len(base), "no distance tie"
+        assert {(qid, rank, i) for qid, rank, i, _ in base if qid == 100} == {
+            (100, rank, i) for rank, i in enumerate((0, 6, 12, 18, 24), start=1)
+        }
     for nb in (4, 16):
-        got = {(r["qid"], r["rank"], r["vec_id"], r["cosine"])
-               for r in knn_join(corpus, queries, k=5, n_blocks=nb).collect()}
-        assert got == base, f"n_blocks={nb} changed the top-k"
+        assert rows(spark, nb) == base, f"n_blocks={nb} changed the top-k"
+
+
+def test_ivf_topk_int8_runs_the_single_query_guard_once(spark, monkeypatch):
+    from batchprocessingetl_spark.operators import similarity
+
+    calls = []
+    guard = similarity._require_single_query
+
+    def counted(query_df, op):
+        calls.append(op)
+        guard(query_df, op)
+
+    monkeypatch.setattr(similarity, "_require_single_query", counted)
+    base = load_table(spark, SF_SMOKE, "embeddings").filter(F.col("vec_id") != 0)
+    model = learn_ivf_centroids(base.limit(50), k=4, seed=7, max_iter=2)
+    out = similarity.ivf_topk_int8(base, _query_df(spark, SF_SMOKE), model, 5, nprobe=2)
+    assert calls == ["ivf_topk_int8"]
+    assert out.count() == 5
 
 
 def _greedy_semantic_dedup_ground_truth(rows, planes, threshold):
@@ -240,7 +280,6 @@ def test_single_query_operators_reject_query_batches(spark):
     against ONE query vector; a batch would silently mix neighbors
     across queries (ADVICE r3) — they must refuse it loudly and point
     at knn_join."""
-    import pytest
 
     from batchprocessingetl_spark.operators.similarity import (
         as_double,

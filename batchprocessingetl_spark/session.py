@@ -24,6 +24,24 @@ DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0)
 # written bytes dominate at scale.
 WORK_CODEC = "snappy"
 
+# Entries in Spark's codegen class cache
+# (spark.sql.codegen.cache.maxEntries). At Spark's default of 100 every
+# warm perfbench pass recompiled its classes in janino: 184-211 on
+# `corpus` and 36-88 on `warehouse` (seeds 2 and 7). The classes a
+# process compiles, counted with CodegenMetrics under a 10,000-entry
+# cache: `corpus` 219 in the warm-up plus about 25 in its first passes
+# (their count() plans differ from the collected ones), `warehouse`
+# 127, and bench.py's 25-query headline at sf0.1 415 (q147 75). The
+# cache is Guava's, which evicts within each of 4 segments, so it needs
+# headroom above those sets: at 250, `corpus` passes after the first
+# still compiled up to 26 classes (at most 6 from 300 up), and at 300
+# q147's last timed bench.py run recompiled 16. From 500 on, warm
+# passes and runs compile only the classes AQE's runtime re-plans
+# generate anew (0-24 per pass, all q147, and 2 per q50 run; the same
+# at 10,000). A cache holds only classes that were compiled, so a
+# smaller working set costs nothing extra.
+CODEGEN_CACHE_ENTRIES = 500
+
 
 def get_spark(
     app_name: str = "batchprocessingetl-spark",
@@ -83,6 +101,19 @@ def get_spark(
         # round's snapshot once its RDD is unreferenced. Must be set
         # BEFORE context start — the cleaner captures it at startup.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # static: the codegen cache is built once per JVM
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # pyspark wraps every pyspark.sql.functions call to record its
+        # Python call site: a failed `import ipykernel` when IPython is
+        # installed, a conf read over py4j, and a set and clear of the
+        # JVM's PySparkCurrentOrigin. Off, five warm q147 builds at
+        # sf0.01 under cProfile made 4,610 py4j calls instead of 9,960
+        # and took 2.4-2.5 s instead of 4.2-4.5 s. Given up: the Python
+        # file:line context in runtime error messages; the errors raise
+        # with the same error class. pyspark reads the flag once per
+        # process, at the first functions call, so it must be set
+        # before that call.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # Extra driver jars (e.g. a JDBC driver such as PostgreSQL's) —
     # comma-separated paths; must be present before the JVM starts, so

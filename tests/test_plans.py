@@ -250,6 +250,25 @@ def test_bench_set_is_subset_of_plan_audit(spark, capsys):
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe
 
 
+def test_plan_audit_prints_a_long_plan_whole(spark, capsys, monkeypatch):
+    """A before/after diff with the audit compares whole plans: q147's
+    executed plan is several times longer than the 4,000 characters
+    the audit once cut every plan at."""
+    from tools import plan_audit
+
+    seen = []
+
+    def summarize(plan):
+        seen.append(plan)
+        return []
+
+    monkeypatch.setattr(plan_audit, "summarize", summarize)
+    plan_audit.audit(spark, SF_SMOKE, ("q147_hybrid_retrieval_rrf",))
+    (plan,) = seen
+    assert len(plan) > 4000
+    assert f"```\n{plan.rstrip()}\n```" in capsys.readouterr().out
+
+
 def test_plans_doc_covers_full_registry():
     """VERDICT r12 #2: the committed docs/PLANS.md must carry a `## q...`
     section for EVERY declared query. The old guard only pinned the

@@ -284,7 +284,7 @@ def audit(spark, sf_dir: str, names) -> None:
             for f in summarize(plan):
                 print(f"- {f}")
             print("\n```")
-            print(plan[:4000].rstrip())
+            print(plan.rstrip())
             print("```")
     finally:
         for k, v in saved.items():

@@ -1,4 +1,5 @@
-"""Optional-dependency shims (currently: a protobuf runtime alias).
+"""Interpreter shims: a protobuf runtime alias, and lazy zip-cache
+invalidation for Python workers.
 
 PySpark 4's ``transformWithState`` Python state server speaks
 protobuf (``pyspark/sql/streaming/proto/StateMessage_pb2.py``), but
@@ -19,12 +20,17 @@ plain proto3 (no editions/extensions), and the parity test
 which is the check that actually matters here. In any environment
 with a real ``google.protobuf`` install the shim is a no-op.
 
+pyspark's worker calls ``importlib.invalidate_caches()`` once per
+task; before CPython 3.12 that re-reads the central directory of every
+``zipimporter`` in the worker (pyspark.zip, py4j, the spark-core jar:
+0.2–0.3 s a task on a 4-core host). :func:`lazy_zip_invalidation`
+makes that re-read happen only when the archive on disk changed.
+
 Worker processes: Spark's Python workers are separate interpreters,
-so the driver-side alias does not reach them. ``worker_pythonpath``
-returns a directory whose ``sitecustomize.py`` re-installs the shim
-at interpreter startup; the session factory prepends it to
-``PYTHONPATH`` (before the JVM starts) when — and only when — the
-shim is what made protobuf importable.
+so nothing done in the driver reaches them. ``worker_pythonpath``
+returns a directory whose ``sitecustomize.py`` applies both shims at
+interpreter startup; the session factory always prepends it to
+``PYTHONPATH`` before the JVM starts.
 """
 
 from __future__ import annotations
@@ -195,14 +201,47 @@ def ensure_protobuf() -> bool:
     return False
 
 
-def protobuf_is_shimmed() -> bool:
-    """True when google.protobuf resolves through the vendored alias
-    (workers will need the sitecustomize hook to match the driver)."""
-    mod = sys.modules.get("google.protobuf")
-    return mod is not None and not mod.__name__.startswith("google.")
+def lazy_zip_invalidation() -> bool:
+    """Replace ``zipimport.zipimporter.invalidate_caches`` (CPython <
+    3.12 only; True when installed) with one that re-reads an archive
+    only when it changed on disk.
+
+    The stock method re-reads the whole central directory of the
+    importer's archive on every call (CPython gh-103200, fixed in
+    3.12). The replacement stamps each importer with its archive's
+    ``(st_mtime_ns, st_size)`` when it reads the archive, and later
+    calls return at once while the stamp is unchanged; a changed stamp
+    or a failed ``os.stat`` re-reads as before. The stamp is kept per
+    importer, not per archive path: several importers share an archive
+    and each holds its own ``_files``, so each must re-read for itself.
+    An importer's first call always reads, since its ``_files`` may
+    predate the stamp. A rewrite that keeps both the size and the
+    mtime (within the filesystem's timestamp resolution) goes unseen.
+    Idempotent.
+    """
+    if sys.version_info >= (3, 12):
+        return False
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+    if reread.__module__ == __name__:
+        return True
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            reread(self)
+            self._archive_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True
 
 
 def worker_pythonpath() -> str:
     """Directory to prepend to PYTHONPATH so spawned Python workers
-    (pyspark.daemon) run the same shim via sitecustomize."""
+    (pyspark.daemon) run both shims via sitecustomize."""
     return os.path.join(os.path.dirname(os.path.abspath(__file__)), "_worker_shim")

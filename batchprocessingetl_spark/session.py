@@ -60,20 +60,22 @@ def get_spark(
       would size to ~2-3x total cores and rely on AQE coalescing.
     """
     n = cpus if cpus is not None else (DEFAULT_CPUS or os.cpu_count() or 4)
-    # transformWithState needs google.protobuf in BOTH the driver and
-    # the spawned Python workers. When the driver only has it via the
-    # vendored-runtime alias (compat.py), ship the sitecustomize hook
-    # to workers over PYTHONPATH — must happen before the JVM starts,
-    # since local-mode workers inherit the JVM's environment.
+    # Spark's Python workers are separate interpreters; the
+    # sitecustomize hook (compat.worker_pythonpath) carries two
+    # worker-side fixes to them over PYTHONPATH: the vendored protobuf
+    # alias transformWithState needs (a no-op with a real install), and
+    # lazy zip-cache invalidation, which saves each Python task
+    # 0.2-0.3 s (4-core host) of re-reading pyspark.zip and the
+    # spark-core jar. It also
+    # puts this checkout on the workers' sys.path. Must happen before
+    # the JVM starts: local-mode workers inherit its environment.
     from batchprocessingetl_spark import compat
 
-    if compat.ensure_protobuf() and compat.protobuf_is_shimmed():
-        shim = compat.worker_pythonpath()
-        current = os.environ.get("PYTHONPATH", "")
-        if shim not in current.split(os.pathsep):
-            os.environ["PYTHONPATH"] = (
-                shim + (os.pathsep + current if current else "")
-            )
+    compat.ensure_protobuf()
+    shim = compat.worker_pythonpath()
+    current = os.environ.get("PYTHONPATH", "")
+    if shim not in current.split(os.pathsep):
+        os.environ["PYTHONPATH"] = shim + (os.pathsep + current if current else "")
     builder = (
         SparkSession.builder.master(f"local[{n}]")
         .appName(app_name)
